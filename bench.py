@@ -75,27 +75,9 @@ def scaling_efficiency(pairs: list, quiet_tol: float = 1.25) -> tuple:
 
 
 def _flagship_plan():
-    from fruits_spark.plan import ISSSpec, Prep, Sieve, Slice, FruitPlan
-    from fruits_spark.words import W, of_weight
+    from jobs.rollup_job import flagship_plan
 
-    return FruitPlan(
-        (
-            Slice(
-                preps=(Prep("std"),),
-                iss=ISSSpec(tuple(of_weight(4, 1)), mode="extended"),
-                sieves=(
-                    Sieve("end"),
-                    Sieve("ppv", {"quantiles": [0.0], "constant": [True]}),
-                    Sieve("max"),
-                ),
-            ),
-            Slice(
-                preps=(Prep("std"),),
-                iss=ISSSpec((W("[1][1]"), W("[11][1]")), semiring="arctic"),
-                sieves=(Sieve("end"), Sieve("max")),
-            ),
-        )
-    )
+    return flagship_plan()
 
 
 def _n_streams(fplan) -> int:

@@ -1,11 +1,17 @@
 """Compile a :class:`~fruits_spark.plan.FruitPlan` into a Spark job.
 
 Hot path = ONE ``mapInPandas`` over the token table: each Arrow batch is
-flattened to ``(values, offsets)``, length-bucketed, and every slice's
-prep -> ISS -> sieve chain runs as vectorized NumPy on 3-D blocks
-(:mod:`fruits_spark.kernels`).  No per-row Python, no shuffle — feature
-extraction is embarrassingly parallel across partitions; the only
-shuffles in an end-to-end job are the rollup ``groupBy`` afterwards.
+flattened to per-dimension columns sharing one ``offsets`` array
+(univariate = one column), sub-batched by points, and every slice's
+prep -> ISS -> sieve chain runs as segmented NumPy ops on the flat
+layout (:mod:`fruits_spark.kernels.flat`).  Preps without a flat kernel
+run the bucketed kernel per length group inside the same body.  No
+per-row Python, no shuffle — feature extraction is embarrassingly
+parallel across partitions; the only shuffles in an end-to-end job are
+the rollup ``groupBy`` afterwards.
+
+:func:`compute_features_block` is the bucketed 3-D reference (the test
+oracle and the fitting path), not a production route.
 
 Feature columns come out *wide* (one DoubleType column per feature,
 sanitized names + a label map) so the downstream tier rollup is plain
@@ -27,7 +33,7 @@ from .. import plan as Pl
 from ..kernels import iss as KI
 from ..kernels import prep as KP
 from ..kernels import sieve as KS
-from ..kernels.segments import flatten_lists
+from ..kernels.segments import flatten_lists, flatten_lists_mv
 
 
 def _apply_prep(Z: np.ndarray, p: Pl.Prep) -> np.ndarray:
@@ -163,12 +169,8 @@ def _emit_streams_block(Zp: np.ndarray, specs: tuple, Z_orig=None):
         # cross-word CSE per frequency (coswiss_multi: words sharing a
         # letter prefix share the scan chain, bit-identical results);
         # emission stays word-major, which forces buffering ALL
-        # n_words * n_freqs streams of this spec; callers bound the
-        # block to ~SPARK_GRAFT_TOKEN_BUDGET tokens (extract_features
-        # sub-batches both the flat and multivariate paths), so each
-        # stream is ~1.6 MB at the default budget regardless of the
-        # session's Arrow batch config; each slot is released as soon
-        # as it is consumed so peak decays over the emission
+        # n_words * n_freqs streams of this spec; each slot is released
+        # as soon as it is consumed so peak decays over the emission
         per_freq = {
             f: KI.coswiss_multi(
                 Zp, [w.matrix for w in spec.words], f,
@@ -254,92 +256,45 @@ def compute_features_block(Z: np.ndarray, fplan: Pl.FruitPlan) -> np.ndarray:
     return np.nan_to_num(out, nan=0.0, posinf=0.0, neginf=0.0)
 
 
-_FLAT_PREPS = {"inc", "std", "nrm"}
-_FLAT_SIEVES = {
-    "max", "min", "end", "cur", "npi", "mpi", "xpi", "lpi", "ppv", "cpv",
-    "avg", "std",
-}
-_FLAT_WEIGHTINGS = (None, "indices", "l1", "l2", "plateaus", "custom")
-
-
-def _prep_flat_ok(p: Pl.Prep) -> bool:
-    if p.kind in ("new", "dim"):
-        inner = p.params.get("prep")
-        return inner is None or _prep_flat_ok(inner)
-    return p.kind in _FLAT_PREPS
-
-
-def plan_is_flat(fplan: Pl.FruitPlan, n_dims: int = 1) -> bool:
-    """True if every op has a flat segmented implementation for an
-    ``n_dims``-dimensional input.  Round 5: multivariate words, NEW/DIM
-    prep wrappers, Custom weightings, and mv arctic-argmax all run flat
-    — the bucketed layout remains only as the parity oracle."""
-    del n_dims  # every op is now dim-agnostic; kept for call stability
-    for sl in fplan.slices:
-        if any(not _prep_flat_ok(p) for p in sl.preps):
-            return False
-        if any(sv.kind not in _FLAT_SIEVES for sv in sl.sieves):
-            return False
-        for spec in sl.iss_chain():
-            if isinstance(spec, Pl.CosWISSSpec):
-                continue
-            if spec.semiring not in ("reals", "arctic", "bayesian"):
-                return False
-            if spec.weighting not in _FLAT_WEIGHTINGS:
-                return False
-    return True
-
-
-def plan_has_pre(fplan: Pl.FruitPlan) -> bool:
-    return any(
-        sv.params.get("pre") for sl in fplan.slices for sv in sl.sieves
-    )
-
-
-def plan_is_padded_ok(fplan: Pl.FruitPlan) -> bool:
-    """Ops the band-padded ALTERNATIVE layout implements — a strict
-    subset of the flat set (avg/std sieves and plateaus weighting are
-    flat+bucketed only); plans outside it run the flat path even under
-    SPARK_GRAFT_EXEC=padded."""
-    for sl in fplan.slices:
-        if any(sv.kind in ("avg", "std") for sv in sl.sieves):
-            return False
-        if any(p.kind not in _FLAT_PREPS for p in sl.preps):
-            return False  # NEW/DIM (multivariate stages) are flat-only
-        for spec in sl.iss_chain():
-            if isinstance(spec, Pl.CosWISSSpec):
-                if any(w.matrix.shape[1] > 1 for w in spec.words):
-                    return False
-                continue
-            if spec.weighting in ("plateaus", "custom") or spec.argmax:
-                return False
-            if any(w.matrix.shape[1] > 1 for w in spec.words):
-                return False
-    return True
-
-
-def _apply_prep_flat(seg, cols: list, p: Pl.Prep) -> list:
-    """Flat prep on a per-dimension column list -> new column list.
-    Per-dim ops map column-wise (identical calls to the univariate flat
-    path); NEW/DIM wrappers manipulate the list like the bucketed
-    ``new_wrap``/``dim_wrap`` manipulate axis 1."""
+def _apply_prep_flat(seg, cols: list, p: Pl.Prep):
+    """Flat prep on a per-dimension column list -> (geometry, columns).
+    INC/STD/NRM have flat kernels; NEW/DIM wrappers manipulate the list
+    like the bucketed ``new_wrap``/``dim_wrap`` manipulate axis 1; every
+    other prep runs the bucketed kernel per length group through
+    :func:`~fruits_spark.kernels.flat.bucketed_rows_map` (which may
+    change lengths, e.g. LAG)."""
     from ..kernels import flat as KF
 
-    if p.kind == "new":
+    if p.kind in ("new", "dim"):
         inner = p.params.get("prep")
-        extra = cols if inner is None else _apply_prep_flat(seg, cols, inner)
-        return list(cols) + list(extra)
-    if p.kind == "dim":
-        dims = np.atleast_1d(np.asarray(p.params["dims"], dtype=np.int64))
-        transformed = _apply_prep_flat(
-            seg, [cols[i] for i in dims], p.params["prep"]
+        if p.kind == "new":
+            picked, rest = cols, list(cols)
+        else:
+            # np.delete / fancy-index semantics, negative dims included
+            idx = np.arange(len(cols))[
+                np.atleast_1d(np.asarray(p.params["dims"], dtype=np.int64))
+            ]
+            picked = [cols[i] for i in idx]
+            dropped = set(idx.tolist())
+            rest = [c for i, c in enumerate(cols) if i not in dropped]
+        out_seg, extra = (
+            (seg, picked) if inner is None
+            else _apply_prep_flat(seg, picked, inner)
         )
-        rest = [c for i, c in enumerate(cols) if i not in set(dims.tolist())]
-        return rest + list(transformed)
+        if out_seg is not seg:
+            raise ValueError(
+                f"{p.kind.upper()} cannot wrap {inner.kind!r}: it changes "
+                "the series length"
+            )
+        return seg, rest + list(extra)
+    params = dict(p.params)
+    if p.kind == "inc":
+        return seg, [KF.inc_flat(seg, c, **params) for c in cols]
+    if p.kind == "std" and params.pop("separately", True):
+        return seg, [KF.std_flat(seg, c, **params) for c in cols]
     if p.kind == "nrm":
-        return KF.nrm_flat_mv(seg, cols, **p.params)
-    fn = {"inc": KF.inc_flat, "std": KF.std_flat}[p.kind]
-    return [fn(seg, c, **p.params) for c in cols]
+        return seg, KF.nrm_flat_mv(seg, cols, **params)
+    return KF.bucketed_rows_map(seg, cols, lambda Z: _apply_prep(Z, p))
 
 
 def compute_features_flat(
@@ -347,30 +302,32 @@ def compute_features_flat(
 ) -> np.ndarray:
     """Whole-batch feature computation on the flat layout: one set of
     segmented array ops per operator, independent of length diversity
-    (the 100 TB hot path).  ``values`` is one flat float64 array
-    (univariate) or a list of per-dimension flat arrays sharing
-    ``offsets`` (multivariate)."""
+    (the 100 TB hot path).  ``values`` is a list of per-dimension flat
+    float64 arrays sharing ``offsets`` (a bare array = one dimension)."""
     from ..kernels import flat as KF
 
-    seg = KF.Seg(offsets)
+    seg0 = KF.Seg(offsets)
     in_cols = values if isinstance(values, list) else [values]
-    src0 = in_cols[0]  # coquantile cuts / L-mass use dim 0 (cache.py:25-40)
-    out = np.empty((seg.n, fplan.n_features()), dtype=np.float64)
+    if seg0.total == 0:
+        # no points at all (empty docs, or 0-dim rows): the bucketed
+        # oracle never runs a kernel for empty rows either
+        return np.zeros((seg0.n, fplan.n_features()), dtype=np.float64)
+    out = np.empty((seg0.n, fplan.n_features()), dtype=np.float64)
+    src = _Source(seg0, in_cols)
     col = 0
     for sl in fplan.slices:
-        cols = in_cols
+        seg, cols = seg0, in_cols
         for p in sl.preps:
-            cols = _apply_prep_flat(seg, cols, p)
-        xp = cols if len(cols) > 1 else cols[0]
+            seg, cols = _apply_prep_flat(seg, cols, p)
         # streams may arrive in trie order; widths are fixed per stream,
         # so each one writes at its plan-order column offset
         sieve_widths = [sv.n_features() for sv in sl.sieves]
         per_stream = sum(sieve_widths)
         seen = 0
-        for si, stream in _emit_streams_flat(seg, xp, sl.iss_chain(), in_cols):
+        for si, stream in _emit_streams_flat(seg, cols, sl.iss_chain(), src):
             c = col + si * per_stream
             for sv, w_ in zip(sl.sieves, sieve_widths):
-                feats = _apply_sieve_flat(seg, stream, sv, src0, si)
+                feats = _apply_sieve_flat(seg, stream, sv, src, si)
                 out[:, c:c + w_] = feats
                 c += w_
             seen += 1
@@ -384,82 +341,98 @@ def compute_features_flat(
     return np.nan_to_num(out, nan=0.0, posinf=0.0, neginf=0.0)
 
 
-def _lookup_flat(spec: Pl.ISSSpec, seg, xp, orig_cols):
-    """Weighting lookup on the flat layout.  ``xp`` is the ISS input
-    (flat array or column list), ``orig_cols`` the slice's original
-    input columns; L1/L2 read dim 0 of the base like the bucketed
-    ``l1_lookup`` (iss.py: ``X[:, 0:1, :]``), Custom callables get the
-    full base re-bucketed into the (n, d, l) blocks they expect."""
+class _Source:
+    """A slice's ORIGINAL input (geometry + columns): coquantile cuts and
+    L1/L2/Custom weightings read it, not the prepared/chained stream
+    (reference: FruitSlice uses the fruit's SharedSeedCache(X)); dim 0
+    carries the mass (cache.py:25-40)."""
+
+    def __init__(self, seg, cols) -> None:
+        self.seg, self.cols = seg, cols
+
+    def cols_on(self, seg) -> list:
+        if not np.array_equal(self.seg.lengths, seg.lengths):
+            raise ValueError(
+                "a weighting on the original input needs the prepared "
+                "series to keep its length"
+            )
+        return self.cols
+
+
+def _lookup_flat(spec: Pl.ISSSpec, seg, cols: list, src: _Source):
+    """Weighting lookup on the flat layout.  ``cols`` is the ISS input;
+    L1/L2 read dim 0 of the base like the bucketed ``l1_lookup``
+    (iss.py: ``X[:, 0:1, :]``), Custom callables get the full base
+    re-bucketed into the (n, d, l) blocks they expect."""
     from ..kernels import flat as KF
 
     if spec.weighting is None:
         return None
     wp = dict(spec.weighting_params)
     on_prepared = wp.pop("on_prepared", False)
-    base_cols = (
-        (xp if isinstance(xp, list) else [xp]) if on_prepared else orig_cols
-    )
     if spec.weighting == "indices":
         return KF.indices_lookup_flat(seg, **wp)
+    if spec.weighting == "plateaus":
+        return KF.plateaus_lookup_flat(seg, **wp)
+    base_cols = cols if on_prepared else src.cols_on(seg)
     if spec.weighting == "l1":
         return KF.l1_lookup_flat(seg, base_cols[0], **wp)
     if spec.weighting == "l2":
         return KF.l2_lookup_flat(seg, base_cols[0], **wp)
-    if spec.weighting == "plateaus":
-        return KF.plateaus_lookup_flat(seg, **wp)
     if spec.weighting == "custom":
         # reference Custom weighting (weighting.py:41-66): arbitrary
-        # g(X) on 3-D blocks — re-bucket by length (same grouping as
-        # the bucketed executor, so values match it exactly)
-        return KF.bucketed_rows_map(seg, base_cols, wp["fn"])
+        # g(X) (n, d, l) -> (n, l), run on the bucketed grouping
+        fn = wp["fn"]
+        return KF.bucketed_rows_map(
+            seg, base_cols, lambda Z: fn(Z)[:, np.newaxis, :]
+        )[1][0]
     raise ValueError(spec.weighting)
 
 
-def _emit_streams_flat(seg, xp: np.ndarray, specs: tuple, x_orig: np.ndarray):
-    """Yield (plan_stream_index, stream) pairs for a chain of specs.
+def _emit_streams_flat(seg, cols: list, specs: tuple, src: _Source):
+    """Yield (plan_stream_index, stream) pairs for a chain of specs; each
+    stream feeds the next spec as a one-column input.
 
     Indices follow plan label order even though computation may run in
     trie order (scan-level CSE below)."""
     n_rest = 1
     for s in specs[1:]:
         n_rest *= s.n_streams()
-    for idx, stream in _emit_level_flat(seg, xp, specs[0], x_orig):
+    for idx, stream in _emit_level_flat(seg, cols, specs[0], src):
         if len(specs) == 1:
             yield idx, stream
         else:
             for sub_idx, sub in _emit_streams_flat(
-                seg, stream, specs[1:], x_orig
+                seg, [stream], specs[1:], src
             ):
                 yield idx * n_rest + sub_idx, sub
 
 
-def _emit_level_flat(seg, xp, spec, x_orig):
+def _emit_level_flat(seg, cols: list, spec, src: _Source):
     from ..kernels import flat as KF
 
-    if isinstance(xp, list) and len(xp) == 1:
-        xp = xp[0]
-    mv = isinstance(xp, list)
+    for w in spec.words:
+        # the oracle's iss() check, enforced for every spec kind (the
+        # bucketed CosWISS/argmax kernels would raise a bare IndexError)
+        if w.matrix.shape[1] > len(cols):
+            raise ValueError(
+                f"word uses dim {w.matrix.shape[1]} but input has {len(cols)}"
+            )
     if isinstance(spec, Pl.CosWISSSpec):
         # cross-word CSE per frequency (bit-identical; see
-        # KF.coswiss_flat_multi); the flat emitter yields explicit
+        # KF.coswiss_flat_multi_mv); the flat emitter yields explicit
         # stream indices, so per-freq batches emit directly
         n_freqs = len(spec.freqs)
         for fi, f in enumerate(spec.freqs):
-            if mv:
-                streams = KF.coswiss_flat_multi_mv(
-                    seg, xp, [w.matrix for w in spec.words], f,
-                    exponent=spec.exponent, total=spec.total,
-                )
-            else:
-                streams = KF.coswiss_flat_multi(
-                    seg, xp, [w.matrix for w in spec.words], f,
-                    exponent=spec.exponent, total=spec.total,
-                )
+            streams = KF.coswiss_flat_multi_mv(
+                seg, cols, [w.matrix for w in spec.words], f,
+                exponent=spec.exponent, total=spec.total,
+            )
             for wi, stream in enumerate(streams):
                 yield wi * n_freqs + fi, stream
         return
-    if getattr(spec, "argmax", False):
-        lookup = _lookup_flat(spec, seg, xp, x_orig)
+    lookup = _lookup_flat(spec, seg, cols, src)
+    if spec.argmax:
         i = 0
         for w in spec.words:
             alpha = (
@@ -467,22 +440,23 @@ def _emit_level_flat(seg, xp, spec, x_orig):
                 if spec.weighting is not None else None
             )
             for stream in KF.iss_arctic_argmax_flat(
-                seg, xp, w.matrix, alpha, lookup
+                seg, cols, w.matrix, alpha, lookup
             ):
                 yield i, stream
                 i += 1
         return
-    if spec.weighting is None:
-        yield from _emit_level_flat_cse(seg, xp, spec)
+    if spec.semiring not in ("reals", "arctic", "bayesian"):
+        raise ValueError(f"unknown semiring {spec.semiring!r}")
+    if lookup is None:
+        yield from _emit_level_flat_cse(seg, cols, spec)
         return
-    lookup = _lookup_flat(spec, seg, xp, x_orig)
     # weighted (total or not): prefix CSE, bit-identical to the
     # per-word kernels (iss_flat / iss_flat_mv stay as the oracle the
     # CSE is pinned against — see test_round5)
-    yield from _emit_level_flat_cse_weighted(seg, xp, spec, lookup)
+    yield from _emit_level_flat_cse_weighted(seg, cols, spec, lookup)
 
 
-def _emit_level_flat_cse(seg, xp, spec):
+def _emit_level_flat_cse(seg, cols: list, spec):
     """Unweighted ISS with scan-level prefix CSE: the word list is a
     trie; every distinct prefix's scan state is computed ONCE via DFS
     (bit-identical ops to the per-word path).  This goes beyond the
@@ -516,43 +490,27 @@ def _emit_level_flat_cse(seg, xp, spec):
             children.setdefault(nxt, [])
 
     semiring = spec.semiring
-    cols = xp if isinstance(xp, list) else None
 
     def advance(state, letter):
-        if cols is not None:
-            # multivariate letter: monomial over the column list in
-            # bucketed _pow_product / _linear_combo op order
-            if semiring == "reals":
-                if state is None:
-                    tmp = KF._mul_letter_nd(None, cols, letter)
-                else:
-                    tmp = KF._mul_letter_nd_owned(
-                        seg.shift1(state), cols, letter
-                    )
-                return seg.cumsum(tmp)
-            if semiring == "arctic":
-                tmp = (
-                    state if state is not None else 0.0
-                ) + KF._lin_combo_nd(cols, letter)
-                return seg.runmax(tmp)
-            return seg.runmax(KF._mul_letter_nd(state, cols, letter))
-        e = letter[0] if letter else 0
+        # letter monomial over the column list in bucketed
+        # _pow_product / _linear_combo op order
         if semiring == "reals":
             if state is None:
-                tmp = KF._mul_letter(None, xp, e)
+                tmp = KF._mul_letter_nd(None, cols, letter)
             else:
                 # shift1 allocated tmp fresh -> in-place multiply is safe
                 # (cached trie states are never mutated); NOTE: fusing
                 # shift into the first multiply via offset views was
                 # measured ~1% SLOWER (unaligned SIMD) — keep unfused
-                tmp = KF._mul_letter_owned(seg.shift1(state), xp, e)
+                tmp = KF._mul_letter_nd_owned(seg.shift1(state), cols, letter)
             return seg.cumsum(tmp)
         if semiring == "arctic":
-            tmp = (state if state is not None else 0.0) + float(e) * xp
+            tmp = (
+                state if state is not None else 0.0
+            ) + KF._lin_combo_nd(cols, letter)
             return seg.runmax(tmp)
         # bayesian
-        tmp = KF._mul_letter(state, xp, e)
-        return seg.runmax(tmp)
+        return seg.runmax(KF._mul_letter_nd(state, cols, letter))
 
     def dfs(node, state):
         for child in children[node]:
@@ -564,7 +522,7 @@ def _emit_level_flat_cse(seg, xp, spec):
     yield from dfs((), None)
 
 
-def _emit_level_flat_cse_weighted(seg, xp, spec, lookup):
+def _emit_level_flat_cse_weighted(seg, cols: list, spec, lookup):
     """Weighted ISS (total or not) with scan-level prefix CSE — the
     weighted twin of :func:`_emit_level_flat_cse`.  Trie nodes key on
     (letter, alpha) PAIRS: two words share a prefix scan only when
@@ -607,7 +565,6 @@ def _emit_level_flat_cse_weighted(seg, xp, spec, lookup):
             children.setdefault(nxt, [])
 
     semiring = spec.semiring
-    cols = xp if isinstance(xp, list) else None
     # per-alpha factor caches: the per-word path recomputes
     # exp(±lookup*a) / lookup*a at every level; alphas repeat (usually
     # all 1.0), so each distinct value is computed once per batch
@@ -628,35 +585,21 @@ def _emit_level_flat_cse_weighted(seg, xp, spec, lookup):
     def raw_of(state, letter, a_prev):
         # state None <=> root (first letter of the word)
         if semiring == "reals":
-            if cols is not None:
-                if state is None:
-                    return KF._mul_letter_nd(None, cols, letter)
-                r = KF._mul_letter_nd_owned(seg.shift1(state), cols, letter)
-            else:
-                e = letter[0] if letter else 0
-                if state is None:
-                    return KF._mul_letter(None, xp, e)
-                r = KF._mul_letter_owned(seg.shift1(state), xp, e)
+            if state is None:
+                return KF._mul_letter_nd(None, cols, letter)
+            r = KF._mul_letter_nd_owned(seg.shift1(state), cols, letter)
             np.multiply(r, _fac("n", a_prev), out=r)
             return r
         if semiring == "arctic":
-            combo = (
-                KF._lin_combo_nd(cols, letter) if cols is not None
-                else float(letter[0] if letter else 0) * xp
-            )
+            combo = KF._lin_combo_nd(cols, letter)
             if state is None:
                 return combo
             r = state + combo
             np.subtract(r, _fac("l", a_prev), out=r)
             return r
         # bayesian (per-word seeds from exact ones; 1.0*x is bit-neutral)
-        if cols is not None:
-            base = np.ones_like(cols[0]) if state is None else state
-            r = KF._mul_letter_nd(base, cols, letter)
-        else:
-            e = letter[0] if letter else 0
-            base = np.ones_like(xp) if state is None else state
-            r = base * KF._pow1(xp, e)
+        base = np.ones_like(cols[0]) if state is None else state
+        r = KF._mul_letter_nd(base, cols, letter)
         if state is not None:
             r = r * _fac("n", a_prev)
         return r
@@ -677,22 +620,12 @@ def _emit_level_flat_cse_weighted(seg, xp, spec, lookup):
         # Recurrences mirror the per-word kernels' *_total branches.
         def letter_op(D, letter):
             if semiring == "reals":
-                if cols is not None:
-                    return KF._mul_letter_nd(D, cols, letter)
-                e = letter[0] if letter else 0
-                return KF._mul_letter(D, xp, e)
+                return KF._mul_letter_nd(D, cols, letter)
             if semiring == "arctic":
-                combo = (
-                    KF._lin_combo_nd(cols, letter) if cols is not None
-                    else float(letter[0] if letter else 0) * xp
-                )
+                combo = KF._lin_combo_nd(cols, letter)
                 return combo if D is None else D + combo
-            if cols is not None:
-                base = np.ones_like(cols[0]) if D is None else D
-                return KF._mul_letter_nd(base, cols, letter)
-            e = letter[0] if letter else 0
-            base = np.ones_like(xp) if D is None else D
-            return base * KF._pow1(xp, e)
+            base = np.ones_like(cols[0]) if D is None else D
+            return KF._mul_letter_nd(base, cols, letter)
 
         def derive(C, a_prev):
             if semiring == "reals":
@@ -742,7 +675,7 @@ def _emit_level_flat_cse_weighted(seg, xp, spec, lookup):
     yield from dfs((), None)
 
 
-def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: np.ndarray,
+def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: _Source,
                       stream_idx: int = 0) -> np.ndarray:
     from ..kernels import flat as KF
 
@@ -757,14 +690,13 @@ def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: np.ndarray,
     cuts_spec = list(p.get("cuts", [-1]))
     norm = p.get("norm", "L2")
     q = _sieve_quantiles(sv, stream_idx)
+    cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src.cols[0], src.seg)
     if sv.kind in ("npi", "mpi", "xpi", "lpi"):
-        cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src)
         fn = {
             "npi": KF.sieve_npi_flat, "mpi": KF.sieve_mpi_flat,
             "xpi": KF.sieve_xpi_flat, "lpi": KF.sieve_lpi_flat,
         }[sv.kind]
         return fn(seg, stream, cuts, q, inc=p.get("inc", 1))
-    cuts = KF.resolve_cuts_flat(seg, cuts_spec, norm, src)
     if sv.kind == "end":
         return KF.sieve_end_flat(seg, stream, cuts)
     if sv.kind == "max":
@@ -779,165 +711,6 @@ def _apply_sieve_flat(seg, stream, sv: Pl.Sieve, src: np.ndarray,
             return KF.sieve_cur_flat(seg, stream, cuts, q)
         fn = KF.sieve_avg_flat if sv.kind == "avg" else KF.sieve_std_flat
         return fn(seg, stream, cuts, q)
-    raise ValueError(sv.kind)
-
-
-def compute_features_padded(
-    values: np.ndarray, offsets: np.ndarray, fplan: Pl.FruitPlan
-) -> np.ndarray:
-    """Band-padded execution (see kernels/padded.py): rows are grouped
-    into power-of-two length bands, each processed as one regular 2-D
-    block — contiguous axis scans, >=50% fill, O(bands) NumPy dispatches.
-    This is the default hot path; results match the flat/bucketed paths
-    (exact on integer domains)."""
-    from ..kernels import padded as KP2
-
-    lengths = np.diff(offsets)
-    n = len(lengths)
-    out = np.zeros((n, fplan.n_features()), dtype=np.float64)
-    bands = KP2.band_of(lengths)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for width in np.unique(bands):
-            rows = np.nonzero(bands == width)[0]
-            X, lens = KP2.pad_rows(values, offsets, rows, int(width))
-            ctx = KP2.PadCtx(X, lens)
-            out[rows] = _features_padded_ctx(ctx, fplan)
-    return np.nan_to_num(out, nan=0.0, posinf=0.0, neginf=0.0)
-
-
-def _features_padded_ctx(ctx, fplan: Pl.FruitPlan) -> np.ndarray:
-    from ..kernels import padded as KP2
-
-    out = np.empty((ctx.n, fplan.n_features()), dtype=np.float64)
-    col = 0
-    for sl in fplan.slices:
-        Xp = ctx.X
-        for p in sl.preps:
-            fn = {"inc": KP2.inc_p, "std": KP2.std_p, "nrm": KP2.nrm_p}[p.kind]
-            Xp = fn(ctx, Xp, **p.params)
-            # keep pads at zero so downstream tail assumptions hold
-            Xp = np.where(ctx.valid, Xp, 0.0)
-        for si, (stream, tail_const) in enumerate(_emit_streams_padded(
-            ctx, Xp, sl.iss_chain(), ctx.X
-        )):
-            for sv in sl.sieves:
-                feats = _apply_sieve_padded(
-                    ctx, stream, sv, ctx.X, tail_const, si
-                )
-                out[:, col:col + feats.shape[1]] = feats
-                col += feats.shape[1]
-    if col != fplan.n_features():
-        raise AssertionError(f"feature accounting: {col} != {fplan.n_features()}")
-    return out
-
-
-def _emit_streams_padded(ctx, Xp: np.ndarray, specs: tuple, X_orig: np.ndarray):
-    """Yield (final stream (n, L), tail_const) for a padded-band chain.
-    Intermediate streams are re-zeroed at pads between levels so the
-    next level's zero-pad invariants hold."""
-    from ..kernels import padded as KP2
-
-    spec = specs[0]
-    if isinstance(spec, Pl.CosWISSSpec):
-        # per-word x per-freq emission (no cross-word CSE in the
-        # alternative layout); the angle grids depend only on freq, so
-        # they are computed once per freq and shared across words.
-        # Tail constancy needs BOTH: non-total (no trailing position
-        # weights) AND non-negative exponents — a negative exponent
-        # turns the zero pads into inf (0**-1), which poisons the tail
-        # (true positions stay correct: pads sit after them in the
-        # row), so such streams take the masked sieve path
-        grids = {f: KP2.coswiss_grids_p(ctx, f) for f in spec.freqs}
-        for w in spec.words:
-            w_tail_ok = not spec.total and bool(np.all(w.matrix >= 0))
-            for f in spec.freqs:
-                stream = KP2.coswiss_p(
-                    ctx, Xp, w.matrix, f,
-                    exponent=spec.exponent, total=spec.total,
-                    grids=grids[f],
-                )
-                if len(specs) == 1:
-                    yield stream, w_tail_ok
-                else:
-                    yield from _emit_streams_padded(
-                        ctx, np.where(ctx.valid, stream, 0.0),
-                        specs[1:], X_orig,
-                    )
-        return
-    lookup = None
-    wp = dict(spec.weighting_params)
-    on_prepared = wp.pop("on_prepared", False)
-    base = Xp if on_prepared else X_orig
-    if spec.weighting == "indices":
-        lookup = KP2.indices_lookup_p(ctx, **wp)
-    elif spec.weighting == "l1":
-        lookup = KP2.l1_lookup_p(ctx, base, **wp)
-    elif spec.weighting == "l2":
-        lookup = KP2.l2_lookup_p(ctx, base, **wp)
-    elif spec.weighting is not None:
-        raise ValueError(spec.weighting)
-    pplan = spec.plan()
-    for wi, w in enumerate(spec.words):
-        depth = pplan.depth(wi) if pplan is not None else 1
-        if depth == 0:
-            continue
-        alpha = (
-            np.array(w.alpha, dtype=np.float32)
-            if spec.weighting is not None else None
-        )
-        streams = KP2.iss_p(
-            ctx, Xp, w.matrix, extended=depth, semiring=spec.semiring,
-            alpha=alpha, lookup=lookup, total=spec.total,
-        )
-        # reals streams over zero pads have constant tails, enabling
-        # mask-free sieves; arctic/bayesian/negative-exponent tails are
-        # not constant -> masked sieve paths
-        tail_const = (
-            spec.semiring == "reals" and bool(np.all(w.matrix >= 0))
-        )
-        for s in range(depth):
-            stream = streams[:, s, :]
-            if len(specs) == 1:
-                yield stream, tail_const
-            else:
-                yield from _emit_streams_padded(
-                    ctx, np.where(ctx.valid, stream, 0.0), specs[1:], X_orig
-                )
-
-
-def _apply_sieve_padded(ctx, stream, sv: Pl.Sieve, src, tail_const: bool,
-                        stream_idx: int = 0):
-    from ..kernels import padded as KP2
-
-    p = sv.params
-    if p.get("pre"):
-        # plans with sieve wrappers are routed to the flat/bucketed
-        # paths by extract_features (plan_has_pre)
-        raise ValueError("pre (INC/INT wrapper) unsupported in padded path")
-    if sv.kind in ("ppv", "cpv"):
-        qs = _ppv_quantiles(sv, stream_idx)
-        if sv.kind == "ppv":
-            return KP2.sieve_ppv_p(
-                ctx, stream, qs, segments=p.get("segments", False),
-                tail_const=tail_const,
-            )
-        return KP2.sieve_cpv_p(ctx, stream, qs, segments=p.get("segments", False))
-    cuts_spec = list(p.get("cuts", [-1]))
-    norm = p.get("norm", "L2")
-    q = _sieve_quantiles(sv, stream_idx)
-    cuts = KP2.resolve_cuts_p(ctx, cuts_spec, norm, src)
-    if sv.kind in ("npi", "mpi", "xpi", "lpi"):
-        return KP2._inc_family_p(ctx, stream, cuts, q, p.get("inc", 1), sv.kind)
-    if sv.kind == "end":
-        return KP2.sieve_end_p(ctx, stream, cuts)
-    if sv.kind == "max":
-        return KP2.sieve_max_p(ctx, stream, cuts, q, tail_const=tail_const)
-    if sv.kind == "min":
-        return KP2.sieve_max_p(
-            ctx, stream, cuts, q, minimum=True, tail_const=tail_const
-        )
-    if sv.kind == "cur":
-        return KP2.sieve_cur_p(ctx, stream, cuts, q)
     raise ValueError(sv.kind)
 
 
@@ -1003,212 +776,83 @@ def extract_features(
     preparateur).
 
     ``multivariate``: ``tokens_col`` holds array<array<double>> (dims x
-    steps) — routed through the length-bucketed 3-D kernels.
+    steps); rows are grouped by dim count, each group runs as its own
+    column list.  Univariate input is the one-column case.
     """
+    import os
+    import time
+
     fcols = feature_columns(fplan)
     keep_fields = [df.schema[k] for k in keep]
     out_schema = StructType(
         list(keep_fields) + [StructField(c, DoubleType(), False) for c in fcols]
     )
+    # Sub-batch by POINTS (tokens x dims), not rows: Arrow batches are
+    # sized in rows (512, or Spark's default 10k in a foreign session),
+    # so with long sequences one batch would blow the per-core cache
+    # working set (measured: 4096-token docs ran 2.3x slower than
+    # 256-token docs at the same tokens/s budget), and CosWISS buffers
+    # n_words * n_freqs streams of the block during word-major emission
+    # (ADVICE r2).  The budget keeps both constant whatever the session.
+    budget = int(os.environ.get("SPARK_GRAFT_TOKEN_BUDGET", "200000"))
 
-    import os
+    def spans(offsets: np.ndarray, n_dims: int):
+        n = len(offsets) - 1
+        if offsets[-1] * n_dims <= budget:
+            yield 0, n
+            return
+        pts = offsets[1:] * n_dims
+        start = base = 0
+        for i in range(n):
+            if pts[i] - base > budget and i > start:
+                yield start, i
+                start, base = i, pts[i - 1]
+        yield start, n
 
-    flat = plan_is_flat(fplan)
-    # flat segmented is the default hot path (measured ~1.3x faster than
-    # band-padded: padding costs ~1.33x volume + per-band dispatch);
-    # SPARK_GRAFT_EXEC=padded selects the band-padded alternative
-    use_padded = (
-        os.environ.get("SPARK_GRAFT_EXEC", "flat") == "padded"
-        and not plan_has_pre(fplan)
-        and plan_is_padded_ok(fplan)
-    )
+    def clock(timer: str, t0: float) -> float:
+        """Charge the time since ``t0`` to an ExtractStats timer."""
+        t1 = time.perf_counter()
+        if stats is not None:
+            getattr(stats, timer).add(int((t1 - t0) * 1e6))
+        return t1
 
-    # Bound the per-call block size by token volume, not rows: a foreign
-    # SparkSession (no build_session arrow_batch=512) hands us Spark's
-    # default 10k-row Arrow batches, and CosWISS buffers
-    # n_words * n_freqs streams of (block_rows, l) during word-major
-    # emission — chunking here keeps that peak at the documented
-    # ~token_budget scale regardless of session config (ADVICE r2).
-    mv_token_budget = int(
-        os.environ.get("SPARK_GRAFT_TOKEN_BUDGET", "200000")
-    )
-
-    def _mv_flat_sub_batches(pdf, rows, lengths, n_dims):
-        """Token-budget sub-batching for the mv flat path (budget counts
-        POINTS = tokens * dims so the kernel working set stays constant
-        regardless of dim count)."""
-        pts = lengths * n_dims
-        cum = np.cumsum(pts)
-        start, base = 0, 0
-        for i in range(len(rows)):
-            if cum[i] - base > mv_token_budget and i > start:
-                yield pdf.iloc[start:i], rows[start:i]
-                start, base = i, cum[i - 1]
-        if start < len(rows):
-            yield pdf.iloc[start:], rows[start:]
-
-    def _run_mv_flat(pdf, rows, lengths, n_dims):
-        from ..kernels.segments import flatten_lists_mv
-
-        for sub_pdf, sub_rows in _mv_flat_sub_batches(
-            pdf, rows, lengths, n_dims
-        ):
-            cols, offsets = flatten_lists_mv(sub_rows)
-            if cast_scale is not None:
-                for c in cols:
-                    c *= cast_scale
-            feats = compute_features_flat(cols, offsets, fplan)
-            yield pd.concat(
-                [
-                    sub_pdf[list(keep)].reset_index(drop=True),
-                    pd.DataFrame(feats, columns=fcols, copy=False),
-                ],
-                axis=1,
-            )
-
-    def run_multivariate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            rows = list(pdf[tokens_col])
-            lengths = np.fromiter(
-                (len(r[0]) if len(r) else 0 for r in rows),
-                dtype=np.int64, count=len(rows),
-            )
-            ndims = {len(r) for r in rows if len(r)}
-            if len(ndims) == 1:
-                n_dims = ndims.pop()
-                if plan_is_flat(fplan, n_dims):
+            t0 = time.perf_counter()
+            if multivariate:
+                groups = flatten_lists_mv(pdf[tokens_col])
+            else:
+                values, offsets = flatten_lists(pdf[tokens_col])
+                groups = [(np.arange(len(pdf)), [values], offsets)]
+            t0 = clock("flatten_us", t0)
+            kept = pdf[list(keep)]
+            for rows, cols, offsets in groups:
+                if cast_scale is not None:
+                    for c in cols:
+                        c *= cast_scale
+                for s, e in spans(offsets, len(cols)):
+                    o = offsets[s:e + 1]
+                    sub = [c[o[0]:o[-1]] for c in cols]
+                    feats = compute_features_flat(sub, o - o[0], fplan)
+                    t0 = clock("kernel_us", t0)
+                    # single-block frame (no per-column inserts: pandas
+                    # fragmentation warning + O(cols) block copies on
+                    # wide plans)
+                    out = pd.concat(
+                        [
+                            kept.iloc[rows[s:e]].reset_index(drop=True),
+                            pd.DataFrame(feats, columns=fcols, copy=False),
+                        ],
+                        axis=1,
+                    )
                     if stats is not None:
                         stats.batches.add(1)
-                        stats.rows.add(len(pdf))
-                        stats.tokens.add(int(lengths.sum()))
-                    yield from _run_mv_flat(pdf, rows, lengths, n_dims)
-                    continue
-            if stats is not None:
-                stats.batches.add(1)
-                stats.rows.add(len(pdf))
-                stats.tokens.add(int(lengths.sum()))
-            feats = np.zeros((len(rows), fplan.n_features()), dtype=np.float64)
-            for ln in np.unique(lengths):
-                idxs = np.nonzero(lengths == ln)[0]
-                if ln == 0:
-                    continue
-                n_dims = len(rows[idxs[0]])
-                chunk = max(1, mv_token_budget // max(1, int(ln) * n_dims))
-                for c0 in range(0, len(idxs), chunk):
-                    sub = idxs[c0:c0 + chunk]
-                    Z = np.array(
-                        [
-                            np.stack(
-                                [
-                                    np.asarray(d, dtype=np.float64)
-                                    for d in rows[i]
-                                ]
-                            )
-                            for i in sub
-                        ]
-                    )
-                    if cast_scale is not None:
-                        Z *= cast_scale
-                    feats[sub] = compute_features_block(Z, fplan)
-            # single-block frame (no per-column inserts: pandas
-            # fragmentation warning + O(cols) block copies on wide plans)
-            out = pd.concat(
-                [
-                    pdf[list(keep)].reset_index(drop=True),
-                    pd.DataFrame(feats, columns=fcols, copy=False),
-                ],
-                axis=1,
-            )
-            yield out
-
-    if multivariate:
-        return df.select(*keep, tokens_col).mapInPandas(
-            run_multivariate, out_schema
-        )
-
-    # Arrow batches are sized in ROWS (512); with long sequences one
-    # batch's token volume would blow the per-core cache working set
-    # (measured: 4096-token docs ran 2.3x slower than 256-token docs at
-    # the same tokens/s budget).  Sub-batch by TOKEN budget so the
-    # kernel working set is constant regardless of document length.
-    token_budget = int(os.environ.get("SPARK_GRAFT_TOKEN_BUDGET", "200000"))
-
-    def _sub_batches(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        ntok = pdf[tokens_col].map(len).to_numpy()
-        if ntok.sum() <= token_budget:
-            yield pdf
-            return
-        cum = np.cumsum(ntok)
-        start = 0
-        base = 0
-        for i in range(len(pdf)):
-            if cum[i] - base > token_budget and i > start:
-                yield pdf.iloc[start:i]
-                start = i
-                base = cum[i - 1]
-        if start < len(pdf):
-            yield pdf.iloc[start:]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full_pdf in batches:
-            if len(full_pdf) == 0:
-                continue
-            yield from _run_one(full_pdf)
-
-    def _run_one(full_pdf):
-        import time as _time
-
-        for pdf in _sub_batches(full_pdf):
-            t0 = _time.perf_counter() if stats is not None else 0.0
-            values, offsets = flatten_lists(pdf[tokens_col])
-            if stats is not None:
-                stats.batches.add(1)
-                stats.rows.add(len(pdf))
-                stats.tokens.add(int(offsets[-1]))
-                stats.flatten_us.add(
-                    int((_time.perf_counter() - t0) * 1e6)
-                )
-                t0 = _time.perf_counter()
-            if cast_scale is not None:
-                values *= cast_scale
-            if flat and use_padded:
-                feats = compute_features_padded(values, offsets, fplan)
-            elif flat:
-                feats = compute_features_flat(values, offsets, fplan)
-            else:
-                lengths = np.diff(offsets)
-                feats = np.zeros(
-                    (len(pdf), fplan.n_features()), dtype=np.float64
-                )
-                for ln in np.unique(lengths):
-                    rows = np.nonzero(lengths == ln)[0]
-                    if ln == 0:
-                        continue
-                    gather = (
-                        offsets[rows][:, None] + np.arange(ln)[None, :]
-                    ).ravel()
-                    Z = values[gather].reshape(len(rows), 1, int(ln))
-                    feats[rows] = compute_features_block(Z, fplan)
-            if stats is not None:
-                stats.kernel_us.add(
-                    int((_time.perf_counter() - t0) * 1e6)
-                )
-                t0 = _time.perf_counter()
-            # single-block frame (no per-column inserts: pandas
-            # fragmentation warning + O(cols) block copies on wide plans)
-            out = pd.concat(
-                [
-                    pdf[list(keep)].reset_index(drop=True),
-                    pd.DataFrame(feats, columns=fcols, copy=False),
-                ],
-                axis=1,
-            )
-            if stats is not None:
-                stats.emit_us.add(
-                    int((_time.perf_counter() - t0) * 1e6)
-                )
-            yield out
+                        stats.rows.add(e - s)
+                        stats.tokens.add(int(o[-1] - o[0]))
+                    t0 = clock("emit_us", t0)
+                    yield out
+                    t0 = time.perf_counter()
 
     return df.select(*keep, tokens_col).mapInPandas(run, out_schema)

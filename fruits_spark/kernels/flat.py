@@ -5,10 +5,11 @@ are exact and simple, but a batch with many distinct sequence lengths
 degenerates into hundreds of tiny NumPy calls.  This module computes the
 same quantities directly on Arrow's flattened list layout — ONE set of
 array ops per operator for the whole batch, independent of how lengths
-are distributed.  This is the engine's hot path for univariate token
-sequences (the 100 TB workload); the bucketed kernels remain as the
-reference-parity implementation, the multivariate path, and the oracle
-for this module's tests.
+are distributed.  It is the engine's only production layout: a series is
+a list of per-dimension flat columns sharing one :class:`Seg` geometry
+(univariate = one column).  The bucketed kernels remain the
+reference-parity oracle for this module's tests, and the per-group body
+:func:`bucketed_rows_map` runs for preparateurs that have no flat form.
 
 Primitives:
   * segmented cumsum    — global cumsum minus per-segment carry
@@ -22,18 +23,12 @@ Primitives:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
-#: cumsum carry-subtract strategy: "auto" (mean-length rule, default),
-#: "slice" / "gather" force one variant — an A/B knob for bandwidth
-#: studies on saturated hosts (see Seg.cumsum)
-_CARRY_MODE = os.environ.get("SPARK_GRAFT_CARRY", "auto")
-if _CARRY_MODE not in ("auto", "slice", "gather"):
-    raise ValueError(
-        f"SPARK_GRAFT_CARRY={_CARRY_MODE!r}: must be auto|slice|gather"
-    )
+#: cumsum carry-subtract strategy: "auto" (mean-length rule), or
+#: "slice" / "gather" to force one variant — tests set it to pin both
+#: branches bit-identical (see Seg.cumsum)
+_CARRY_MODE = "auto"
 
 
 class Seg:
@@ -213,7 +208,7 @@ class Seg:
 
 
 # ---------------------------------------------------------------------------
-# preparateurs (univariate)
+# preparateurs with flat kernels (INC/STD/NRM) + the generic adapter
 # ---------------------------------------------------------------------------
 
 def inc_flat(seg: Seg, x: np.ndarray, shift: int = 1, depth: int = 1,
@@ -247,6 +242,8 @@ def std_flat(seg: Seg, x: np.ndarray, var: bool = True,
 
 
 def nrm_flat(seg: Seg, x: np.ndarray) -> np.ndarray:
+    """Per-segment min-max to [0, 1], constant segments -> 0: the NRM
+    prep and the weighting lookups' normalization (iss._nrm01)."""
     lo = seg._reduceat(np.minimum, x, 0.0)
     hi = seg._reduceat(np.maximum, x, 0.0)
     span = hi - lo
@@ -272,20 +269,19 @@ def nrm_flat_mv(seg: Seg, cols, scale_dim: bool = False) -> list:
     return [np.where(zero, 0.0, (c - blo) / bsafe) for c in cols]
 
 
-def bucketed_rows_map(seg: Seg, cols, fn) -> np.ndarray:
+def bucketed_rows_map(seg: Seg, cols, fn) -> tuple[Seg, list]:
     """Run a 3-D-block callable over a flat batch: rows are grouped by
-    length, ``fn`` gets each group as (n_group, d, l) and must return
-    (n_group, l); results scatter back to one flat (total,) array.
+    length, ``fn`` gets each group as (n_group, d, l) and returns
+    (n_group, d', l'); results scatter back to d' flat columns on the
+    returned geometry (``l'`` may differ from ``l``, e.g. LAG's 2l-1).
 
-    Escape hatch for per-batch tables the flat layout can't express
-    directly (e.g. a reference Custom weighting ``g(X)``,
-    weighting.py:41-66) — identical grouping to the bucketed executor
-    path, so results match it exactly.  Zero-length rows contribute
-    nothing."""
-    out = np.zeros(seg.total, dtype=np.float64)
-    for ln in np.unique(seg.lengths):
-        if ln == 0:
-            continue
+    The generic adapter for every preparateur without a flat kernel
+    (MAV, LAG, JLD, FUN, ...) and for a Custom weighting ``g(X)``
+    (weighting.py:41-66) — the bucketed oracle's grouping, so results
+    match it exactly.  Zero-length rows stay empty."""
+    groups = []
+    out_len = np.zeros(seg.n, dtype=np.int64)
+    for ln in np.unique(seg.lengths[seg.nonempty]):
         rows = np.nonzero(seg.lengths == ln)[0]
         gather = (
             seg.offsets[rows][:, None] + np.arange(int(ln))[None, :]
@@ -293,29 +289,42 @@ def bucketed_rows_map(seg: Seg, cols, fn) -> np.ndarray:
         Z = np.stack(
             [c[gather].reshape(len(rows), int(ln)) for c in cols], axis=1
         )
-        out[gather] = np.asarray(fn(Z), dtype=np.float64).ravel()
-    return out
+        R = np.asarray(fn(Z), dtype=np.float64)
+        if groups and R.shape[1] != groups[0][1].shape[1]:
+            raise ValueError(
+                f"prep output dims differ across lengths: "
+                f"{groups[0][1].shape[1]} vs {R.shape[1]}"
+            )
+        out_len[rows] = R.shape[2]
+        groups.append((rows, R))
+    if not groups:
+        return seg, list(cols)  # every row empty: nothing to transform
+    out_seg = seg
+    if not np.array_equal(out_len, seg.lengths):
+        offsets = np.zeros(seg.n + 1, dtype=np.int64)
+        np.cumsum(out_len, out=offsets[1:])
+        out_seg = Seg(offsets)
+    out = [np.zeros(out_seg.total) for _ in range(groups[0][1].shape[1])]
+    for rows, R in groups:
+        ln = R.shape[2]
+        gather = (
+            out_seg.offsets[rows][:, None] + np.arange(ln)[None, :]
+        ).ravel()
+        for d, c in enumerate(out):
+            c[gather] = R[:, d, :].ravel()
+    return out_seg, out
 
 
 # ---------------------------------------------------------------------------
 # weighting lookups + coquantiles
 # ---------------------------------------------------------------------------
 
-def _nrm01_flat(seg: Seg, x: np.ndarray) -> np.ndarray:
-    lo = seg._reduceat(np.minimum, x, 0.0)
-    hi = seg._reduceat(np.maximum, x, 0.0)
-    span = hi - lo
-    safe = np.where(span == 0, 1.0, span)
-    out = (x - seg.broadcast(lo)) / seg.broadcast(safe)
-    return np.where(seg.broadcast(span) == 0, 0.0, out)
-
-
 def indices_lookup_flat(seg: Seg, relative: bool = True,
                         scale: float = 50.0) -> np.ndarray:
     r = (seg.pos + 1).astype(np.float64)
     if relative:
         r = r / seg.broadcast(seg.lengths.astype(np.float64))
-    return _nrm01_flat(seg, r) * scale
+    return nrm_flat(seg, r) * scale
 
 
 def plateaus_lookup_flat(seg: Seg, nplateaus: int, reverse: bool = False,
@@ -336,7 +345,7 @@ def plateaus_lookup_flat(seg: Seg, nplateaus: int, reverse: bool = False,
     np.floor_divide(p, step, out=idx, where=ok)
     inside = ok & (idx < nplateaus)
     vals[inside] = idx[inside] / (nplateaus - 1)
-    return _nrm01_flat(seg, vals) * scale
+    return nrm_flat(seg, vals) * scale
 
 
 def l1_mass_flat(seg: Seg, x: np.ndarray) -> np.ndarray:
@@ -353,7 +362,7 @@ def l1_lookup_flat(seg: Seg, x: np.ndarray, relative: bool = False,
     s = l1_mass_flat(seg, x)
     if relative:
         s = s / (seg.broadcast(seg.gather_last(s)) + 1e-5)
-    return _nrm01_flat(seg, s) * scale
+    return nrm_flat(seg, s) * scale
 
 
 def l2_lookup_flat(seg: Seg, x: np.ndarray, relative: bool = False,
@@ -361,7 +370,7 @@ def l2_lookup_flat(seg: Seg, x: np.ndarray, relative: bool = False,
     s = l2_mass_flat(seg, x)
     if relative:
         s = s / (seg.broadcast(seg.gather_last(s)) + 1e-5)
-    return _nrm01_flat(seg, s) * scale
+    return nrm_flat(seg, s) * scale
 
 
 def coquantile_flat(seg: Seg, x: np.ndarray, q: float,
@@ -372,7 +381,8 @@ def coquantile_flat(seg: Seg, x: np.ndarray, q: float,
 
 
 # ---------------------------------------------------------------------------
-# ISS scans (univariate SimpleWords)
+# ISS letters and per-word scans (the executor's prefix tries build on the
+# n-d letter ops; iss_flat / iss_flat_mv are the per-word test oracles)
 # ---------------------------------------------------------------------------
 
 def _pow1(x: np.ndarray, e: int) -> np.ndarray:
@@ -406,20 +416,6 @@ def _mul_letter(tmp: np.ndarray | None, x: np.ndarray, e: int) -> np.ndarray:
     if e < 0:
         for _ in range(-e):
             tmp = tmp / x
-    return tmp
-
-
-def _mul_letter_owned(tmp: np.ndarray, x: np.ndarray, e: int) -> np.ndarray:
-    """In-place variant of :func:`_mul_letter` for a ``tmp`` the caller
-    OWNS (freshly allocated, not a cached trie state): same values, no
-    per-multiply allocation."""
-    e = int(e)
-    if e > 0:
-        for _ in range(e):
-            np.multiply(tmp, x, out=tmp)
-    elif e < 0:
-        for _ in range(-e):
-            np.divide(tmp, x, out=tmp)
     return tmp
 
 
@@ -706,7 +702,7 @@ def runmax_argmax_flat(seg: Seg, x: np.ndarray):
 
 def iss_arctic_argmax_flat(
     seg: Seg,
-    x,
+    cols,
     word: np.ndarray,
     alpha: np.ndarray | None = None,
     lookup: np.ndarray | None = None,
@@ -715,11 +711,9 @@ def iss_arctic_argmax_flat(
     layout and values as :func:`..iss.iss_arctic_argmax` (p value
     streams interleaved with p(p+1)/2 maximizing-index streams, later
     letters freezing earlier letters' argmax streams at the position
-    their final argmax points to).  ``x`` is one flat array
-    (univariate) or a per-dimension column list (multivariate, round 5
-    — the linear combo is the only dimension-aware op, matching the
-    bucketed kernel's ``_linear_combo``)."""
-    cols = x if isinstance(x, list) else None
+    their final argmax points to).  ``cols`` is the per-dimension column
+    list; the linear combo is the only dimension-aware op, matching the
+    bucketed kernel's ``_linear_combo``."""
     word = np.asarray(word)
     p = len(word)
     if lookup is None:
@@ -729,14 +723,11 @@ def iss_arctic_argmax_flat(
     zeros = np.zeros(seg.total)
     vals: list = [zeros] * p
     idxs: list = [zeros] * p
-    tmp = np.zeros_like(cols[0] if cols is not None else x)
+    tmp = np.zeros_like(cols[0])
     for k in range(p):
         if not np.any(word[k]):
             continue  # bucketed parity: zero letters leave zero streams
-        if cols is not None:
-            tmp = tmp + _lin_combo_nd(cols, word[k])
-        else:
-            tmp = tmp + float(word[k][0]) * x
+        tmp = tmp + _lin_combo_nd(cols, word[k])
         if k > 0:
             tmp = tmp - lookup * a[k - 1]
         vals[k], idxs[k] = runmax_argmax_flat(seg, tmp)
@@ -822,78 +813,6 @@ def coswiss_flat(
     return result
 
 
-def coswiss_flat_multi(
-    seg: Seg,
-    x: np.ndarray,
-    words,
-    freq: float,
-    exponent: int = 2,
-    total: bool = False,
-) -> list[np.ndarray]:
-    """Flat-layout CosWISS for MANY univariate words of one frequency
-    with cross-word CSE (mirror of ``iss.coswiss_multi``): a word trie
-    over the gap-choice trie; per-word results bit-identical to
-    :func:`coswiss_flat` (same per-path op order, same lexicographic
-    leaf accumulation order)."""
-    from math import comb
-
-    f32 = float(np.float32(freq))
-    denom = f32 * np.maximum(seg.lengths - 1, 1).astype(np.float64)
-    g = np.pi * seg.pos / seg.broadcast(denom)
-    sin_w, cos_w = np.sin(g), np.cos(g)
-
-    letter_seqs = [tuple(int(e) for e in np.asarray(w)[:, 0]) for w in words]
-    children: dict[tuple, list] = {(): []}
-    # duplicate letter sequences all share the stream (see iss.coswiss_multi)
-    ends: dict[tuple, list] = {}
-    for wi, ls in enumerate(letter_seqs):
-        for j in range(len(ls)):
-            node, nxt = ls[:j], ls[:j + 1]
-            kids = children.setdefault(node, [])
-            if nxt not in kids:
-                kids.append(nxt)
-            children.setdefault(nxt, [])
-        ends.setdefault(ls, []).append(wi)
-    results = [np.zeros_like(x) for _ in words]
-
-    def dfs(node, state, coeff, prev):
-        # the shift + letter product and the leading sin^right_sin run
-        # are IDENTICAL across a child's emission and all its exponent
-        # choices — hoist them out of the choice loop.  Op sequence per
-        # root-to-leaf path is unchanged (sins before coses, same
-        # association), so results stay bit-identical; ~30% fewer array
-        # passes at exponent 2.
-        k = len(node)
-        right_sin = (exponent - prev) if k > 0 else 0
-        right_cos = prev if k > 0 else 0
-        for child in children[node]:
-            e = child[-1]
-            wis = ends.get(child, ())
-            base = seg.shift1(state) if k > 0 else state
-            base = base * _pow1(x, e)
-            presin = _mul_chain(base, sin_w, right_sin)
-            if wis and not total:
-                st = seg.cumsum(_mul_chain(presin, cos_w, right_cos))
-                for wi in wis:
-                    results[wi] += coeff * st
-            if children[child] or (wis and total):
-                for c in range(exponent + 1):
-                    tmp = _mul_chain(presin, sin_w, exponent - c)
-                    tmp = _mul_chain(tmp, cos_w, right_cos + c,
-                                     owned=tmp is not presin)
-                    st = seg.cumsum(tmp)
-                    if wis and total:
-                        tmp = _mul_chain(st, sin_w, exponent - c)
-                        tmp = _mul_chain(tmp, cos_w, c, owned=tmp is not st)
-                        for wi in wis:
-                            results[wi] += (coeff * comb(exponent, c)) * tmp
-                    if children[child]:
-                        dfs(child, st, coeff * comb(exponent, c), c)
-
-    dfs((), np.ones_like(x), 1, 0)
-    return results
-
-
 def coswiss_flat_multi_mv(
     seg: Seg,
     cols,
@@ -902,8 +821,9 @@ def coswiss_flat_multi_mv(
     exponent: int = 2,
     total: bool = False,
 ) -> list[np.ndarray]:
-    """Multivariate flat-layout CosWISS with cross-word CSE (mirror of
-    ``iss.coswiss_multi`` on a column list): trie keys are full letter
+    """Flat-layout CosWISS for many words of one frequency with
+    cross-word CSE (mirror of ``iss.coswiss_multi`` on a per-dimension
+    column list; univariate = one column): trie keys are full letter
     tuples trimmed of trailing zero exponents, so words declared over
     fewer dims than the input share streams exactly as the bucketed
     kernel's zero-padding makes them."""
@@ -936,9 +856,12 @@ def coswiss_flat_multi_mv(
     results = [np.zeros_like(cols[0]) for _ in words]
 
     def dfs(node, state, coeff, prev):
-        # same hoist as the univariate variant: shift + letter monomial
-        # + leading sin^right_sin shared across the child's emission and
-        # exponent choices, bit-identical op sequence per path
+        # the shift + letter monomial and the leading sin^right_sin run
+        # are IDENTICAL across a child's emission and all its exponent
+        # choices — hoist them out of the choice loop.  Op sequence per
+        # root-to-leaf path is unchanged (sins before coses, same
+        # association), so results stay bit-identical; ~30% fewer array
+        # passes at exponent 2.
         k = len(node)
         right_sin = (exponent - prev) if k > 0 else 0
         right_cos = prev if k > 0 else 0
@@ -974,13 +897,17 @@ def coswiss_flat_multi_mv(
 # sieves on flat streams
 # ---------------------------------------------------------------------------
 
-def resolve_cuts_flat(seg: Seg, cuts, norm: str, src: np.ndarray) -> np.ndarray:
+def resolve_cuts_flat(seg: Seg, cuts, norm: str, src: np.ndarray,
+                      src_seg: Seg | None = None) -> np.ndarray:
     """(n, len(cuts)+1) sorted cut-index matrix; float cuts -> coquantile
-    of the *source* series mass (matches bucketed resolve_cuts)."""
+    of the *source* series mass (matches bucketed resolve_cuts).
+    ``src_seg`` is the source's geometry when a prep changed the
+    stream's lengths; integer cuts always index the stream."""
+    src_seg = seg if src_seg is None else src_seg
     out = np.zeros((seg.n, len(cuts) + 1), dtype=np.int64)
     for i, c in enumerate(cuts):
         if isinstance(c, float):
-            out[:, i + 1] = coquantile_flat(seg, src, c, norm)
+            out[:, i + 1] = coquantile_flat(src_seg, src, c, norm)
         else:
             out[:, i + 1] = c if c >= 0 else seg.lengths + c + 1
     out.sort(axis=1)

@@ -5,10 +5,10 @@ semiring.py:98-527`) bit-for-bit on their own test fixtures, but the
 implementation is architecturally different: instead of a JIT'd loop over
 series (numba ``prange``), every kernel here operates on a regular 3-D
 batch ``Z (n_series, n_dims, length)`` and performs the scans with
-``axis=-1`` NumPy primitives (``cumsum`` / ``maximum.accumulate``), so an
-entire Arrow batch of equal-length sequences is processed in a handful of
-vectorized ops.  Variable-length batches are handled upstream by length
--bucketing (see :func:`fruits_spark.kernels.segments.run_bucketed`).
+``axis=-1`` NumPy primitives (``cumsum`` / ``maximum.accumulate``), so a
+block of equal-length sequences is processed in a handful of vectorized
+ops.  These 3-D kernels are the reference-parity oracle; production
+batches run the flat segmented twins in :mod:`.flat`.
 
 All math is float64; words are int32 exponent matrices; weighting lookup
 tables are float64 ``(n, length)`` arrays.

@@ -1,21 +1,17 @@
-"""Variable-length sequence batches: (values, offsets) <-> 3-D blocks.
+"""Variable-length sequence batches -> Arrow's flat list layout.
 
-Arrow hands a pandas UDF a Series of lists.  The hot path converts that to
-one flat float64 ``values`` array plus int64 ``offsets`` (Arrow's own list
-layout), then *buckets rows by length*: every group of equal-length
-sequences is stacked into a regular ``(n_group, d, l)`` block so the ISS /
-prep / sieve kernels run fully vectorized across the group with axis ops.
-Scatter at the end restores input row order.
+Arrow hands a pandas UDF a Series of lists.  The engine converts that to
+per-dimension flat float64 columns plus one int64 ``offsets`` array
+(Arrow's own list layout) and runs every operator as segmented array ops
+on them (:mod:`.flat`) — no padding, no per-length blocks.
 
 This replaces the reference's numba ``prange`` over series
-(`/root/reference/fruits/iss/semiring.py:184-200`) as the intra-executor
-parallelization strategy: vectorize across rows, parallelize across Spark
-partitions.
+(``fruits/iss/semiring.py:184-200``) as the intra-executor
+parallelization strategy: vectorize across rows, parallelize across
+Spark partitions.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 import numpy as np
 
@@ -31,74 +27,27 @@ def flatten_lists(col) -> tuple[np.ndarray, np.ndarray]:
     return values, offsets
 
 
-def flatten_lists_mv(rows) -> tuple[list, np.ndarray] | tuple[None, None]:
-    """Sequence of (dims, length) nested rows -> (per-dim flat columns,
-    offsets).  All non-empty rows must agree on the dim count; returns
-    (None, None) when they don't (caller falls back to the bucketed
-    path).  Empty rows (0 dims or 0 steps) become empty segments."""
-    n = len(rows)
-    ndims = {len(r) for r in rows if len(r)}
-    if len(ndims) != 1:
-        return None, None
-    d = ndims.pop()
-    lengths = np.fromiter(
-        (len(r[0]) if len(r) else 0 for r in rows), dtype=np.int64, count=n
-    )
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    cols = [np.empty(offsets[-1], dtype=np.float64) for _ in range(d)]
-    for i, r in enumerate(rows):
-        s, e = offsets[i], offsets[i + 1]
-        if e > s:
-            for dim in range(d):
-                cols[dim][s:e] = r[dim]
-    return cols, offsets
-
-
-def run_bucketed(
-    values: np.ndarray,
-    offsets: np.ndarray,
-    fn: Callable[[np.ndarray], np.ndarray],
-    out_width: int,
-) -> np.ndarray:
-    """Apply ``fn`` on length-bucketed 3-D blocks; return ``(n, out_width)``.
-
-    ``fn`` receives ``Z (n_group, 1, l)`` and must return a per-row 2-D
-    feature block ``(n_group, out_width)``.
-    """
-    n = len(offsets) - 1
-    lengths = np.diff(offsets)
-    out = np.empty((n, out_width), dtype=np.float64)
-    for ln in np.unique(lengths):
-        rows = np.nonzero(lengths == ln)[0]
-        if ln == 0:
-            out[rows] = 0.0
-            continue
-        gather = (offsets[rows][:, None] + np.arange(ln)[None, :]).ravel()
-        Z = values[gather].reshape(len(rows), 1, int(ln))
-        out[rows] = fn(Z)
+def flatten_lists_mv(rows) -> list[tuple[np.ndarray, list, np.ndarray]]:
+    """Sequence of (dims, length) nested rows -> one ``(row positions,
+    per-dim flat columns, offsets)`` triple per distinct dim count, in
+    order of first appearance.  Rows with 0 steps are empty segments;
+    0-dim rows (``[]``) form a group with no columns."""
+    n_dims = np.fromiter((len(r) for r in rows), dtype=np.int64,
+                         count=len(rows))
+    out = []
+    for d in dict.fromkeys(n_dims.tolist()):
+        pos = np.nonzero(n_dims == d)[0]
+        lengths = np.fromiter(
+            (len(rows[i][0]) if d else 0 for i in pos),
+            dtype=np.int64, count=len(pos),
+        )
+        offsets = np.zeros(len(pos) + 1, dtype=np.int64)
+        np.cumsum(lengths, out=offsets[1:])
+        cols = [np.empty(offsets[-1], dtype=np.float64) for _ in range(d)]
+        for j, i in enumerate(pos):
+            s, e = offsets[j], offsets[j + 1]
+            if e > s:
+                for dim in range(d):
+                    cols[dim][s:e] = rows[i][dim]
+        out.append((pos, cols, offsets))
     return out
-
-
-def run_bucketed_streams(
-    values: np.ndarray,
-    offsets: np.ndarray,
-    fn: Callable[[np.ndarray], np.ndarray],
-    n_streams: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Like :func:`run_bucketed` but ``fn`` returns per-row *streams*
-    ``(n_group, n_streams, l)``; output is flattened back to
-    (values (n_streams, total_len), offsets) preserving row order."""
-    n = len(offsets) - 1
-    lengths = np.diff(offsets)
-    out_vals = np.empty((n_streams, offsets[-1]), dtype=np.float64)
-    for ln in np.unique(lengths):
-        rows = np.nonzero(lengths == ln)[0]
-        if ln == 0:
-            continue
-        gather = (offsets[rows][:, None] + np.arange(ln)[None, :]).ravel()
-        Z = values[gather].reshape(len(rows), 1, int(ln))
-        streams = fn(Z)  # (n_group, n_streams, ln)
-        for s in range(n_streams):
-            out_vals[s, gather] = streams[:, s, :].ravel()
-    return out_vals, offsets

@@ -30,6 +30,32 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def flagship_plan():
+    """The flagship ISS feature set: EXTENDED ``of_weight(4, 1)`` reals
+    plus two arctic words after STD, END/PPV/MAX sieves (49 features)."""
+    from fruits_spark.plan import FruitPlan, ISSSpec, Prep, Sieve, Slice
+    from fruits_spark.words import W, of_weight
+
+    return FruitPlan(
+        (
+            Slice(
+                preps=(Prep("std"),),
+                iss=ISSSpec(tuple(of_weight(4, 1)), mode="extended"),
+                sieves=(
+                    Sieve("end"),
+                    Sieve("ppv", {"quantiles": [0.0], "constant": [True]}),
+                    Sieve("max"),
+                ),
+            ),
+            Slice(
+                preps=(Prep("std"),),
+                iss=ISSSpec((W("[1][1]"), W("[11][1]")), semiring="arctic"),
+                sieves=(Sieve("end"), Sieve("max")),
+            ),
+        )
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="token table parquet path")
@@ -60,8 +86,6 @@ def main() -> None:
     from fruits_spark.engine.executor import extract_features, feature_columns
     from fruits_spark.engine.session import build_session
     from fruits_spark.fit import fit_plan
-    from fruits_spark.plan import ISSSpec, Prep, Sieve, Slice, FruitPlan
-    from fruits_spark.words import W, of_weight
 
     spark = build_session(master=args.master, app=f"iss-rollup-{args.run_id}")
     # Fail fast on an undersized driver heap: under spark-submit the JVM
@@ -94,24 +118,7 @@ def main() -> None:
     else:
         ap.error("need --input or --n-docs-synth")
 
-    fplan = FruitPlan(
-        (
-            Slice(
-                preps=(Prep("std"),),
-                iss=ISSSpec(tuple(of_weight(4, 1)), mode="extended"),
-                sieves=(
-                    Sieve("end"),
-                    Sieve("ppv", {"quantiles": [0.0], "constant": [True]}),
-                    Sieve("max"),
-                ),
-            ),
-            Slice(
-                preps=(Prep("std"),),
-                iss=ISSSpec((W("[1][1]"), W("[11][1]")), semiring="arctic"),
-                sieves=(Sieve("end"), Sieve("max")),
-            ),
-        )
-    )
+    fplan = flagship_plan()
     fplan = fit_plan(toks, fplan)
     fc = feature_columns(fplan)
     n_streams = sum(s.n_streams() for s in fplan.slices)

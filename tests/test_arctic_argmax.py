@@ -86,7 +86,7 @@ def test_stream_count():
 
 
 def test_argmax_through_plan_layer():
-    from fruits_spark.engine.executor import compute_features_block, plan_is_flat
+    from fruits_spark.engine.executor import compute_features_block
     from fruits_spark.plan import ISSSpec, Sieve, Slice, FruitPlan
 
     fplan = FruitPlan((
@@ -94,9 +94,7 @@ def test_argmax_through_plan_layer():
               sieves=(Sieve("end"),)),
     ))
     assert fplan.n_features() == 5  # 2 value + 3 index streams x END
-    # round 4: univariate argmax runs the flat hot path (flat ==
-    # bucketed pinned in test_flat_kernels)
-    assert plan_is_flat(fplan)
+    # flat == bucketed for argmax is pinned in test_flat_kernels
     labels = fplan.feature_labels()
     assert labels[0].startswith("[1]:arctic")
     X = RNG.random((4, 1, 15))

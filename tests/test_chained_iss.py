@@ -4,7 +4,7 @@ composition of stream sets, and chaining equals manual re-application."""
 
 import numpy as np
 
-from fruits_spark.engine.executor import compute_features_block, plan_is_flat
+from fruits_spark.engine.executor import compute_features_block
 from fruits_spark.kernels import iss as KI
 from fruits_spark.plan import ISSSpec, Sieve, Slice, FruitPlan
 from fruits_spark.words import W
@@ -63,11 +63,8 @@ def test_chain_equals_manual_composition():
     assert col == 98
 
 
-def test_univariate_chain_flat_padded_match():
-    from fruits_spark.engine.executor import (
-        compute_features_flat,
-        compute_features_padded,
-    )
+def test_univariate_chain_flat_matches_block():
+    from fruits_spark.engine.executor import compute_features_flat
 
     chain = (
         ISSSpec((W("[1][11]"),), mode="extended"),
@@ -76,7 +73,6 @@ def test_univariate_chain_flat_padded_match():
     fplan = FruitPlan(
         (Slice(iss=chain, sieves=(Sieve("end"), Sieve("max"))),)
     )
-    assert plan_is_flat(fplan)
     assert fplan.n_features() == 2 * 2 * 2
 
     lengths = RNG.integers(1, 40, size=40)
@@ -94,7 +90,4 @@ def test_univariate_chain_flat_padded_match():
 
     np.testing.assert_array_equal(
         compute_features_flat(values, offsets, fplan), expect
-    )
-    np.testing.assert_array_equal(
-        compute_features_padded(values, offsets, fplan), expect
     )

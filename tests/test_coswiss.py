@@ -134,26 +134,29 @@ def test_coswiss_multi_bit_identical_to_per_word():
 
 
 def test_coswiss_flat_multi_bit_identical():
-    import pandas as pd
-    from fruits_spark.kernels.flat import Seg, coswiss_flat, coswiss_flat_multi
-    from fruits_spark.kernels.segments import flatten_lists
+    """Univariate input is the one-column case of the flat CosWISS trie;
+    on a one-row batch (no cumsum carry) it must reproduce the bucketed
+    coswiss_multi bit for bit — same per-path op order, exponents
+    applied as repeated multiplies like _pow_product."""
+    from fruits_spark.kernels.flat import Seg, coswiss_flat_multi_mv
+    from fruits_spark.kernels.iss import coswiss_multi
     from fruits_spark.words import of_weight
 
     rows = [RNG.integers(0, 20, l).astype(np.float64)
             for l in (5, 12, 1, 30, 8)]
-    values, offsets = flatten_lists(pd.Series(rows))
-    seg = Seg(offsets)
     words = [w.matrix for w in of_weight(3, 1)] + [
         w.matrix for w in of_weight(1, 1)
     ]
-    for total in (False, True):
-        for s in (1, 2):
-            multi = coswiss_flat_multi(seg, values, words, 0.5,
-                                       exponent=s, total=total)
-            for wi, w in enumerate(words):
-                single = coswiss_flat(seg, values, w, 0.5,
-                                      exponent=s, total=total)
-                assert np.array_equal(multi[wi], single)
+    for x in rows:
+        seg = Seg(np.array([0, len(x)]))
+        for total in (False, True):
+            for s in (1, 2):
+                multi = coswiss_flat_multi_mv(seg, [x], words, 0.5,
+                                              exponent=s, total=total)
+                want = coswiss_multi(x[None, None, :], words, 0.5,
+                                     exponent=s, total=total)
+                for wi in range(len(words)):
+                    assert np.array_equal(multi[wi], want[wi][0])
 
 
 def test_coswiss_multi_duplicate_words_all_filled():
@@ -161,7 +164,7 @@ def test_coswiss_multi_duplicate_words_all_filled():
     receive the shared stream — not silently zero out."""
     from fruits_spark.kernels.iss import coswiss_multi
     import pandas as pd
-    from fruits_spark.kernels.flat import Seg, coswiss_flat_multi
+    from fruits_spark.kernels.flat import Seg, coswiss_flat_multi_mv
     from fruits_spark.kernels.segments import flatten_lists
 
     Z = RNG.normal(size=(3, 2, 12))
@@ -176,8 +179,8 @@ def test_coswiss_multi_duplicate_words_all_filled():
     values, offsets = flatten_lists(pd.Series(rows))
     seg = Seg(offsets)
     wf = W("[1][1]").matrix
-    mf = coswiss_flat_multi(seg, values, [wf, wf], 0.5, exponent=2,
-                            total=True)
+    mf = coswiss_flat_multi_mv(seg, [values], [wf, wf], 0.5, exponent=2,
+                               total=True)
     from fruits_spark.kernels.flat import coswiss_flat
     sf = coswiss_flat(seg, values, wf, 0.5, exponent=2, total=True)
     assert np.array_equal(mf[0], sf) and np.array_equal(mf[1], sf)

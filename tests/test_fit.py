@@ -97,11 +97,8 @@ def test_fitted_global_std():
     np.testing.assert_allclose(feats[:, 0], manual, rtol=1e-12)
 
 
-def test_flat_padded_respect_fitted_values():
-    from fruits_spark.engine.executor import (
-        compute_features_flat,
-        compute_features_padded,
-    )
+def test_flat_respects_fitted_values():
+    from fruits_spark.engine.executor import compute_features_flat
     from fruits_spark.kernels.segments import flatten_lists
 
     fplan = FruitPlan(
@@ -122,7 +119,4 @@ def test_flat_padded_respect_fitted_values():
     expect = compute_features_block(X, fitted)
     np.testing.assert_allclose(
         compute_features_flat(values, offsets, fitted), expect, rtol=1e-12
-    )
-    np.testing.assert_allclose(
-        compute_features_padded(values, offsets, fitted), expect, rtol=1e-12
     )

@@ -8,7 +8,6 @@ import pytest
 from fruits_spark.engine.executor import (
     compute_features_block,
     compute_features_flat,
-    plan_is_flat,
 )
 from fruits_spark.kernels import flat as KF
 from fruits_spark.plan import CosWISSSpec, ISSSpec, Prep, Sieve, Slice, FruitPlan
@@ -104,7 +103,6 @@ PLANS = {
 @pytest.mark.parametrize("int_domain", [True, False])
 def test_flat_matches_bucketed(name, int_domain):
     fplan = PLANS[name]
-    assert plan_is_flat(fplan)
     values, offsets = random_batch(int_domain=int_domain)
     got = compute_features_flat(values, offsets, fplan)
     expect = bucketed_features(values, offsets, fplan)
@@ -121,8 +119,7 @@ def _assert_match(got, expect, name, int_domain):
         np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-12)
 
 
-# flat + bucketed only (the padded alternative layout does not
-# implement these — executor.plan_is_padded_ok routes them to flat)
+# plateaus weighting, true AVG/STD and arctic argmax
 PLANS_FLAT_ONLY = {
     "weighted_plateaus": FruitPlan((
         Slice(iss=ISSSpec((W("[1][1]"),), weighting="plateaus",
@@ -168,11 +165,7 @@ PLANS_FLAT_ONLY = {
 @pytest.mark.parametrize("name", list(PLANS_FLAT_ONLY))
 @pytest.mark.parametrize("int_domain", [True, False])
 def test_flat_only_ops_match_bucketed(name, int_domain):
-    from fruits_spark.engine.executor import plan_is_padded_ok
-
     fplan = PLANS_FLAT_ONLY[name]
-    assert plan_is_flat(fplan)
-    assert not plan_is_padded_ok(fplan)
     values, offsets = random_batch(int_domain=int_domain)
     got = compute_features_flat(values, offsets, fplan)
     expect = bucketed_features(values, offsets, fplan)
@@ -180,44 +173,6 @@ def test_flat_only_ops_match_bucketed(name, int_domain):
     # (different but equally-valid summation orders); avg on the int
     # domain is integer-sum / integer-count and stays exact
     np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-12)
-
-
-@pytest.mark.parametrize("name", list(PLANS))
-@pytest.mark.parametrize("int_domain", [True, False])
-def test_padded_matches_bucketed(name, int_domain):
-    from fruits_spark.engine.executor import compute_features_padded
-
-    fplan = PLANS[name]
-    values, offsets = random_batch(int_domain=int_domain)
-    got = compute_features_padded(values, offsets, fplan)
-    expect = bucketed_features(values, offsets, fplan)
-    _assert_match(got, expect, name, int_domain)
-
-
-def test_padded_negative_values_arctic():
-    """Arctic with all-negative data: zero pads must not leak into
-    MAX/MIN (tail_const=False path)."""
-    from fruits_spark.engine.executor import compute_features_padded
-
-    fplan = PLANS["arctic_sieves"]
-    values, offsets = random_batch(n=30)
-    values = -np.abs(values) - 1.0
-    got = compute_features_padded(values, offsets, fplan)
-    expect = bucketed_features(values, offsets, fplan)
-    np.testing.assert_allclose(got, expect, rtol=1e-12)
-
-
-def test_padded_handles_empty_and_tiny_segments():
-    from fruits_spark.engine.executor import compute_features_padded
-
-    fplan = PLANS["arctic_sieves"]
-    offsets = np.array([0, 0, 1, 3, 3, 10], dtype=np.int64)
-    values = RNG.integers(0, 101, size=10).astype(np.float64)
-    got = compute_features_padded(values, offsets, fplan)
-    expect = bucketed_features(values, offsets, fplan)
-    ne = np.diff(offsets) > 0
-    np.testing.assert_allclose(got[ne], expect[ne])
-    assert np.all(np.isfinite(got))
 
 
 def test_flat_handles_empty_and_tiny_segments():

@@ -20,7 +20,6 @@ import pytest
 from fruits_spark.engine.executor import (
     compute_features_block,
     compute_features_flat,
-    plan_is_flat,
 )
 from fruits_spark.plan import CosWISSSpec, FruitPlan, ISSSpec, Prep, Sieve, Slice
 from fruits_spark.words import W, alternate_sign, of_weight
@@ -52,7 +51,6 @@ def _oracle(cols, offsets, lengths, fplan):
 
 
 def _check(fplan, d=2, rtol=1e-9, **kw):
-    assert plan_is_flat(fplan, n_dims=d)
     cols, offsets, lengths = _mv_batch(d=d, **kw)
     got = compute_features_flat(cols, offsets, fplan)
     want = _oracle(cols, offsets, lengths, fplan)
@@ -116,7 +114,6 @@ def test_bayesian_mv():
     ))
     # bayesian multiplies magnitudes — keep inputs near 1 to avoid
     # overflow noise in the comparison
-    assert plan_is_flat(fplan, n_dims=2)
     cols, offsets, lengths = _mv_batch()
     cols = [0.5 + 0.1 * np.tanh(c) for c in cols]
     got = compute_features_flat(cols, offsets, fplan)
@@ -222,7 +219,6 @@ def test_mv_argmax_flat_matches_bucketed():
                           argmax=True),
               sieves=(Sieve("end"), Sieve("max"))),
     ))
-    assert plan_is_flat(fplan, n_dims=2)
     _check(fplan)
     # NEW doubles dims before the ISS — flat now as well
     fplan2 = FruitPlan((
@@ -231,44 +227,47 @@ def test_mv_argmax_flat_matches_bucketed():
                           weighting="indices"),
               sieves=(Sieve("end"),)),
     ))
-    assert plan_is_flat(fplan2, n_dims=2)
     _check(fplan2)
 
 
 def test_mv_flat_chunking_matches_unchunked(spark, monkeypatch):
-    """A tiny token budget forces _run_mv_flat to sub-batch; on an
+    """A tiny token budget forces extract_features to sub-batch; on an
     integer domain the carry-subtract cumsum is exact, so features must
-    be BIT-identical across chunk boundaries."""
+    be BIT-identical across chunk boundaries — also behind a MAV prep
+    (run per length group by the generic prep adapter), fed multiples
+    of its width so the window means stay integers."""
     import fruits_spark.engine.executor as EX
 
     RNG = np.random.default_rng(31)
-    rows = [
-        (i, RNG.integers(-4, 5, size=(2, 13)).astype(float).tolist(),
-         "s", 13)
-        for i in range(9)
+    tokens = [RNG.integers(-4, 5, size=(2, 13)).astype(float)
+              for _ in range(9)]
+    iss = ISSSpec((W("[1]"), W("[12]"), W("[1][2]")))
+    sieves = (Sieve("end"), Sieve("max"))
+    cases = [
+        (FruitPlan((Slice(iss=iss, sieves=sieves),)), 1),
+        (FruitPlan((Slice(preps=(Prep("mav", {"width": 3}),), iss=iss,
+                          sieves=sieves),)), 3),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, dims array<array<double>>, source string, n_tok int",
-    )
-    fplan = FruitPlan((
-        Slice(iss=ISSSpec((W("[1]"), W("[12]"), W("[1][2]"))),
-              sieves=(Sieve("end"), Sieve("max"))),
-    ))
-    assert plan_is_flat(fplan, n_dims=2)
-    fcols = EX.feature_columns(fplan)
-
-    def run():
-        return (
-            EX.extract_features(df, fplan, tokens_col="dims",
-                                multivariate=True)
-            .toPandas().sort_values("doc_id")[fcols].to_numpy()
+    for fplan, scale in cases:
+        df = spark.createDataFrame(
+            [(i, (scale * t).tolist(), "s", 13) for i, t in enumerate(tokens)],
+            "doc_id long, dims array<array<double>>, source string, "
+            "n_tok int",
         )
+        fcols = EX.feature_columns(fplan)
 
-    base = run()
-    monkeypatch.setenv("SPARK_GRAFT_TOKEN_BUDGET", "30")  # 1 row/chunk
-    chunked = run()
-    np.testing.assert_array_equal(base, chunked)
+        def run():
+            return (
+                EX.extract_features(df, fplan, tokens_col="dims",
+                                    multivariate=True)
+                .toPandas().sort_values("doc_id")[fcols].to_numpy()
+            )
+
+        monkeypatch.delenv("SPARK_GRAFT_TOKEN_BUDGET", raising=False)
+        base = run()
+        monkeypatch.setenv("SPARK_GRAFT_TOKEN_BUDGET", "30")  # 1 row/chunk
+        chunked = run()
+        np.testing.assert_array_equal(base, chunked)
 
 
 def test_spark_mv_extract_uses_flat(spark):

@@ -1,5 +1,5 @@
 """Property-based ISS/sieve tests (hypothesis): on arbitrary integer
-series and arbitrary simple words, the three execution layouts agree
+series and arbitrary simple words, the flat and bucketed layouts agree
 with each other and with an O(l^k) brute-force of the ISS definition
 (iss/iss.py:46 semantics; cf. the reference's own brute-force oracles in
 tests/signature/test_weighting.py)."""
@@ -14,7 +14,6 @@ from hypothesis import strategies as st
 from fruits_spark.engine.executor import (
     compute_features_block,
     compute_features_flat,
-    compute_features_padded,
 )
 from fruits_spark.kernels.segments import flatten_lists
 from fruits_spark.plan import FruitPlan, ISSSpec, Sieve, Slice
@@ -80,12 +79,10 @@ def test_layouts_agree_and_match_bruteforce(rows, wi, sr):
     )
     values, offsets = flatten_lists(pd.Series(xs))
     ff = compute_features_flat(values, offsets, fplan)
-    fp = compute_features_padded(values, offsets, fplan)
     fb = np.vstack(
         [compute_features_block(x.reshape(1, 1, -1), fplan) for x in xs]
     )
     np.testing.assert_allclose(ff, fb, rtol=1e-9, atol=1e-9)
-    np.testing.assert_allclose(fp, fb, rtol=1e-9, atol=1e-9)
     exps = _word_exps(word)
     for i, x in enumerate(xs):
         expect = brute_iss_end(x, exps, sr)
@@ -132,6 +129,9 @@ def test_sieves_match_numpy_definition(rows, q):
 def test_extended_equals_prefix_singles(rows):
     xs = [np.asarray(r, dtype=np.float64) for r in rows]
     values, offsets = flatten_lists(pd.Series(xs))
+    # the word reads dim 2, so the input needs two dimensions (a
+    # one-column input raises like the oracle)
+    values = [values, values % 7]
     word = "[1][2][1]"
     ext = FruitPlan(
         (
@@ -172,8 +172,6 @@ def test_flat_matches_bucketed_all_spec_combos(rows, wi, sr, weighting,
     path claims must match the bucketed reference-parity kernels —
     the round-5 bayesian weighted+total divergence hid exactly in a
     combo no directed test enumerated."""
-    from fruits_spark.engine.executor import plan_is_flat
-
     word = MV_WORDS[wi] if d == 2 else WORDS[wi]
     # bayesian multiplies magnitudes: keep values in [0.5, 1.5] to
     # avoid overflow drowning the comparison
@@ -182,7 +180,6 @@ def test_flat_matches_bucketed_all_spec_combos(rows, wi, sr, weighting,
         total=total if weighting is not None else False,
     )
     fplan = FruitPlan((Slice(iss=spec, sieves=(Sieve("end"), Sieve("max"))),))
-    assert plan_is_flat(fplan, n_dims=d)
     xs = [
         0.5 + np.asarray(r, dtype=np.float64) / 50.0 for r in rows
     ]

@@ -383,7 +383,7 @@ def test_random_plans_flat_equals_bucketed():
     import itertools
     import pandas as pd
     from fruits_spark.engine.executor import (
-        compute_features_block, compute_features_flat, plan_is_flat,
+        compute_features_block, compute_features_flat,
     )
     from fruits_spark.kernels.segments import flatten_lists
     from fruits_spark.plan import FruitPlan, ISSSpec, Prep, Sieve, Slice
@@ -426,8 +426,6 @@ def test_random_plans_flat_equals_bucketed():
                 sieves=sieves_pool[int(rng.integers(len(sieves_pool)))],
             ))
         fplan = FruitPlan(tuple(slices))
-        if not plan_is_flat(fplan):
-            continue
         rows = [rng.integers(0, 50, int(rng.integers(1, 25)))
                 .astype(np.float64) for _ in range(int(rng.integers(1, 9)))]
         values, offsets = flatten_lists(pd.Series(rows))
@@ -441,7 +439,7 @@ def test_random_plans_flat_equals_bucketed():
             fb[idx] = compute_features_block(Z, fplan)
         np.testing.assert_allclose(ff, fb, rtol=1e-8, atol=1e-8)
         checked += 1
-    assert checked >= 20  # the pool must actually exercise the flat path
+    assert checked == 40
 
 
 def test_tokenize_bridges_to_engine(spark):

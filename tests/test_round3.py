@@ -61,18 +61,19 @@ def test_retire_runs_concurrent_serialize(spark, tmp_path):
 
 
 def test_multivariate_block_chunking_matches_unchunked(spark, monkeypatch):
-    """A tiny token budget forces run_multivariate to chunk each
-    per-length block (bounding CosWISS stream buffering for foreign
-    sessions with big Arrow batches); features must be identical.
+    """A tiny token budget forces extract_features to chunk a
+    multivariate batch behind a MAV prep (run per length group by the
+    generic prep adapter); features must be identical.
 
-    The MAV prep keeps this plan on the BUCKETED mv path (the round-5
-    flat mv path — which by now covers argmax too — would otherwise
-    claim it; its float carry rounding is chunk-boundary-dependent and
-    covered by its own integer-domain chunking test in
-    test_flat_multivariate)."""
+    Integer inputs in multiples of the MAV width keep every window mean
+    and prefix sum an exact integer: the flat layout's global cumsum
+    minus per-segment carry is then bit-exact whatever the chunk
+    boundaries (on float inputs it differs in the last ulp)."""
     rng = np.random.default_rng(7)
     rows = [
-        (i, rng.normal(size=(2, 13)).tolist(), "s", 13) for i in range(9)
+        (i, (3 * rng.integers(-4, 5, size=(2, 13))).astype(float).tolist(),
+         "s", 13)
+        for i in range(9)
     ]
     df = spark.createDataFrame(
         rows,
@@ -89,7 +90,6 @@ def test_multivariate_block_chunking_matches_unchunked(spark, monkeypatch):
             ),
         )
     )
-    assert not EX.plan_is_flat(fplan, n_dims=2)
     fcols = EX.feature_columns(fplan)
 
     def run():
@@ -648,35 +648,6 @@ def test_extract_features_all_empty_batch(spark):
     out = EX.extract_features(df, fplan).collect()
     assert len(out) == 5
     assert all(r[c] == 0.0 for r in out for c in fcols)
-
-
-def test_padded_coswiss_negative_exponent_matches_flat():
-    """Padded CosWISS with a NEGATIVE exponent word: pads become inf
-    (0**-1) so the tail is poisoned — the emitter must route these
-    streams to masked sieves, matching the flat layout (review
-    finding: tail_const=True read inf tails as data)."""
-    from fruits_spark.engine.executor import (
-        compute_features_flat, compute_features_padded,
-    )
-    from fruits_spark.plan import CosWISSSpec, Sieve, Slice, FruitPlan
-
-    fplan = FruitPlan(
-        (
-            Slice(
-                iss=CosWISSSpec((W("[(-1)][1]"),), (0.5,)),
-                sieves=(Sieve("max"), Sieve("ppv", {"quantiles": [0.0],
-                                                    "constant": [True]})),
-            ),
-        )
-    )
-    rng = np.random.default_rng(4)
-    lens = rng.integers(3, 30, size=12)
-    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
-    # strictly positive values so x**-1 is finite in the true region
-    values = rng.uniform(0.5, 2.0, size=int(offsets[-1]))
-    flat = compute_features_flat(values, offsets, fplan)
-    padded = compute_features_padded(values, offsets, fplan)
-    np.testing.assert_allclose(padded, flat, rtol=1e-9, atol=1e-12)
 
 
 def test_shingle_df_short_docs_emit_no_shingles(spark):

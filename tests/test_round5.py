@@ -143,7 +143,7 @@ def test_weighted_cse_bit_identical_to_per_word():
     import numpy as np
 
     from fruits_spark.engine.executor import (
-        _emit_level_flat, _lookup_flat,
+        _Source, _emit_level_flat, _lookup_flat,
     )
     from fruits_spark.kernels import flat as KF
     from fruits_spark.plan import ISSSpec
@@ -171,9 +171,9 @@ def test_weighted_cse_bit_identical_to_per_word():
                 spec = ISSSpec(words, mode=mode, semiring=semiring,
                                weighting="indices", total=total)
                 xp = cols[:d] if d > 1 else x
-                inp = xp if d > 1 else x
-                lookup = _lookup_flat(spec, seg, inp, cols[:d])
-                got = dict(_emit_level_flat(seg, inp, spec, cols[:d]))
+                src = _Source(seg, cols[:d])
+                lookup = _lookup_flat(spec, seg, cols[:d], src)
+                got = dict(_emit_level_flat(seg, cols[:d], spec, src))
                 # per-word oracle (the pre-CSE path)
                 pplan = spec.plan()
                 want = {}
@@ -214,11 +214,13 @@ def test_unweighted_cse_duplicate_words_single_mode():
     offsets = np.zeros(6, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     x = rng.normal(size=int(offsets[-1]))
+    # [1][2] reads dim 2: the input needs two columns (one raises)
+    cols = [x, 0.5 * x]
     for extra in ({}, {"weighting": "indices"}):
         spec = ISSSpec((W("[1][11]"), W("[1][2]"), W("[1][11]")),
                        mode="single", **extra)
         fplan = FruitPlan((Slice(iss=spec, sieves=(Sieve("end"),)),))
-        out = compute_features_flat(x, offsets, fplan)
+        out = compute_features_flat(cols, offsets, fplan)
         assert out.shape[1] == 3
         np.testing.assert_array_equal(out[:, 0], out[:, 2])
         assert out[:, 0].any()

@@ -1,31 +1,39 @@
-"""Single-core probe: flat multivariate ISS path vs the bucketed 3-D
-path on the reference fruit_reduced-equivalent plan (of_weight(4,2)
-EXTENDED + indices weighting, 24-letter arctic words, 2x CosWISS with
-5 freqs, 7 sieves, NEW+INC+STD preps; 4431 features — see
-/root/reference/experiments/fruit_reduced.py:1-74).
+"""Single-core probe: the flat multivariate path vs the bucketed 3-D
+oracle run per length group, on one of two 2-channel plans:
 
-Usage: python tools/mv_flat_probe.py [n_docs] [mean_len] [reps]
+* ``fruit_reduced`` (default): the reference fruit_reduced-equivalent
+  plan (of_weight(4,2) EXTENDED + indices weighting, 24-letter arctic
+  words, 2x CosWISS with 5 freqs, 7 sieves, NEW+INC+STD preps; 4431
+  features — reference ``experiments/fruit_reduced.py:1-74``);
+* ``mv_prep``: the benchmark's ``mv_plan(MV_PREP)`` (MAV(4) in front,
+  99 features) — MAV has no flat kernel, so the flat path runs it
+  through the generic per-length-group prep adapter.
+
+Usage: python tools/mv_flat_probe.py [n_docs] [mean_len] [reps] [plan]
 
 Prints per-path wall (min over reps), points/s, and the max abs/rel
 deviation between the two paths' features (should be ~1e-9-grade carry
-rounding only).  Run warm, min-of-N — this host swings 3-5x.
+rounding only).  Run warm, min-of-N — shared hosts swing 3-5x.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-from fruits_spark.engine.executor import (
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from fruits_spark.engine.executor import (  # noqa: E402
     compute_features_block,
     compute_features_flat,
-    plan_is_flat,
 )
-from fruits_spark.kernels.segments import run_bucketed  # noqa: F401 (doc)
-from fruits_spark.plan import CosWISSSpec, FruitPlan, ISSSpec, Prep, Sieve, Slice
-from fruits_spark.words import W, alternate_sign, of_weight
+from fruits_spark.plan import (  # noqa: E402
+    CosWISSSpec, FruitPlan, ISSSpec, Prep, Sieve, Slice,
+)
+from fruits_spark.words import W, alternate_sign, of_weight  # noqa: E402
 
 # raw q_values instead of the experiment's fitted (0.5, 1.0) band:
 # op-count-identical sieve work without needing a fit sample here
@@ -81,10 +89,15 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 800
     mean_len = int(sys.argv[2]) if len(sys.argv) > 2 else 260
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    which = sys.argv[4] if len(sys.argv) > 4 else "fruit_reduced"
     d = 2
-    fplan = fruit_reduced_plan()
-    assert fplan.n_features() == 4431
-    assert plan_is_flat(fplan, n_dims=d)
+    if which == "mv_prep":
+        from perfbench.plans import MV_PREP, mv_plan
+
+        fplan = mv_plan(MV_PREP)
+    else:
+        fplan = fruit_reduced_plan()
+        assert fplan.n_features() == 4431
 
     rng = np.random.default_rng(99)
     lengths = rng.integers(mean_len // 2, mean_len * 3 // 2 + 1, size=n)
