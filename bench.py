@@ -26,8 +26,8 @@ interleaved pairs (median of per-pair ratios) unless
 SPARK_GRAFT_SCALING=0.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_DOCS (override row
-     count), SPARK_GRAFT_SCALING (default 1).
+     SPARK_GRAFT_CPUS (default os.cpu_count()), SPARK_GRAFT_BENCH_DOCS
+     (override row count), SPARK_GRAFT_SCALING (default 1).
 """
 
 from __future__ import annotations
@@ -241,7 +241,7 @@ def run_at(master_cpus: int, n_docs: int, tok_path: str) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else 0.1
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", int(sf * 1_000_000)))

@@ -17,7 +17,9 @@ Iceberg runtime in this sandbox, same seam as io.py).
 Protocol (crash-safe, same shape as the lineage retire swap):
 
 1. measure the live directory; if already at or below the bin-packed
-   target file count, do nothing (idempotent, cheap to schedule);
+   target file count, or at one file per leaf partition directory (the
+   best a partitioned rewrite can reach), do nothing (idempotent, cheap
+   to schedule);
 2. read + ``coalesce(target)`` + write to the staging dir (coalesce,
    not repartition: bin-packing must not shuffle — it only narrows the
    write parallelism of a scan);
@@ -204,16 +206,17 @@ def compact_dir(
                 "skipped": True}
     with dir_lock(path):
         recover_dir(path, have_lock=True)
-        before = count_data_files(path)
+        snapshot = _list_data_files(path)
+        before = len(snapshot)
         nbytes = dir_data_bytes(path)
+        target = max(1, math.ceil(nbytes / target_file_bytes))
         # per-partition-dir floor: coalesce packs within each hive
         # partition independently, so the best reachable count is one
         # file per leaf partition directory
-        target = max(1, math.ceil(nbytes / target_file_bytes))
-        if before <= target or before <= 1:
+        leaves = len({os.path.dirname(f) for f in snapshot})
+        if before <= max(target, leaves):
             return {"files_before": before, "files_after": before,
                     "bytes": nbytes, "skipped": True}
-        snapshot = _list_data_files(path)
         df = spark.read.parquet(path)
         staged, old = staged_path(path), old_path(path)
         for p in (staged, old):

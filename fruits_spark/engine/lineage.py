@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_SCHEMA = (
@@ -109,26 +110,33 @@ def commit_cells(
     from .compact import dir_lock
 
     data_path = os.path.join(base, f"tier={tier}", f"run={run_id}")
-    cells = cells.cache()
-    n = cells.count()
-    if n == 0:
-        cells.unpersist()
-        return 0
-    with dir_lock(data_path, shared=True):
-        cells.write.mode("append").parquet(data_path)
-    manifest = cells.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(tier).alias("tier"),
-        "source",
-        "bucket",
-        F.col("n_docs").cast("long"),
-        F.col("sum_tok").cast("long").alias("n_tokens"),
-        (F.col("sum_tok").cast("long") * n_points_per_doc).alias("n_points"),
-    )
-    with manifest_write_lock(base, shared=True):
-        manifest.write.mode("append").parquet(manifest_path(base))
-    cells.unpersist()
-    return n
+    # Spark finds cached data by plan, so unpersisting an input the
+    # caller had cached would evict the caller's own table: cache (and
+    # unpersist) only an input that was not cached already
+    own_cache = cells.storageLevel == StorageLevel.NONE
+    if own_cache:
+        cells = cells.cache()
+    try:
+        n = cells.count()
+        if n == 0:
+            return 0
+        with dir_lock(data_path, shared=True):
+            cells.write.mode("append").parquet(data_path)
+        manifest = cells.select(
+            F.lit(run_id).alias("run_id"),
+            F.lit(tier).alias("tier"),
+            "source",
+            "bucket",
+            F.col("n_docs").cast("long"),
+            F.col("sum_tok").cast("long").alias("n_tokens"),
+            (F.col("sum_tok").cast("long") * n_points_per_doc).alias("n_points"),
+        )
+        with manifest_write_lock(base, shared=True):
+            manifest.write.mode("append").parquet(manifest_path(base))
+        return n
+    finally:
+        if own_cache:
+            cells.unpersist()
 
 
 def run_metrics(spark: SparkSession, base: str, run_id: str) -> DataFrame:
