@@ -1,12 +1,16 @@
 """Small-file compaction for the tiered store (maintenance op).
 
-Incremental runs accrue files: every :func:`lineage.commit_cells` batch
-appends parquet files to ``tier=<t>/run=<id>``, so a run resumed in many
-slices — or a streaming maintainer committing per micro-batch — leaves a
-directory of files far smaller than the scan-efficient size.  At corpus
-scale that is the classic small-file problem: a 1000-executor scan of a
-tier pays an open + footer read per file, and the namenode/listing cost
-grows with file count, not data size.
+Every :func:`lineage.commit_cells` batch appends its cells to
+``tier=<t>/run=<id>`` already packed to :func:`file_count` files of
+~``DEFAULT_TARGET_FILE_BYTES``, so a run committed once per tier needs
+no compaction (:func:`compact_dir` skips it without a Spark job).  Files
+still accrue when a run is resumed in many slices, or when a streaming
+maintainer commits per micro-batch: each batch adds its own files, and
+the directory ends up with many files far smaller than the
+scan-efficient size.  At corpus scale that is the classic small-file
+problem: a 1000-executor scan of a tier pays an open + footer read per
+file, and the namenode/listing cost grows with file count, not data
+size.
 
 This module is the parquet-branch analogue of Iceberg's
 ``rewrite_data_files`` maintenance procedure (the catalog branch of
@@ -61,6 +65,19 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_TARGET_FILE_BYTES = 128 << 20
+
+
+def file_count(
+    nbytes: int,
+    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    max_files: int | None = None,
+) -> int:
+    """Files to write ``nbytes`` in at ~``target_file_bytes`` each: at
+    least one, and at most ``max_files`` (a ``coalesce`` cannot raise
+    a write's partition count, and an unknown plan size — Spark reports
+    ``Long.MaxValue`` — must not reach ``coalesce(int)``)."""
+    k = max(1, math.ceil(nbytes / target_file_bytes))
+    return k if max_files is None else min(k, max_files)
 
 
 def _sibling(path: str, suffix: str) -> str:
@@ -209,7 +226,7 @@ def compact_dir(
         snapshot = _list_data_files(path)
         before = len(snapshot)
         nbytes = dir_data_bytes(path)
-        target = max(1, math.ceil(nbytes / target_file_bytes))
+        target = file_count(nbytes, target_file_bytes)
         # per-partition-dir floor: coalesce packs within each hive
         # partition independently, so the best reachable count is one
         # file per leaf partition directory

@@ -14,6 +14,13 @@ a cell is only considered done once its manifest row is visible, making
 the data write idempotent (duplicate data from a crashed attempt is
 ignored because its manifest row was never committed; readers go through
 ``completed_cells``).
+
+Each commit is sized for the store: its cell count comes from an
+``Observation`` on the data write, not a ``count()`` job, and both
+writes are coalesced to :func:`~fruits_spark.engine.compact.file_count`
+files, so a run committed once per tier leaves nothing to compact.
+Manifest reads pass ``MANIFEST_SCHEMA`` and so start no footer
+inference job.
 """
 
 from __future__ import annotations
@@ -21,7 +28,7 @@ from __future__ import annotations
 import os
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 MANIFEST_SCHEMA = (
     "run_id string, tier string, source string, bucket int, "
@@ -31,6 +38,11 @@ MANIFEST_SCHEMA = (
 
 def manifest_path(base: str) -> str:
     return os.path.join(base, "_lineage")
+
+
+def read_manifest(spark: SparkSession, path: str) -> DataFrame:
+    """The manifest at ``path`` with its known schema (no inference job)."""
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def recover_manifest(base: str, clean: bool = False) -> None:
@@ -76,7 +88,7 @@ def completed_cells(spark: SparkSession, base: str, run_id: str, tier: str) -> D
     recover_manifest(base)
     path = manifest_path(base)
     try:
-        m = spark.read.parquet(path)
+        m = read_manifest(spark, path)
     except Exception:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     return m.where((F.col("run_id") == run_id) & (F.col("tier") == tier))
@@ -101,13 +113,24 @@ def commit_cells(
     """Write pending cell data, then commit their manifest rows.
     Returns the number of cells committed.
 
+    The commit works from a built cache of ``cells``: an input the
+    caller cached is used as is (and its cache built first if no action
+    has run on it yet); any other input is cached here, built, and
+    released at the end.  The built cache's size in bytes and partition
+    count give ``k = compact.file_count(...)``, and both the data and
+    the manifest rows are written through ``coalesce(k)``, so one commit
+    adds files of about the compaction target size.  The cell count is
+    an ``Observation`` on the data write: over a caller's built cache a
+    commit is two Spark jobs, the data write and the manifest write.
+    An empty input writes nothing.
+
     Both appends take SHARED advisory locks (the data dir's compaction
     lock, the manifest's rewrite lock): concurrent commits proceed
     freely, but a commit can never interleave with an exclusive rewriter
     (:func:`fruits_spark.engine.compact.compact_dir`,
     :func:`compact_manifest` / :func:`retire_runs`) whose
     snapshot-then-swap would silently drop the freshly appended files."""
-    from .compact import dir_lock
+    from .compact import dir_lock, file_count
 
     data_path = os.path.join(base, f"tier={tier}", f"run={run_id}")
     # Spark finds cached data by plan, so unpersisting an input the
@@ -117,11 +140,15 @@ def commit_cells(
     if own_cache:
         cells = cells.cache()
     try:
-        n = cells.count()
-        if n == 0:
+        nbytes, parts = _built_cache_size(cells)
+        if nbytes == 0:
             return 0
+        k = file_count(nbytes, max_files=parts)
+        seen = Observation()
         with dir_lock(data_path, shared=True):
-            cells.write.mode("append").parquet(data_path)
+            (cells.observe(seen, F.count(F.lit(1)).alias("n"))
+             .coalesce(k).write.mode("append").parquet(data_path))
+        n = seen.get["n"]
         manifest = cells.select(
             F.lit(run_id).alias("run_id"),
             F.lit(tier).alias("tier"),
@@ -132,17 +159,37 @@ def commit_cells(
             (F.col("sum_tok").cast("long") * n_points_per_doc).alias("n_points"),
         )
         with manifest_write_lock(base, shared=True):
-            manifest.write.mode("append").parquet(manifest_path(base))
+            manifest.coalesce(k).write.mode("append").parquet(
+                manifest_path(base))
         return n
     finally:
         if own_cache:
             cells.unpersist()
 
 
+def _built_cache_size(cells: DataFrame) -> tuple[int, int]:
+    """(bytes, partitions) of the cached ``cells``, from the in-memory
+    relation's statistics.  Builds the cache first (one job) if no
+    action has run on it: an unbuilt cache reports its plan's estimate,
+    often ``Long.MaxValue``, and counting its partitions would run the
+    plan's shuffle stages anyway.  The relation comes from the cache
+    manager: a DataFrame that ran an action before it was cached keeps
+    an uncached plan of its own."""
+    cache_manager = cells.sparkSession._jsparkSession.sharedState() \
+        .cacheManager()
+    rel = cache_manager.lookupCachedData(cells._jdf).get() \
+        .cachedRepresentation()
+    buffers = rel.cacheBuilder()
+    if not buffers.isCachedColumnBuffersLoaded():
+        cells.count()  # the cache build, not a row count
+    return (int(rel.computeStats().sizeInBytes()),
+            buffers.cachedColumnBuffers().getNumPartitions())
+
+
 def run_metrics(spark: SparkSession, base: str, run_id: str) -> DataFrame:
     """Aggregate manifest metrics per tier for a run."""
     recover_manifest(base)
-    m = spark.read.parquet(manifest_path(base))
+    m = read_manifest(spark, manifest_path(base))
     return (
         m.where(F.col("run_id") == run_id)
         .groupBy("tier")
@@ -217,7 +264,7 @@ def _retire_locked(
                 shutil.rmtree(p)
     path = manifest_path(base)
     try:
-        m = spark.read.parquet(path)
+        m = read_manifest(spark, path)
     except Exception:
         return
     kept = m.where(~F.col("run_id").isin(run_ids))
@@ -249,17 +296,17 @@ def compact_manifest(spark: SparkSession, base: str, target_files: int = 1) -> d
     commit ever made.  Compaction is the same staged-swap used by
     retirement (shared lock, shared staging names, healed by
     :func:`recover_manifest`); on Iceberg deployments the equivalent is
-    ``CALL <catalog>.system.rewrite_manifests``.  Returns file counts
-    before/after."""
+    ``CALL <catalog>.system.rewrite_manifests``.  A manifest already at
+    ``target_files`` or fewer is left as it is, without a Spark job.
+    Returns file counts before/after."""
     from .compact import count_data_files
 
     with manifest_write_lock(base):
         recover_manifest(base, clean=True)
         path = manifest_path(base)
         before = count_data_files(path)
-        try:
-            m = spark.read.parquet(path)
-        except Exception:
+        if before <= target_files:  # packed already, or no manifest
             return {"files_before": before, "files_after": before}
+        m = read_manifest(spark, path)
         _swap_in_manifest(path, m.coalesce(target_files))
         return {"files_before": before, "files_after": count_data_files(path)}
