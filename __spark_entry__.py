@@ -6,7 +6,7 @@ SURVEY.md §2 (all ISS semirings incl. arctic-argmax and bayesian,
 EXTENDED prefix CSE, chained ISS, CosWISS, every preparateur incl. the
 DIM/NEW wrappers, every sieve incl. INC/INT wrappers and the AVG->CUR
 quirk, all weightings, generic-letter words, negative letters,
-multivariate tensors, coquantiles, tier rollups batch/salted/streaming
+multivariate tensors, coquantiles, tier rollups batch/streaming
 + coarser-from-finer re-agg, gap-fill, forward-fill, as-of join, codec
 roundtrips doc- and tier-level, resolution ops (downsample/upsample/
 lengthen/implant_stuttering), dedup exact/jaccard/minhash-LSH/simhash/
@@ -783,7 +783,7 @@ GROUP BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# rollup / gap-fill / salting
+# rollup / gap-fill
 # ---------------------------------------------------------------------------
 
 N_BUCKETS = 8
@@ -793,7 +793,16 @@ def _bucket_expr():
     return (F.col("doc_id") % N_BUCKETS).cast("int")
 
 
-def _rolled(spark, sf_dir, salted: bool):
+def q_rollup_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tier rollup: per (source, doc bucket) — doc count, token volume,
+    sum/max of END([11]).  Rows with bucket + 100 are the REAL-TIME
+    continuous-aggregate view (rollup.realtime_tier) of the same tier
+    rebuilt from cells materialized only for buckets <= 3 plus an
+    on-the-fly rollup of the tail past each source's watermark — it
+    must reproduce the full rollup exactly (the oracle recomputes those
+    rows straight from the tokens), which gates the watermark join and
+    the null-watermark (no materialized cells) path.  Rows with bucket
+    + 200 are the same tier built through ``rollup_tier_salted``."""
     from fruits_spark.engine import rollup as RU
     from fruits_spark.engine.executor import extract_features, feature_columns
     from fruits_spark.plan import ISSSpec, Sieve, Slice, FruitPlan
@@ -810,49 +819,26 @@ def _rolled(spark, sf_dir, salted: bool):
         toks, fplan, keep=("doc_id", "source", "n_tok")
     )
     tier = RU.Tier("t1k", 1_000)
-    fn = RU.rollup_tier_salted if salted else RU.rollup_tier
-    rolled = fn(feats, tier, N_BUCKETS, fc, bucket_expr=_bucket_expr())
-    return rolled, fc, feats
+    rolled = RU.rollup_tier(feats, tier, N_BUCKETS, fc,
+                            bucket_expr=_bucket_expr())
 
-
-def _rollup_select(rolled, fc):
-    return rolled.select(
-        "source",
-        "bucket",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("sum_tok").cast("long").alias("sum_tok"),
-        F.col(f"sum_{fc[0]}").cast("long").alias("sum_end_11"),
-        F.col(f"max_{fc[0]}").cast("long").alias("max_end_11"),
-    )
-
-
-def q_rollup_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tier rollup: per (source, doc bucket) — doc count, token volume,
-    sum/max of END([11]).  Rows with bucket >= 100 are the REAL-TIME
-    continuous-aggregate view (rollup.realtime_tier) of the same tier
-    rebuilt from cells materialized only for buckets <= 3 plus an
-    on-the-fly rollup of the tail past each source's watermark — it
-    must reproduce the full rollup exactly (the oracle recomputes those
-    rows straight from the tokens), which gates the watermark join and
-    the null-watermark (no materialized cells) path."""
-    from fruits_spark.engine import rollup as RU
-
-    rolled, fc, feats = _rolled(spark, sf_dir, salted=False)
-    out = _rollup_select(rolled, fc)
+    def band(cells, offset):
+        return cells.select(
+            "source",
+            (F.col("bucket") + offset).cast("int").alias("bucket"),
+            F.col("n_docs").cast("long").alias("n_docs"),
+            F.col("sum_tok").cast("long").alias("sum_tok"),
+            F.col(f"sum_{fc[0]}").cast("long").alias("sum_end_11"),
+            F.col(f"max_{fc[0]}").cast("long").alias("max_end_11"),
+        )
 
     materialized = rolled.where(F.col("bucket") <= 3)
-    rt = RU.realtime_tier(materialized, feats, RU.Tier("t1k", 1_000),
-                          N_BUCKETS, fc, bucket_expr=_bucket_expr())
-    rt_rows = _rollup_select(rt, fc).withColumn(
-        "bucket", (F.col("bucket") + 100).cast("int")
-    )
-    return out.unionByName(rt_rows)
-
-
-def q_rollup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-phase (salted) rollup — must equal q_rollup_tier."""
-    rolled, fc, _ = _rolled(spark, sf_dir, salted=True)
-    return _rollup_select(rolled, fc)
+    rt = RU.realtime_tier(materialized, feats, tier, N_BUCKETS, fc,
+                          bucket_expr=_bucket_expr())
+    salted = RU.rollup_tier_salted(feats, tier, N_BUCKETS, fc,
+                                   bucket_expr=_bucket_expr())
+    return band(rolled, 0).unionByName(band(rt, 100)).unionByName(
+        band(salted, 200))
 
 
 SQL_ROLLUP = f"""
@@ -876,19 +862,19 @@ GROUP BY source, bucket
 """
 
 # rollup_tier additionally emits the realtime_tier reconstruction as
-# bucket+100 sentinel rows (see q_rollup_tier); rollup_salted keeps the
-# plain 40-row oracle above.
-SQL_ROLLUP_RT = SQL_ROLLUP + """
+# bucket+100 sentinel rows and the rollup_tier_salted build as bucket+200
+# rows (see q_rollup_tier); both must equal the plain 40-row oracle above.
+SQL_ROLLUP_RT = SQL_ROLLUP + "".join(f"""
 UNION ALL
 SELECT source,
-       CAST(bucket + 100 AS INT) AS bucket,
+       CAST(bucket + {offset} AS INT) AS bucket,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_tok) AS BIGINT) AS sum_tok,
        CAST(SUM(end_11) AS BIGINT) AS sum_end_11,
        CAST(MAX(end_11) AS BIGINT) AS max_end_11
 FROM perdoc
 GROUP BY source, bucket
-"""
+""" for offset in (100, 200))
 
 
 def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3627,7 +3613,7 @@ GROUP BY source
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full ISS rollup pipeline (EXTENDED reals + arctic words,
-    4 sieves, salted t1k rollup, gap-fill) on the sf0.001 token table."""
+    4 sieves, t1k rollup, gap-fill) on the sf0.001 token table."""
     from fruits_spark.engine import rollup as RU
     from fruits_spark.engine.executor import extract_features, feature_columns
     from fruits_spark.plan import ISSSpec, Prep, Sieve, Slice, FruitPlan
@@ -3676,7 +3662,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "prep_nrm_ppv": q_prep_nrm_ppv,
         "iss_argmax": q_iss_argmax,
         "rollup_tier": q_rollup_tier,
-        "rollup_salted": q_rollup_salted,
         "gapfill": q_gapfill,
         "events_rollup": q_events_rollup,
         "events_asof": q_events_asof,
@@ -3732,7 +3717,6 @@ def oracle_sql() -> dict[str, str]:
         "prep_nrm_ppv": SQL_PREP_NRM_PPV,
         "iss_argmax": SQL_ISS_ARGMAX,
         "rollup_tier": SQL_ROLLUP_RT,
-        "rollup_salted": SQL_ROLLUP,
         "gapfill": SQL_GAPFILL,
         "events_rollup": SQL_EVENTS_ROLLUP,
         "events_asof": SQL_EVENTS_ASOF,

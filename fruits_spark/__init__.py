@@ -12,7 +12,7 @@ Layers:
   * :mod:`fruits_spark.plan`    — declarative pipeline spec ("Fruit"
     equivalent) compiled to a DataFrame DAG.
   * :mod:`fruits_spark.engine`  — Spark session, rollup tiers, gap-fill,
-    skew salting, codecs, lineage checkpoints.
+    skew-immune one-shuffle rollups, codecs, lineage checkpoints.
 """
 
 __version__ = "0.1.0"

@@ -1,2 +1,2 @@
 """Spark execution layer: session, feature extraction, tier rollups,
-gap-fill, skew salting, codecs, lineage checkpoints."""
+gap-fill, codecs, lineage checkpoints."""

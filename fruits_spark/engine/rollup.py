@@ -14,9 +14,11 @@ Scale design notes (100 TB / 10^12 sequences):
     rows x (few keys + k doubles) — the rollup shuffle volume is
     O(docs x features x 8B), shrunk further by partial aggregation to
     O(cells) per map task.
-  * Zipf-skewed ``source`` keys are salted (``salt_rollup``): a two-phase
-    aggregate that shards hot groups before the final combine, keeping
-    the max/median partition ratio bounded.
+  * Zipf-skewed ``source`` keys need no salt phase: every tier
+    aggregate is algebraic, so map-side partial aggregation already
+    bounds a hot cell's reducer input at one row per map task.
+    ``rollup_tier_salted`` is kept as a name and runs the same
+    one-shuffle plan.
   * gap-fill builds the full (source x bucket) spine with ``sequence()``
     + ``explode`` (a few thousand rows — broadcastable) and left-joins
     facts onto it.
@@ -138,23 +140,18 @@ def rollup_tier_salted(
     n_salts: int = 16,
     bucket_expr=None,
 ) -> DataFrame:
-    """Skew-safe two-phase rollup: pre-aggregate on (source, bucket, salt)
-    so a hot source fans out over ``n_salts`` reducers, then combine.
-    Identical results to :func:`rollup_tier`; use when one source holds a
-    large share of documents (FIXTURES.md T2)."""
-    partial = ["count(1) AS n_docs", "sum(n_tok) AS sum_tok"]
-    final = ["sum(n_docs) AS n_docs", "sum(sum_tok) AS sum_tok"]
-    for c in feature_cols:
-        partial.append(f"sum({c}) AS sum_{c}")
-        partial.append(f"max({c}) AS max_{c}")
-        final.append(f"sum(sum_{c}) AS sum_{c}")
-        final.append(f"max(max_{c}) AS max_{c}")
-    b = bucket_expr if bucket_expr is not None else bucket_col(n_buckets)
-    salted_in = features.withColumn("bucket", b).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("doc_id"), F.lit(1)), F.lit(n_salts))
-    )
-    salted = _sql_agg(salted_in, ["source", "bucket", "_salt"], partial)
-    return _sql_agg(salted, ["source", "bucket"], final).drop("_salt")
+    """The skew-safe tier rollup: the one-shuffle plan of
+    :func:`rollup_tier`, with the same output.
+
+    ``n_salts`` is ignored.  A salt phase (pre-aggregate on ``(source,
+    bucket, salt)``, then combine) adds a second wide shuffle and buys
+    nothing for these aggregates: count/sum/max are algebraic, so
+    Catalyst's map-side partial aggregation already cuts each map task's
+    output to one row per cell, and a hot source costs its reducer
+    O(map tasks) rows, not O(docs) (BENCH.md "Skew, measured")."""
+    del n_salts
+    return rollup_tier(features, tier, n_buckets, feature_cols,
+                       bucket_expr=bucket_expr)
 
 
 def bucket_spine(

@@ -65,7 +65,6 @@ def main() -> None:
     ap.add_argument("--n-docs-synth", type=int, default=0,
                     help="synthesize a token table of this size if no --input")
     ap.add_argument("--buckets-t1k", type=int, default=1024)
-    ap.add_argument("--salts", type=int, default=16)
     ap.add_argument("--master", default=None)
     ap.add_argument("--retire-runs", default="",
                     help="comma-separated run_ids whose tier partitions "
@@ -143,9 +142,7 @@ def main() -> None:
     for tier, nb in tiers:
         t_tier = time.time()
         if tier.name == "t1k":
-            rolled = RU.rollup_tier_salted(
-                feats, tier, nb, fc, n_salts=args.salts
-            ).cache()
+            rolled = RU.rollup_tier_salted(feats, tier, nb, fc).cache()
             rolled_t1k = rolled
         else:
             rolled = RU.reagg_tier(

@@ -94,6 +94,73 @@ def test_rollup_and_salted_rollup_agree(spark, token_df):
     pd.testing.assert_frame_equal(plain, salted, check_exact=False, rtol=1e-9)
 
 
+# --- the tier rollup is one shuffle ------------------------------------------
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted through a job group and
+    the status tracker (works with the UI off)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"rollup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store hears of jobs through the listener bus: drain it
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _final_plan(df) -> str:
+    """The physical plan ``df`` ran, after adaptive execution settled."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_salted_rollup_runs_one_shuffle(spark, token_df):
+    feats = EX.extract_features(token_df, PLAN)
+    fcols = EX.feature_columns(PLAN)
+    rolled = RU.rollup_tier_salted(feats, RU.Tier("t1k", 1_000), 8, fcols,
+                                   n_salts=4)
+    plan = _final_plan(rolled)
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "_salt" not in plan
+
+
+def test_salted_rollup_runs_as_many_jobs_as_plain(spark, token_df):
+    feats = EX.extract_features(token_df, PLAN).cache()
+    feats.count()
+    fcols = EX.feature_columns(PLAN)
+    tier = RU.Tier("t1k", 1_000)
+    jobs = {}
+    for name, fn in (("plain", RU.rollup_tier),
+                     ("salted", RU.rollup_tier_salted)):
+        cells = fn(feats, tier, 8, fcols).cache()
+        jobs[name] = _jobs(spark, cells.count)
+        cells.unpersist(blocking=True)
+    feats.unpersist(blocking=True)
+    assert jobs["salted"] == jobs["plain"], jobs
+
+
+def test_salted_rollup_equals_plain_exactly(spark, token_df):
+    feats = EX.extract_features(token_df, PLAN)
+    fcols = EX.feature_columns(PLAN)
+    tier = RU.Tier("t1k", 1_000)
+    key = ["source", "bucket"]
+    plain = RU.rollup_tier(feats, tier, 8, fcols).toPandas()
+    salted = RU.rollup_tier_salted(feats, tier, 8, fcols).toPandas()
+    pd.testing.assert_frame_equal(
+        plain.sort_values(key).reset_index(drop=True),
+        salted.sort_values(key).reset_index(drop=True),
+        check_exact=True,
+    )
+
+
 def test_gap_fill_completes_spine(spark, token_df):
     feats = EX.extract_features(token_df, PLAN)
     fcols = EX.feature_columns(PLAN)

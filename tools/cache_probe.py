@@ -23,8 +23,7 @@ def stage_times(spark, toks, fplan, fc):
     feats.count()
     t_ex = time.time() - t0
     t0 = time.time()
-    t1k = RU.rollup_tier_salted(feats, RU.Tier("t1k", 1000), 1024, fc,
-                                n_salts=16).cache()
+    t1k = RU.rollup_tier_salted(feats, RU.Tier("t1k", 1000), 1024, fc).cache()
     t1k.count()
     t_t1k = time.time() - t0
     feats.unpersist()

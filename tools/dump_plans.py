@@ -52,13 +52,29 @@ def main() -> None:
         feats,
     ))
 
-    rolled = RU.rollup_tier_salted(feats, RU.Tier("t1k", 1000), 1024, fc,
-                                   n_salts=16)
+    for name in ("iss_multivariate", "iss_mv_weighted"):
+        mv = e.queries()[name](spark, sf)
+        plan = _trim_plan(mv)
+        if "Exchange" in plan:
+            raise SystemExit(f"{name}: the mv extract shuffles:\n{plan}")
+        sections.append((
+            f"Multivariate extract ({name})",
+            "The 2-channel array<array<double>> input is built in the "
+            "project over the scan and runs through the same one flat "
+            "mapInPandas body as univariate input (the mv prefix-CSE "
+            "trie); NO Exchange anywhere (asserted when this file is "
+            "generated).",
+            mv,
+        ))
+
+    rolled = RU.rollup_tier_salted(feats, RU.Tier("t1k", 1000), 1024, fc)
     sections.append((
-        "Salted tier rollup",
-        "Two HashAggregate pairs (partial+final per phase, map-side "
-        "combine from Catalyst); the only shuffles in the pipeline, and "
-        "they move per-doc reduced rows, never tokens.",
+        "Tier rollup (rollup_tier_salted)",
+        "ONE partial+final HashAggregate pair on (source, bucket) around "
+        "ONE Exchange: map-side partial aggregation cuts each map task "
+        "to one row per cell, so there is no salt phase (a hot cell's "
+        "reducer gets one row per map task).  The only shuffle in the "
+        "pipeline, and it moves per-cell partials, never tokens.",
         rolled,
     ))
 

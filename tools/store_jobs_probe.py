@@ -56,8 +56,7 @@ def _build_tiers(spark, docs, seed, partitions):
     toks = datagen.generate_spark(spark, docs, seed=seed,
                                   partitions=partitions).cache()
     t1k = RU.rollup_tier_salted(extract_features(toks, plan),
-                                RU.Tier("t1k", 1_000), N_BUCKETS, fc,
-                                n_salts=16).cache()
+                                RU.Tier("t1k", 1_000), N_BUCKETS, fc).cache()
     t100k = RU.reagg_tier(t1k, fc,
                           F.floor(F.col("bucket") / FACTOR).cast("int"))
     fill = {f"sum_{fc[0]}": 0}
