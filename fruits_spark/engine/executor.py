@@ -447,95 +447,29 @@ def _emit_level_flat(seg, cols: list, spec, src: _Source):
         return
     if spec.semiring not in ("reals", "arctic", "bayesian"):
         raise ValueError(f"unknown semiring {spec.semiring!r}")
-    if lookup is None:
-        yield from _emit_level_flat_cse(seg, cols, spec)
-        return
-    # weighted (total or not): prefix CSE, bit-identical to the
-    # per-word kernels (iss_flat / iss_flat_mv stay as the oracle the
-    # CSE is pinned against — see test_round5)
-    yield from _emit_level_flat_cse_weighted(seg, cols, spec, lookup)
+    yield from _emit_level_flat_cse(seg, cols, spec, lookup)
 
 
-def _emit_level_flat_cse(seg, cols: list, spec):
-    """Unweighted ISS with scan-level prefix CSE: the word list is a
-    trie; every distinct prefix's scan state is computed ONCE via DFS
-    (bit-identical ops to the per-word path).  This goes beyond the
-    reference's CachePlan, which dedups stream *emission* but re-runs
-    shared prefix scans per word (iss/iss.py:49-65)."""
-    from ..kernels import flat as KF
+def _emit_level_flat_cse(seg, cols: list, spec, lookup):
+    """ISS with scan-level prefix CSE, weighted (total or not) or
+    unweighted (``lookup is None``): the word list is a trie and every
+    distinct prefix's scan state is computed ONCE via DFS.  This goes
+    beyond the reference's CachePlan, which dedups stream *emission* but
+    re-runs shared prefix scans per word (iss/iss.py:49-65).
 
-    # emission indices per prefix, in plan label order.  A LIST per
-    # node: duplicate words in SINGLE mode each emit their own stream
-    # (PrefixPlan only zeroes duplicate depths in extended mode) — the
-    # shared node then yields once per owed index.
-    pplan = spec.plan()
-    emit_idx: dict[tuple, list[int]] = {}
-    i = 0
-    for wi, w in enumerate(spec.words):
-        depth = pplan.depth(wi) if pplan is not None else 1
-        letters = w.letters()
-        k = len(letters)
-        for j in range(k - depth + 1, k + 1):
-            emit_idx.setdefault(letters[:j], []).append(i)
-            i += 1
-    # trie children (deterministic order of first appearance)
-    children: dict[tuple, list] = {(): []}
-    for w in spec.words:
-        letters = w.letters()
-        for j in range(len(letters)):
-            node, nxt = letters[:j], letters[:j + 1]
-            kids = children.setdefault(node, [])
-            if nxt not in kids:
-                kids.append(nxt)
-            children.setdefault(nxt, [])
-
-    semiring = spec.semiring
-
-    def advance(state, letter):
-        # letter monomial over the column list in bucketed
-        # _pow_product / _linear_combo op order
-        if semiring == "reals":
-            if state is None:
-                tmp = KF._mul_letter_nd(None, cols, letter)
-            else:
-                # shift1 allocated tmp fresh -> in-place multiply is safe
-                # (cached trie states are never mutated); NOTE: fusing
-                # shift into the first multiply via offset views was
-                # measured ~1% SLOWER (unaligned SIMD) — keep unfused
-                tmp = KF._mul_letter_nd_owned(seg.shift1(state), cols, letter)
-            return seg.cumsum(tmp)
-        if semiring == "arctic":
-            tmp = (
-                state if state is not None else 0.0
-            ) + KF._lin_combo_nd(cols, letter)
-            return seg.runmax(tmp)
-        # bayesian
-        return seg.runmax(KF._mul_letter_nd(state, cols, letter))
-
-    def dfs(node, state):
-        for child in children[node]:
-            child_state = advance(state, child[-1])
-            for ei in emit_idx.get(child, ()):
-                yield ei, child_state
-            yield from dfs(child, child_state)
-
-    yield from dfs((), None)
-
-
-def _emit_level_flat_cse_weighted(seg, cols: list, spec, lookup):
-    """Weighted ISS (total or not) with scan-level prefix CSE — the
-    weighted twin of :func:`_emit_level_flat_cse`.  Trie nodes key on
-    (letter, alpha) PAIRS: two words share a prefix scan only when
-    letters and per-letter weighting exponents both agree (the forward
-    state carries ``exp(lookup * alpha)`` factors).  Emission
-    accounting mirrors PrefixPlan, which keys on letters alone: each
-    emitted prefix belongs to the first word that introduced it, so the
-    emission set and stream indices are exactly the per-word path's.
-    Per-node ops replicate the per-word kernels' op order
-    (``KF.iss_flat`` / ``iss_flat_mv``), so shared-prefix streams are
+    Trie nodes key on (letter, alpha) PAIRS: two words share a prefix
+    scan only when letters and per-letter weighting exponents both
+    agree (the forward state carries ``exp(lookup * alpha)`` factors);
+    unweighted, every alpha keys as 0.0 and the emitted scan doubles as
+    the forward state.  Emission accounting mirrors PrefixPlan, which
+    keys on letters alone: each emitted prefix belongs to the first word
+    that introduced it, so the emission set and stream indices are
+    exactly the per-word path's.  Per-node ops replicate the per-word
+    oracle's op order (``KF.iss_flat_mv``), so shared-prefix streams are
     bit-identical to running each word separately."""
     from ..kernels import flat as KF
 
+    weighted = lookup is not None
     pplan = spec.plan()
     emit_at: dict[tuple, list[int]] = {}
     children: dict[tuple, list] = {(): []}
@@ -545,16 +479,18 @@ def _emit_level_flat_cse_weighted(seg, cols: list, spec, lookup):
         if depth == 0:
             continue  # fully shared per PrefixPlan: emits nothing
         letters = w.letters()
-        # per-word kernels round alpha through float32 (iss_flat's
-        # `a = float32(alpha).astype(float64)`) — key on the SAME value
-        a64 = np.array(w.alpha, dtype=np.float32).astype(np.float64)
+        # the per-word oracle rounds alpha through float32
+        # (`a = float32(alpha).astype(float64)`) — key on the SAME value
+        alpha = w.alpha if weighted else [0.0] * len(letters)
+        a64 = np.array(alpha, dtype=np.float32).astype(np.float64)
         path = tuple(
             (letters[j], float(a64[j])) for j in range(len(letters))
         )
         k = len(path)
         for j in range(k - depth + 1, k + 1):
-            # a LIST per node: duplicate words in single mode each owe
-            # their own stream (see _emit_level_flat_cse)
+            # a LIST per node: duplicate words in SINGLE mode each owe
+            # their own stream (PrefixPlan only zeroes duplicate depths
+            # in extended mode) — the shared node yields once per index
             emit_at.setdefault(path[:j], []).append(i)
             i += 1
         for j in range(k):
@@ -583,24 +519,32 @@ def _emit_level_flat_cse_weighted(seg, cols: list, spec, lookup):
         return v
 
     def raw_of(state, letter, a_prev):
-        # state None <=> root (first letter of the word)
+        # letter monomial over the column list in bucketed
+        # _pow_product / _linear_combo op order; state None <=> root
+        # (first letter of the word)
         if semiring == "reals":
             if state is None:
                 return KF._mul_letter_nd(None, cols, letter)
+            # shift1 allocated fresh -> in-place ops are safe (cached
+            # trie states are never mutated); NOTE: fusing the shift
+            # into the first multiply via offset views was measured ~1%
+            # SLOWER (unaligned SIMD) — keep unfused
             r = KF._mul_letter_nd_owned(seg.shift1(state), cols, letter)
-            np.multiply(r, _fac("n", a_prev), out=r)
+            if weighted:
+                np.multiply(r, _fac("n", a_prev), out=r)
             return r
         if semiring == "arctic":
             combo = KF._lin_combo_nd(cols, letter)
             if state is None:
                 return combo
             r = state + combo
-            np.subtract(r, _fac("l", a_prev), out=r)
+            if weighted:
+                np.subtract(r, _fac("l", a_prev), out=r)
             return r
-        # bayesian (per-word seeds from exact ones; 1.0*x is bit-neutral)
-        base = np.ones_like(cols[0]) if state is None else state
-        r = KF._mul_letter_nd(base, cols, letter)
-        if state is not None:
+        # bayesian (the oracle seeds from exact ones; 1.0*x is
+        # bit-neutral).  Not in place: an all-zero letter returns state.
+        r = KF._mul_letter_nd(state, cols, letter)
+        if weighted and state is not None:
             r = r * _fac("n", a_prev)
         return r
 
@@ -613,19 +557,16 @@ def _emit_level_flat_cse_weighted(seg, cols: list, spec, lookup):
             return seg.runmax(raw + _fac("l", a_cur))
         return seg.runmax(raw * _fac("p", a_cur))
 
-    if spec.total:
+    if weighted and spec.total:
         # TOTAL weighting: the forward state is the post-scan C_k; the
         # per-node derived state D = unweight(shift/carry of C) is
         # shared across ALL children (per-word recomputes it per word).
-        # Recurrences mirror the per-word kernels' *_total branches.
+        # Recurrences mirror the per-word oracle's *_total branches.
         def letter_op(D, letter):
-            if semiring == "reals":
-                return KF._mul_letter_nd(D, cols, letter)
             if semiring == "arctic":
                 combo = KF._lin_combo_nd(cols, letter)
                 return combo if D is None else D + combo
-            base = np.ones_like(cols[0]) if D is None else D
-            return KF._mul_letter_nd(base, cols, letter)
+            return KF._mul_letter_nd(D, cols, letter)
 
         def derive(C, a_prev):
             if semiring == "reals":
@@ -664,13 +605,14 @@ def _emit_level_flat_cse_weighted(seg, cols: list, spec, lookup):
         for child in children[node]:
             letter, a_cur = child[-1]
             raw = raw_of(state, letter, a_prev)
-            eis = emit_at.get(child)
-            if eis:
-                st = emit_op(raw)
-                for ei in eis:
-                    yield ei, st
+            eis = emit_at.get(child, ())
+            st = emit_op(raw) if eis or not weighted else None
+            for ei in eis:
+                yield ei, st
             if children[child]:
-                yield from dfs(child, forward(raw, a_cur))
+                yield from dfs(
+                    child, forward(raw, a_cur) if weighted else st
+                )
 
     yield from dfs((), None)
 

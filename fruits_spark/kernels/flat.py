@@ -7,9 +7,11 @@ same quantities directly on Arrow's flattened list layout — ONE set of
 array ops per operator for the whole batch, independent of how lengths
 are distributed.  It is the engine's only production layout: a series is
 a list of per-dimension flat columns sharing one :class:`Seg` geometry
-(univariate = one column).  The bucketed kernels remain the
-reference-parity oracle for this module's tests, and the per-group body
-:func:`bucketed_rows_map` runs for preparateurs that have no flat form.
+(univariate = one column, with no univariate twin kernels).  The
+bucketed kernels remain the reference-parity oracle for this module's
+tests, :func:`iss_flat_mv` the per-word oracle of the executor's ISS
+prefix trie, and the per-group body :func:`bucketed_rows_map` runs for
+preparateurs that have no flat form.
 
 Primitives:
   * segmented cumsum    — global cumsum minus per-segment carry
@@ -381,45 +383,9 @@ def coquantile_flat(seg: Seg, x: np.ndarray, q: float,
 
 
 # ---------------------------------------------------------------------------
-# ISS letters and per-word scans (the executor's prefix tries build on the
-# n-d letter ops; iss_flat / iss_flat_mv are the per-word test oracles)
+# ISS letters and the per-word scan (the executor's one prefix trie builds
+# on the letter ops; iss_flat_mv is the per-word oracle it is pinned to)
 # ---------------------------------------------------------------------------
-
-def _pow1(x: np.ndarray, e: int) -> np.ndarray:
-    """x**e by repeated multiply/divide (reference op order).  Returns
-    ``x`` itself for e=1 — callers never mutate in place."""
-    e = int(e)
-    if e == 1:
-        return x
-    if e == 0:
-        return np.ones_like(x)
-    if e > 0:
-        out = x * x
-        for _ in range(e - 2):
-            out = out * x
-        return out
-    out = np.ones_like(x)
-    for _ in range(-e):
-        out = out / x
-    return out
-
-
-def _mul_letter(tmp: np.ndarray | None, x: np.ndarray, e: int) -> np.ndarray:
-    """tmp * x**e with tmp=None meaning the multiplicative identity."""
-    if tmp is None:
-        return _pow1(x, e)
-    e = int(e)
-    if e > 0:
-        for _ in range(e):
-            tmp = tmp * x
-        return tmp
-    if e < 0:
-        for _ in range(-e):
-            tmp = tmp / x
-    return tmp
-
-
-# --- multivariate letters: cols = one flat array per dimension -------------
 
 def _mul_letter_nd(tmp: np.ndarray | None, cols, exps) -> np.ndarray:
     """tmp * prod_d cols[d]**exps[d] with ``tmp=None`` the multiplicative
@@ -482,105 +448,6 @@ def _mul_chain(tmp: np.ndarray, w: np.ndarray, k: int,
     return tmp
 
 
-def iss_flat(
-    seg: Seg,
-    x: np.ndarray,
-    word: np.ndarray,
-    extended: int = 1,
-    semiring: str = "reals",
-    alpha: np.ndarray | None = None,
-    lookup: np.ndarray | None = None,
-    total: bool = False,
-) -> list[np.ndarray]:
-    """Univariate ISS on a flat batch; returns ``extended`` flat stream
-    arrays (shortest prefix first).  Same recurrences as
-    :func:`fruits_spark.kernels.iss.iss` with segmented scans."""
-    exps = word[:, 0]
-    k_total = len(exps)
-    weighted = lookup is not None
-    if weighted:
-        a = np.asarray(
-            alpha if alpha is not None else np.ones(k_total), dtype=np.float32
-        ).astype(np.float64)
-    results: list[np.ndarray] = []
-
-    if semiring == "reals":
-        if weighted and total:
-            tmp = None
-            for k in range(k_total):
-                tmp = _mul_letter(tmp, x, exps[k])
-                tmp = seg.cumsum(tmp * np.exp(lookup * a[k]))
-                if k_total - k <= extended:
-                    results.append(tmp * np.exp(-lookup * a[k]))
-                if k < k_total - 1:
-                    tmp = seg.shift1(tmp) * np.exp(-lookup * a[k])
-        else:
-            tmp = None
-            for k in range(k_total):
-                if k > 0:
-                    tmp = seg.shift1(tmp)
-                tmp = _mul_letter(tmp, x, exps[k])
-                if weighted and k > 0:
-                    tmp = tmp * np.exp(-lookup * a[k - 1])
-                if k_total - k <= extended:
-                    results.append(seg.cumsum(tmp))
-                if k < k_total - 1:
-                    if weighted:
-                        tmp = seg.cumsum(tmp * np.exp(lookup * a[k]))
-                    else:
-                        tmp = seg.cumsum(tmp)
-    elif semiring == "arctic":
-        tmp = np.zeros_like(x)
-        if weighted and total:
-            for k in range(k_total):
-                tmp = tmp + float(exps[k]) * x
-                tmp = seg.runmax(tmp + lookup * a[k])
-                if k_total - k <= extended:
-                    results.append(tmp - lookup * a[k])
-                if k < k_total - 1:
-                    tmp = tmp - lookup * a[k]
-        else:
-            for k in range(k_total):
-                tmp = tmp + float(exps[k]) * x
-                if weighted and k > 0:
-                    tmp = tmp - lookup * a[k - 1]
-                if k_total - k <= extended:
-                    results.append(seg.runmax(tmp))
-                if k < k_total - 1:
-                    if weighted:
-                        tmp = seg.runmax(tmp + lookup * a[k])
-                    else:
-                        tmp = seg.runmax(tmp)
-    elif semiring == "bayesian":
-        tmp = np.ones_like(x)
-        if weighted and total:
-            # mirror of the bucketed _iss_bayesian_total
-            # (iss.py:173-186); round-5 fix — this combo previously
-            # fell through to the non-total recurrence (wrong values)
-            for k in range(k_total):
-                tmp = tmp * _pow1(x, exps[k])
-                tmp = seg.runmax(tmp * np.exp(lookup * a[k]))
-                if k_total - k <= extended:
-                    results.append(tmp * np.exp(-lookup * a[k]))
-                if k < k_total - 1:
-                    tmp = tmp * np.exp(-lookup * a[k])
-        else:
-            for k in range(k_total):
-                tmp = tmp * _pow1(x, exps[k])
-                if weighted and k > 0:
-                    tmp = tmp * np.exp(-lookup * a[k - 1])
-                if k_total - k <= extended:
-                    results.append(seg.runmax(tmp))
-                if k < k_total - 1:
-                    if weighted:
-                        tmp = seg.runmax(tmp * np.exp(lookup * a[k]))
-                    else:
-                        tmp = seg.runmax(tmp)
-    else:
-        raise ValueError(semiring)
-    return results
-
-
 def iss_flat_mv(
     seg: Seg,
     cols,
@@ -591,13 +458,15 @@ def iss_flat_mv(
     lookup: np.ndarray | None = None,
     total: bool = False,
 ) -> list[np.ndarray]:
-    """Multivariate ISS on a flat batch: ``cols`` is one flat float64
-    array per input dimension (shared ``seg`` geometry), ``word`` a
-    (letters, dims) exponent matrix.  Same recurrences as
-    :func:`fruits_spark.kernels.iss.iss` on (n, d, l) blocks — the only
-    dimension-aware ops are the per-letter monomials
+    """Per-word ISS on a flat batch; returns ``extended`` flat stream
+    arrays (shortest prefix first).  ``cols`` is one flat float64 array
+    per input dimension (shared ``seg`` geometry; univariate = one
+    column), ``word`` a (letters, dims) exponent matrix.  Same
+    recurrences as :func:`fruits_spark.kernels.iss.iss` on (n, d, l)
+    blocks — the only dimension-aware ops are the per-letter monomials
     (:func:`_mul_letter_nd`) and arctic linear combinations
-    (:func:`_lin_combo_nd`), both in bucketed op order."""
+    (:func:`_lin_combo_nd`), both in bucketed op order.  Test oracle
+    only: production ISS runs through the executor's prefix trie."""
     word = np.asarray(word)
     if word.shape[1] > len(cols):
         raise ValueError(
@@ -661,8 +530,7 @@ def iss_flat_mv(
     elif semiring == "bayesian":
         tmp: np.ndarray | None = np.ones_like(cols[0])
         if weighted and total:
-            # mirror of the bucketed _iss_bayesian_total (see the
-            # univariate iss_flat note — round-5 fix)
+            # mirror of the bucketed _iss_bayesian_total (round-5 fix)
             for k in range(k_total):
                 tmp = _mul_letter_nd(tmp, cols, word[k])
                 tmp = seg.runmax(tmp * np.exp(lookup * a[k]))
@@ -749,68 +617,6 @@ def iss_arctic_argmax_flat(
                 seg.pos < seg.broadcast(c), prev, seg.broadcast(frozen)
             )
     return out
-
-
-def coswiss_flat(
-    seg: Seg,
-    x: np.ndarray,
-    word: np.ndarray,
-    freq: float,
-    exponent: int = 2,
-    total: bool = False,
-) -> np.ndarray:
-    """Univariate CosWISS on a flat batch (same recurrence as
-    :func:`fruits_spark.kernels.iss.coswiss` with segmented scans;
-    the angle grid uses each segment's own length)."""
-
-    from math import comb
-
-    exps = word[:, 0]
-    f32 = float(np.float32(freq))  # reference kernel takes freq as f4
-    denom = f32 * np.maximum(seg.lengths - 1, 1).astype(np.float64)
-    g = np.pi * seg.pos / seg.broadcast(denom)
-    sin_w, cos_w = np.sin(g), np.cos(g)
-    # gap-choice trie CSE over the binomial table (see iss.coswiss):
-    # rows sharing a gap-choice prefix share the scan chain up to that
-    # letter; DFS computes each prefix once, bit-identically (same
-    # per-path op order, same lexicographic accumulation order)
-    n_let = len(exps)
-    n_gaps = (n_let + 1 if total else n_let) - 1
-    result = np.zeros_like(x)
-
-    def step(state, k, sin_e, cos_e):
-        tmp = seg.shift1(state) if k > 0 else state
-        tmp = tmp * _pow1(x, exps[k])
-        for _ in range(sin_e):
-            tmp = tmp * sin_w
-        for _ in range(cos_e):
-            tmp = tmp * cos_w
-        return seg.cumsum(tmp)
-
-    def dfs(k, state, coeff, prev):
-        nonlocal result
-        if k == n_let:
-            tmp = state
-            if total:
-                for _ in range(exponent - prev):
-                    tmp = tmp * sin_w
-                for _ in range(prev):
-                    tmp = tmp * cos_w
-            result += coeff * tmp
-            return
-        right_sin = (exponent - prev) if k > 0 else 0
-        right_cos = prev if k > 0 else 0
-        if k < n_gaps:
-            for c in range(exponent + 1):
-                st = step(state, k, right_sin + (exponent - c),
-                          right_cos + c)
-                dfs(k + 1, st, coeff * comb(exponent, c), c)
-        else:
-            st = step(state, k, right_sin, right_cos)
-            dfs(k + 1, st, coeff, prev)
-
-    dfs(0, np.ones_like(x), 1, 0)
-    return result
 
 
 def coswiss_flat_multi_mv(

@@ -181,6 +181,6 @@ def test_coswiss_multi_duplicate_words_all_filled():
     wf = W("[1][1]").matrix
     mf = coswiss_flat_multi_mv(seg, [values], [wf, wf], 0.5, exponent=2,
                                total=True)
-    from fruits_spark.kernels.flat import coswiss_flat
-    sf = coswiss_flat(seg, values, wf, 0.5, exponent=2, total=True)
+    sf = coswiss_flat_multi_mv(seg, [values], [wf], 0.5, exponent=2,
+                               total=True)[0]
     assert np.array_equal(mf[0], sf) and np.array_equal(mf[1], sf)

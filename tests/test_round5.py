@@ -136,10 +136,13 @@ def test_multisine_noise_deterministic_and_seeded(spark):
 
 
 def test_weighted_cse_bit_identical_to_per_word():
-    """The weighted prefix-CSE emitter must reproduce the per-word
-    iss_flat/iss_flat_mv streams BIT-exactly (shared-prefix scans are
-    the same op sequences) for every semiring, univariate and mv, incl.
-    alternate-sign alphas and words sharing letters at depth 0."""
+    """The prefix-CSE emitter must reproduce the per-word iss_flat_mv
+    streams BIT-exactly (shared-prefix scans are the same op sequences)
+    for every semiring, weighted or not, univariate and mv, incl.
+    alternate-sign alphas, words sharing letters at depth 0 and
+    bayesian letters with exponent >= 2."""
+    import itertools
+
     import numpy as np
 
     from fruits_spark.engine.executor import (
@@ -155,7 +158,6 @@ def test_weighted_cse_bit_identical_to_per_word():
     np.cumsum(lengths, out=offsets[1:])
     seg = KF.Seg(offsets)
     cols = [rng.normal(size=int(offsets[-1])) for _ in range(2)]
-    x = cols[0]
 
     cases = [
         (tuple(of_weight(3, 1)), "reals", 1),
@@ -164,38 +166,41 @@ def test_weighted_cse_bit_identical_to_per_word():
         (tuple(of_weight(2, 2)), "arctic", 2),
         ((W("[1][11]"), W("[1][2]"), W("[1][11]")), "bayesian", 2),
         ((W("[11][1]"), W("[11][1][1]")), "bayesian", 1),
+        ((W("[1][11]"), W("[1][111]")), "bayesian", 1),
     ]
-    for words, semiring, d in cases:
-        for mode in ("single", "extended"):
-            for total in (False, True):
-                spec = ISSSpec(words, mode=mode, semiring=semiring,
-                               weighting="indices", total=total)
-                xp = cols[:d] if d > 1 else x
-                src = _Source(seg, cols[:d])
-                lookup = _lookup_flat(spec, seg, cols[:d], src)
-                got = dict(_emit_level_flat(seg, cols[:d], spec, src))
-                # per-word oracle (the pre-CSE path)
-                pplan = spec.plan()
-                want = {}
-                i = 0
-                for wi, w in enumerate(spec.words):
-                    depth = pplan.depth(wi) if pplan is not None else 1
-                    if depth == 0:
-                        continue
-                    alpha = np.array(w.alpha, dtype=np.float32)
-                    fn = KF.iss_flat_mv if d > 1 else KF.iss_flat
-                    for stream in fn(seg, xp, w.matrix, extended=depth,
-                                     semiring=semiring, alpha=alpha,
-                                     lookup=lookup, total=total):
-                        want[i] = stream
-                        i += 1
-                assert set(got) == set(want), (semiring, mode, d, total)
-                for k in want:
-                    np.testing.assert_array_equal(
-                        got[k], want[k],
-                        err_msg=f"{semiring}/{mode}/d={d}/total={total}"
-                                f"/stream {k}",
-                    )
+    for (words, semiring, d), weighting, mode, total in itertools.product(
+        cases, (None, "indices"), ("single", "extended"), (False, True)
+    ):
+        spec = ISSSpec(words, mode=mode, semiring=semiring,
+                       weighting=weighting, total=total)
+        src = _Source(seg, cols[:d])
+        lookup = _lookup_flat(spec, seg, cols[:d], src)
+        got = dict(_emit_level_flat(seg, cols[:d], spec, src))
+        # per-word oracle (the pre-CSE path)
+        pplan = spec.plan()
+        want = {}
+        i = 0
+        for wi, w in enumerate(spec.words):
+            depth = pplan.depth(wi) if pplan is not None else 1
+            if depth == 0:
+                continue
+            alpha = np.array(w.alpha, dtype=np.float32)
+            for stream in KF.iss_flat_mv(
+                seg, cols[:d], w.matrix, extended=depth,
+                semiring=semiring, alpha=alpha, lookup=lookup,
+                total=total,
+            ):
+                want[i] = stream
+                i += 1
+        assert set(got) == set(want), (
+            semiring, weighting, mode, d, total
+        )
+        for k in want:
+            np.testing.assert_array_equal(
+                got[k], want[k],
+                err_msg=f"{semiring}/{weighting}/{mode}/d={d}"
+                        f"/total={total}/stream {k}",
+            )
 
 
 def test_unweighted_cse_duplicate_words_single_mode():
@@ -248,10 +253,9 @@ def test_weighted_total_flat_matches_bucketed_all_semirings():
     for semiring in ("reals", "arctic", "bayesian"):
         for d, word in ((1, W("[1][11][1]")), (2, W("[1][12][2]"))):
             a32 = np.array(word.alpha, dtype=np.float32)
-            fn = KF.iss_flat_mv if d > 1 else KF.iss_flat
-            xp = cols[:d] if d > 1 else cols[0]
-            flat = fn(seg, xp, word.matrix, extended=2, semiring=semiring,
-                      alpha=a32, lookup=lk_flat, total=True)
+            flat = KF.iss_flat_mv(seg, cols[:d], word.matrix, extended=2,
+                                  semiring=semiring, alpha=a32,
+                                  lookup=lk_flat, total=True)
             for i in range(len(lengths)):
                 s, e = offsets[i], offsets[i + 1]
                 if e == s:
