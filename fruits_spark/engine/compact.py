@@ -18,7 +18,7 @@ This module is the parquet-branch analogue of Iceberg's
 ``CALL <catalog>.system.rewrite_data_files(table => …)`` instead — no
 Iceberg runtime in this sandbox, same seam as io.py).
 
-Protocol (crash-safe, same shape as the lineage retire swap):
+Protocol (crash-safe; every store directory uses it, the manifest too):
 
 1. measure the live directory; if already at or below the bin-packed
    target file count, or at one file per leaf partition directory (the
@@ -40,13 +40,13 @@ filter and parse as partition dirs.)
 Concurrency contract (three parties, one advisory ``flock`` per
 directory — the lock file is itself dot-prefixed):
 
-* **compactors** take the lock EXCLUSIVE for the whole
-  measure-stage-swap critical section;
-* **appenders** (:func:`lineage.commit_cells` data writes) take it
-  SHARED around their append — concurrent commits proceed freely, but a
-  commit can never land files between a compactor's snapshot and its
-  live->old rename (which would silently delete the new cells while
-  their manifest rows survive);
+* **compactors** (and :func:`lineage.retire_runs`) take the lock
+  EXCLUSIVE for the whole measure-stage-swap critical section;
+* **appenders** (:func:`lineage.commit_cells` data and manifest
+  writes) take it SHARED, heal, then append — concurrent commits
+  proceed freely, but a commit can never land files between a
+  compactor's snapshot and its live->old rename (which would silently
+  delete the new cells while their manifest rows survive);
 * **readers** calling :func:`recover_dir` defensively take it
   NON-BLOCKING and no-op when it is held, so a healer can never race
   the live compactor's own rename pair.
@@ -170,7 +170,8 @@ def recover_dir(path: str, have_lock: bool = False) -> None:
     compaction lock NON-BLOCKING and no-ops while a live compactor (or
     appender) holds it — healing must never race the very swap it
     repairs.  ``have_lock=True`` skips acquisition for callers already
-    inside :func:`dir_lock` (exclusive)."""
+    inside :func:`dir_lock`, exclusive or shared (a healer renames only
+    into a missing live dir, so shared healers cannot undo each other)."""
     import shutil
 
     def _heal() -> None:
@@ -217,6 +218,8 @@ def compact_dir(
     ``{files_before, files_after, bytes, skipped}``."""
     import shutil
 
+    from pyspark.sql.types import StringType, StructField, StructType
+
     recover_dir(path)
     if not os.path.isdir(path):
         return {"files_before": 0, "files_after": 0, "bytes": 0,
@@ -235,6 +238,13 @@ def compact_dir(
             return {"files_before": before, "files_after": before,
                     "bytes": nbytes, "skipped": True}
         df = spark.read.parquet(path)
+        if partition_cols:
+            # partition values as written: type inference would read
+            # source=007 as 7 and the rewrite would write source=7
+            df = spark.read.schema(StructType([
+                StructField(f.name, StringType(), f.nullable)
+                if f.name in partition_cols else f for f in df.schema
+            ])).parquet(path)
         staged, old = staged_path(path), old_path(path)
         for p in (staged, old):
             if os.path.exists(p):

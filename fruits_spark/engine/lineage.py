@@ -19,8 +19,19 @@ Each commit is sized for the store: its cell count comes from an
 ``Observation`` on the data write, not a ``count()`` job, and both
 writes are coalesced to :func:`~fruits_spark.engine.compact.file_count`
 files, so a run committed once per tier leaves nothing to compact.
-Manifest reads pass ``MANIFEST_SCHEMA`` and so start no footer
-inference job.
+
+Manifest layout: ``{out}/_lineage/run_id=<r>/tier=<t>/part-*``, so one
+commit adds files to one leaf.  Every read is for one run
+(:func:`read_manifest`): it lists only that run's leaves and passes
+``MANIFEST_SCHEMA`` (no inference job; run ids stay strings however
+numeric they look).  A base written before this layout has an
+unpartitioned manifest, which these reads do not see.
+
+One lock: the manifest is a store directory under
+:mod:`~fruits_spark.engine.compact`'s ``dir_lock`` like any other.
+Commits append under it SHARED; :func:`compact_manifest` is
+``compact_dir``; readers heal with ``recover_dir``; :func:`retire_runs`
+holds it EXCLUSIVE and drops a run's directory with one rename.
 """
 
 from __future__ import annotations
@@ -29,6 +40,8 @@ import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from . import compact
 
 MANIFEST_SCHEMA = (
     "run_id string, tier string, source string, bucket int, "
@@ -40,58 +53,30 @@ def manifest_path(base: str) -> str:
     return os.path.join(base, "_lineage")
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """The manifest at ``path`` with its known schema (no inference job)."""
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+def _run_dir(spark: SparkSession, path: str, run_id: str) -> str:
+    """The ``run_id=<r>`` directory of the manifest at ``path``, with the
+    value escaped as Spark's partitioned writer escapes it."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils
+    return os.path.join(path, utils.getPartitionPathString("run_id", run_id))
 
 
-def recover_manifest(base: str, clean: bool = False) -> None:
-    """Crash recovery for the retire swap (see :func:`retire_runs`):
-    if the manifest directory is missing but a committed ``_retiring``
-    (the fully-written new manifest) or ``_old`` (the pre-retire one)
-    exists, restore it — a crash between the two renames must never
-    leave readers with an empty lineage.  Called before every manifest
-    read; a no-op in the healthy state.
-
-    Readers only RESTORE (rename into place, tolerating losing the race
-    to another recoverer); debris removal (``clean=True``) is reserved
-    for :func:`retire_runs` — a reader must never delete ``_retiring``
-    while a live retire is between its two renames."""
-    import shutil
-
+def read_manifest(spark: SparkSession, base: str, run_id: str) -> DataFrame:
+    """Run ``run_id``'s manifest rows, read from its leaves only with the
+    known schema (no inference job); empty if the run has none.  Heals
+    an interrupted manifest compaction first."""
     path = manifest_path(base)
-    tmp, old = path + "_retiring", path + "_old"
-    if not os.path.exists(path):
-        try:
-            if os.path.exists(tmp):
-                # new manifest was fully written: promote it
-                os.rename(tmp, path)
-            elif os.path.exists(old):
-                # crashed before the new manifest was ready: roll back
-                os.rename(old, path)
-            else:
-                return
-        except OSError:
-            # concurrent recover/retire won the rename — fall through;
-            # the manifest is (or is about to be) in place
-            pass
-    if not clean:
-        return
-    # writer path: manifest present (or just restored) — clear debris
-    for p in (tmp, old):
-        if os.path.exists(p):
-            shutil.rmtree(p)
+    compact.recover_dir(path)
+    run_dir = _run_dir(spark, path, run_id)
+    if not os.path.isdir(run_dir):
+        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return (spark.read.schema(MANIFEST_SCHEMA).option("basePath", path)
+            .parquet(run_dir))
 
 
 def completed_cells(spark: SparkSession, base: str, run_id: str, tier: str) -> DataFrame:
-    """Cells already committed for (run_id, tier); empty DF if no manifest."""
-    recover_manifest(base)
-    path = manifest_path(base)
-    try:
-        m = read_manifest(spark, path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return m.where((F.col("run_id") == run_id) & (F.col("tier") == tier))
+    """Cells already committed for (run_id, tier); empty DF if none."""
+    return read_manifest(spark, base, run_id).where(F.col("tier") == tier)
 
 
 def pending_cells(
@@ -124,14 +109,10 @@ def commit_cells(
     commit is two Spark jobs, the data write and the manifest write.
     An empty input writes nothing.
 
-    Both appends take SHARED advisory locks (the data dir's compaction
-    lock, the manifest's rewrite lock): concurrent commits proceed
-    freely, but a commit can never interleave with an exclusive rewriter
-    (:func:`fruits_spark.engine.compact.compact_dir`,
-    :func:`compact_manifest` / :func:`retire_runs`) whose
-    snapshot-then-swap would silently drop the freshly appended files."""
-    from .compact import dir_lock, file_count
-
+    Both appends hold their directory's ``dir_lock`` SHARED, so no
+    exclusive rewriter's swap can drop them, and first heal an
+    interrupted compaction there: an append into a fresh live dir would
+    leave the complete staged copy to be swept away as debris."""
     data_path = os.path.join(base, f"tier={tier}", f"run={run_id}")
     # Spark finds cached data by plan, so unpersisting an input the
     # caller had cached would evict the caller's own table: cache (and
@@ -143,9 +124,10 @@ def commit_cells(
         nbytes, parts = _built_cache_size(cells)
         if nbytes == 0:
             return 0
-        k = file_count(nbytes, max_files=parts)
+        k = compact.file_count(nbytes, max_files=parts)
         seen = Observation()
-        with dir_lock(data_path, shared=True):
+        with compact.dir_lock(data_path, shared=True):
+            compact.recover_dir(data_path, have_lock=True)
             (cells.observe(seen, F.count(F.lit(1)).alias("n"))
              .coalesce(k).write.mode("append").parquet(data_path))
         n = seen.get["n"]
@@ -158,9 +140,11 @@ def commit_cells(
             F.col("sum_tok").cast("long").alias("n_tokens"),
             (F.col("sum_tok").cast("long") * n_points_per_doc).alias("n_points"),
         )
-        with manifest_write_lock(base, shared=True):
-            manifest.coalesce(k).write.mode("append").parquet(
-                manifest_path(base))
+        path = manifest_path(base)
+        with compact.dir_lock(path, shared=True):
+            compact.recover_dir(path, have_lock=True)
+            (manifest.coalesce(k).write.partitionBy("run_id", "tier")
+             .mode("append").parquet(path))
         return n
     finally:
         if own_cache:
@@ -188,10 +172,8 @@ def _built_cache_size(cells: DataFrame) -> tuple[int, int]:
 
 def run_metrics(spark: SparkSession, base: str, run_id: str) -> DataFrame:
     """Aggregate manifest metrics per tier for a run."""
-    recover_manifest(base)
-    m = read_manifest(spark, manifest_path(base))
     return (
-        m.where(F.col("run_id") == run_id)
+        read_manifest(spark, base, run_id)
         .groupBy("tier")
         .agg(
             F.count(F.lit(1)).alias("cells"),
@@ -206,107 +188,47 @@ def retire_runs(
     spark: SparkSession, base: str, tiers: list[str], run_ids: list[str]
 ) -> None:
     """Retention for the TIER DATA and the manifest: remove each retired
-    run's ``tier=<t>/run=<id>`` directory and rewrite the manifest
-    without its rows (codec blobs are retired separately through
-    :mod:`fruits_spark.engine.io`).  Manifest rewrite is write-new-then-
-    swap; a crash between the two renames is healed by
-    :func:`recover_manifest` on the next read (the ``_retiring`` copy is
-    complete before the live manifest is ever moved aside).
+    run's ``tier=<t>/run=<id>`` directory, then drop its manifest
+    directory ``run_id=<id>`` with one rename to its dot-prefixed
+    :func:`~fruits_spark.engine.compact.old_path` sibling (invisible to
+    Spark's file index) and a delete.  No Spark job and no rewrite: a
+    reader sees a run whole or not at all.  Codec blobs are retired
+    separately through :mod:`fruits_spark.engine.io`.
 
-    Retirement is serialized through an advisory lock file
-    (``_retire.lock``): two concurrent ``retire_runs`` calls on the same
-    base would otherwise race on the shared ``_retiring`` staging name —
-    B's ``recover_manifest(clean=True)`` can delete A's fully-written
-    staging copy between A's two renames.  The lock makes the second
-    caller wait instead of failing; crash-with-lock-held is harmless
-    because ``flock`` locks die with the process."""
-    with manifest_write_lock(base):
-        _retire_locked(spark, base, tiers, run_ids)
-
-
-def manifest_write_lock(base: str, shared: bool = False):
-    """Advisory lock serializing manifest writers on one base.
-    REWRITERS (:func:`retire_runs`, :func:`compact_manifest`) take it
-    EXCLUSIVE — they share the ``_retiring``/``_old`` staging names and
-    their read-then-swap must not interleave with appends.  Append-only
-    commit writers (:func:`commit_cells`) take it SHARED so concurrent
-    commits still proceed freely.  Readers never take it."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _lock():
-        import fcntl
-
-        os.makedirs(base, exist_ok=True)
-        fd = os.open(
-            os.path.join(base, "_retire.lock"), os.O_CREAT | os.O_RDWR
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_SH if shared else fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
-    return _lock()
-
-
-def _retire_locked(
-    spark: SparkSession, base: str, tiers: list[str], run_ids: list[str]
-) -> None:
+    Holds the manifest's EXCLUSIVE ``dir_lock``, so concurrent retires
+    serialize and no commit appends to a run while it is dropped.  A
+    crash after the rename leaves an invisible ``.run_id=<id>__old``
+    that the next retire of that run removes."""
     import shutil
 
-    recover_manifest(base, clean=True)
-    for t in tiers:
-        for r in run_ids:
-            p = os.path.join(base, f"tier={t}", f"run={r}")
-            if os.path.exists(p):
-                shutil.rmtree(p)
     path = manifest_path(base)
-    try:
-        m = read_manifest(spark, path)
-    except Exception:
-        return
-    kept = m.where(~F.col("run_id").isin(run_ids))
-    _swap_in_manifest(path, kept)
+    with compact.dir_lock(path):
+        compact.recover_dir(path, have_lock=True)
+        for t in tiers:
+            for r in run_ids:
+                p = os.path.join(base, f"tier={t}", f"run={r}")
+                if os.path.exists(p):
+                    shutil.rmtree(p)
+        for r in run_ids:
+            live = _run_dir(spark, path, r)
+            old = compact.old_path(live)
+            shutil.rmtree(old, ignore_errors=True)
+            if os.path.exists(live):
+                os.rename(live, old)
+                shutil.rmtree(old)
 
 
-def _swap_in_manifest(path: str, kept: DataFrame) -> None:
-    """Write-new-then-swap a manifest rewrite (caller holds the lock;
-    :func:`recover_manifest` heals a crash between the renames)."""
-    import shutil
-
-    tmp = path + "_retiring"
-    kept.write.mode("overwrite").parquet(tmp)
-    old = path + "_old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
-
-def compact_manifest(spark: SparkSession, base: str, target_files: int = 1) -> dict:
-    """Maintenance: rewrite the lineage manifest into ``target_files``
-    parquet files.
-
-    The manifest is append-only — every :func:`commit_cells` call adds a
-    small file, so a long-lived base accrues one file per commit batch
-    and every resume anti-join / metrics read pays a file-open per
-    commit ever made.  Compaction is the same staged-swap used by
-    retirement (shared lock, shared staging names, healed by
-    :func:`recover_manifest`); on Iceberg deployments the equivalent is
-    ``CALL <catalog>.system.rewrite_manifests``.  A manifest already at
-    ``target_files`` or fewer is left as it is, without a Spark job.
-    Returns file counts before/after."""
-    from .compact import count_data_files
-
-    with manifest_write_lock(base):
-        recover_manifest(base, clean=True)
-        path = manifest_path(base)
-        before = count_data_files(path)
-        if before <= target_files:  # packed already, or no manifest
-            return {"files_before": before, "files_after": before}
-        m = read_manifest(spark, path)
-        _swap_in_manifest(path, m.coalesce(target_files))
-        return {"files_before": before, "files_after": count_data_files(path)}
+def compact_manifest(spark: SparkSession, base: str) -> dict:
+    """Maintenance: bin-pack the manifest to one file per ``(run_id,
+    tier)`` leaf with :func:`~fruits_spark.engine.compact.compact_dir`
+    (its lock, staged swap and heal).  Each :func:`commit_cells` call
+    adds a file to its leaf, so a run resumed in many slices accrues
+    files that every resume anti-join and metrics read opens; a manifest
+    already at one file per leaf is left as it is, without a Spark job.
+    On Iceberg deployments the equivalent is
+    ``CALL <catalog>.system.rewrite_manifests``.  Returns file counts
+    before/after."""
+    stats = compact.compact_dir(spark, manifest_path(base),
+                                partition_cols=("run_id", "tier"))
+    return {"files_before": stats["files_before"],
+            "files_after": stats["files_after"]}

@@ -33,13 +33,13 @@ from pyspark.sql import DataFrame, functions as F
 
 @dataclass(frozen=True)
 class Tier:
-    """A retention tier: ``tokens_per_bucket`` controls downsampling
-    granularity; ``retention_runs`` how many runs are kept before
-    partition drop."""
+    """A rollup tier: ``tokens_per_bucket`` controls downsampling
+    granularity.  Retention drops a tier's run partitions
+    (:func:`fruits_spark.engine.lineage.retire_runs`,
+    :func:`fruits_spark.engine.io.drop_retired_partitions`)."""
 
     name: str
     tokens_per_bucket: int  # target token volume per rollup cell
-    retention_runs: int = -1  # -1 = keep forever
 
 
 DEFAULT_TIERS = (
@@ -492,15 +492,3 @@ def route_query_cells(
             f"t_coarse={sorted(runs_c)}"
         )
     return route_range(fine, coarse, factor, lo, hi, feature_cols)
-
-
-def retention_filter(
-    tier_df: DataFrame, tier: Tier, current_run: int, run_col: str = "run_id"
-) -> DataFrame:
-    """Partition-drop semantics: keep only the last ``retention_runs``
-    runs of a tier (on storage this is a partition delete, expressed here
-    as the equivalent filter)."""
-    if tier.retention_runs < 0:
-        return tier_df
-    cutoff = current_run - tier.retention_runs
-    return tier_df.where(F.col(run_col) > F.lit(cutoff))

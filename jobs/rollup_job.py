@@ -71,7 +71,7 @@ def main() -> None:
                          "are dropped after this run (retention)")
     ap.add_argument("--compact", action="store_true",
                     help="after committing, bin-pack this run's tier and "
-                         "codec files and rewrite the lineage manifest "
+                         "codec files and the lineage manifest "
                          "(small-file maintenance; idempotent)")
     ap.add_argument("--target-file-mb", type=int, default=128)
     args = ap.parse_args()

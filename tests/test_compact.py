@@ -61,6 +61,42 @@ def test_compact_dir_preserves_hive_partitions(spark, tmp_path):
     assert got == sorted((i, f"s{i % 3}", float(i)) for i in range(300))
 
 
+def test_compact_keeps_numeric_partition_values(spark, tmp_path):
+    """All-numeric, zero-padded partition values come back as written:
+    partition type inference would read ``source=007`` as 7 and the
+    rewrite would write ``source=7``."""
+    path = str(tmp_path / "codec")
+    rows = [(i, ("007", "010")[i % 2], float(i)) for i in range(40)]
+    spark.createDataFrame(rows, "doc_id long, source string, v double") \
+        .repartition(4).write.partitionBy("source").parquet(path)
+    stats = CP.compact_dir(spark, path, partition_cols=("source",))
+    assert not stats["skipped"] and stats["files_after"] == 2
+    assert sorted(d for d in os.listdir(path)
+                  if not d.startswith(("_", "."))) == ["source=007",
+                                                       "source=010"]
+    back = spark.read.schema("doc_id long, v double, source string") \
+        .parquet(path)
+    assert sorted((r.doc_id, r.source, r.v) for r in back.collect()) \
+        == sorted(rows)
+
+
+def test_compact_manifest_keeps_numeric_run_id(spark, tmp_path):
+    """Run ``007`` still matches ``completed_cells`` after a manifest
+    compaction (as ``run_id=7`` it would not, and a ``--resume`` would
+    commit every cell again)."""
+    base = str(tmp_path / "store")
+    cells = spark.createDataFrame(
+        [("s0", b, 10, 100) for b in range(4)],
+        "source string, bucket int, n_docs long, sum_tok long",
+    )
+    for b in range(2):
+        LI.commit_cells(cells.where(cells.bucket % 2 == b), spark, base,
+                        "007", "t1k", n_points_per_doc=3)
+    assert LI.compact_manifest(spark, base)["files_after"] == 1
+    assert LI.completed_cells(spark, base, "007", "t1k").count() == 4
+    assert LI.pending_cells(cells, spark, base, "007", "t1k").count() == 0
+
+
 def test_recover_dir_promotes_staged_else_rolls_back(spark, tmp_path):
     path, expect = _fragmented(spark, tmp_path)
     staged, old = CP.staged_path(path), CP.old_path(path)

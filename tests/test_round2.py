@@ -1,8 +1,5 @@
 """Round-2 additions: resolution ops, FRB1 multimodal decode,
-coarser-from-finer re-agg, two-phase top-k, portable hash, manifest
-crash recovery."""
-
-import os
+coarser-from-finer re-agg, two-phase top-k, portable hash."""
 
 import numpy as np
 import pytest
@@ -265,54 +262,6 @@ def test_minhash_portable_equal_docs_collide(spark):
                  docs, n_hashes=8, bands=4, hash_fn="portable").collect()}
     assert (0, 1) in pairs
     assert (0, 2) not in pairs and (1, 2) not in pairs
-
-
-# --- manifest crash recovery -----------------------------------------------
-
-def test_recover_manifest_promotes_retiring(tmp_path, spark):
-    from fruits_spark.engine import lineage as L
-
-    base = str(tmp_path)
-    path = L.manifest_path(base)
-    os.makedirs(path + "_retiring")
-    with open(os.path.join(path + "_retiring", "marker"), "w") as f:
-        f.write("new")
-    # crash state: live manifest already moved aside, new one not yet in
-    os.makedirs(path + "_old")
-    L.recover_manifest(base)
-    assert os.path.exists(os.path.join(path, "marker"))
-    assert not os.path.exists(path + "_retiring")
-
-
-def test_recover_manifest_rolls_back_old(tmp_path):
-    from fruits_spark.engine import lineage as L
-
-    base = str(tmp_path)
-    path = L.manifest_path(base)
-    os.makedirs(path + "_old")
-    with open(os.path.join(path + "_old", "marker"), "w") as f:
-        f.write("old")
-    L.recover_manifest(base)
-    assert os.path.exists(os.path.join(path, "marker"))
-
-
-def test_recover_manifest_healthy_cleans_debris(tmp_path):
-    from fruits_spark.engine import lineage as L
-
-    base = str(tmp_path)
-    path = L.manifest_path(base)
-    os.makedirs(path)
-    os.makedirs(path + "_old")
-    os.makedirs(path + "_retiring")
-    # a READER must not delete swap debris (racing a live retire) ...
-    L.recover_manifest(base)
-    assert os.path.exists(path + "_old")
-    assert os.path.exists(path + "_retiring")
-    # ... only the retire writer clears it
-    L.recover_manifest(base, clean=True)
-    assert os.path.exists(path)
-    assert not os.path.exists(path + "_old")
-    assert not os.path.exists(path + "_retiring")
 
 
 def test_ivf_topk_matches_bruteforce_on_probed_lists(spark):

@@ -1,8 +1,9 @@
 """Store-cycle passes must not redo work: a commit keeps the caller's
 cache, counts inside its write and writes right-sized files, compaction
-skips a directory or manifest already at its floor, and manifest reads
-infer no schema.  Job counts come from job groups and the status
-tracker, so timing noise cannot hide a regression."""
+skips a directory or manifest already at its floor, manifest reads
+infer no schema, and retirement drops directories without a job.  Job
+counts come from job groups and the status tracker, so timing noise
+cannot hide a regression."""
 
 import os
 
@@ -181,6 +182,91 @@ def test_compact_manifest_skips_packed_manifest(spark, tmp_path):
     assert LI.completed_cells(spark, base, "r1", "t1k").count() == len(CELLS)
 
 
+def _visible(path):
+    """Entries of ``path`` that Spark's file index reads."""
+    return sorted(d for d in os.listdir(path) if not d.startswith((".", "_")))
+
+
+def test_retire_runs_runs_no_job(spark, tmp_path):
+    """Retirement drops the run's tier and manifest directories: no
+    Spark job and no manifest rewrite.  The timestamp run id has a
+    ``:``, which Spark escapes in the partition directory name."""
+    base = str(tmp_path / "store")
+    cells = _built(spark)
+    old, kept = "2026-08-16T00:00", "r2"
+    for run in (old, kept):
+        LI.commit_cells(cells, spark, base, run, "t1k", n_points_per_doc=2)
+    mpath = LI.manifest_path(base)
+    kept_files = _files(mpath)
+    _, jobs = _jobs(spark, lambda: LI.retire_runs(spark, base, ["t1k"],
+                                                  [old]))
+    assert jobs == 0
+    assert _visible(os.path.join(base, "tier=t1k")) == [f"run={kept}"]
+    assert _visible(mpath) == [f"run_id={kept}"]
+    assert _files(mpath) == {f: t for f, t in kept_files.items()
+                             if f.startswith(f"run_id={kept}")}
+    assert LI.completed_cells(spark, base, old, "t1k").count() == 0
+    assert _rows(LI.completed_cells(spark, base, kept, "t1k"),
+                 ("source", "bucket", "n_docs", "n_tokens")) == sorted(CELLS)
+    cells.unpersist()
+
+
+def test_compact_manifest_at_one_file_per_leaf_runs_no_job(spark, tmp_path):
+    base = str(tmp_path / "store")
+    cells = _built(spark)
+    runs, tiers = ("r1", "r2"), ("t1k", "t100k")
+    for run in runs:
+        for tier in tiers:
+            LI.commit_cells(cells, spark, base, run, tier,
+                            n_points_per_doc=2)
+    mpath = LI.manifest_path(base)
+    leaves = sorted(os.path.dirname(f) for f in CP._list_data_files(mpath))
+    assert leaves == sorted(os.path.join(f"run_id={r}", f"tier={t}")
+                            for r in runs for t in tiers)
+    stats, jobs = _jobs(spark, lambda: LI.compact_manifest(spark, base))
+    assert jobs == 0
+    assert stats == {"files_before": 4, "files_after": 4}
+    cells.unpersist()
+
+
+def _crash_mid_manifest_compaction(spark, base):
+    """Commit r1/t1k in two slices, then leave the manifest as a crash
+    between a compaction's two renames does: the staged copy complete,
+    the live dir moved to old."""
+    cells = spark.createDataFrame(CELLS, CELL_SCHEMA)
+    for b in (0, 1):
+        LI.commit_cells(cells.where(cells.bucket % 2 == b), spark, base,
+                        "r1", "t1k", n_points_per_doc=2)
+    mpath = LI.manifest_path(base)
+    (spark.read.schema(LI.MANIFEST_SCHEMA).parquet(mpath).coalesce(1)
+     .write.partitionBy("run_id", "tier").parquet(CP.staged_path(mpath)))
+    os.rename(mpath, CP.old_path(mpath))
+    return cells, mpath
+
+
+def test_manifest_compaction_crash_healed_by_completed_cells(spark,
+                                                             tmp_path):
+    base = str(tmp_path / "store")
+    _, mpath = _crash_mid_manifest_compaction(spark, base)
+    assert LI.completed_cells(spark, base, "r1", "t1k").count() == len(CELLS)
+    assert CP.count_data_files(mpath) == 1  # the staged copy, promoted
+    assert not os.path.exists(CP.staged_path(mpath))
+    assert not os.path.exists(CP.old_path(mpath))
+
+
+def test_commit_heals_manifest_compaction_crash_before_appending(spark,
+                                                                 tmp_path):
+    """A commit into a manifest whose compaction crashed mid-swap must
+    not start a fresh live dir: that would leave the complete staged
+    copy, and every row committed before, to be removed as debris."""
+    base = str(tmp_path / "store")
+    cells, _ = _crash_mid_manifest_compaction(spark, base)
+    LI.commit_cells(cells, spark, base, "r1", "t100k", n_points_per_doc=2)
+    for tier in ("t1k", "t100k"):
+        assert LI.completed_cells(spark, base, "r1", tier).count() \
+            == len(CELLS)
+
+
 def test_commit_empty_input_writes_nothing(spark, tmp_path):
     base = str(tmp_path / "store")
     cells = _built(spark)
@@ -241,13 +327,17 @@ def test_crash_between_data_and_manifest_then_resume(spark, tmp_path,
     coarse = RU.reagg_tier(
         fine, fc, F.floor(F.col("bucket") / 10).cast("int")).cache()
 
+    real_lock = CP.dir_lock
+
     @contextmanager
-    def dying_lock(*_a, **_k):
-        raise RuntimeError("killed before the manifest append")
-        yield  # pragma: no cover
+    def dying_lock(path, shared=False, **k):
+        if path == LI.manifest_path(base) and shared:
+            raise RuntimeError("killed before the manifest append")
+        with real_lock(path, shared=shared, **k) as got:
+            yield got
 
     with monkeypatch.context() as m:
-        m.setattr(LI, "manifest_write_lock", dying_lock)
+        m.setattr(CP, "dir_lock", dying_lock)
         with pytest.raises(RuntimeError, match="killed"):
             LI.commit_cells(fine, spark, base, "r1", "t1k",
                             n_points_per_doc=1)
