@@ -60,6 +60,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -162,6 +163,20 @@ def dir_lock(path: str, shared: bool = False, blocking: bool = True):
         os.close(fd)
 
 
+def drop_dir(path: str) -> None:
+    """Retention: remove ``path``, its staging debris and its lock file
+    while holding its EXCLUSIVE lock, so no compactor or appender is
+    inside and no holder is left on the unlinked lock inode."""
+    lock = _sibling(path, "__compact.lock")
+    sibs = (path, staged_path(path), old_path(path))
+    if not any(os.path.exists(p) for p in sibs + (lock,)):
+        return  # nothing to drop (and no tier dir to create for a lock)
+    with dir_lock(path):
+        for p in sibs:
+            shutil.rmtree(p, ignore_errors=True)
+        os.remove(lock)
+
+
 def recover_dir(path: str, have_lock: bool = False) -> None:
     """Heal a compaction swap interrupted between its two renames, and
     clear stale staging debris once the live dir is back.
@@ -172,8 +187,6 @@ def recover_dir(path: str, have_lock: bool = False) -> None:
     repairs.  ``have_lock=True`` skips acquisition for callers already
     inside :func:`dir_lock`, exclusive or shared (a healer renames only
     into a missing live dir, so shared healers cannot undo each other)."""
-    import shutil
-
     def _heal() -> None:
         staged, old = staged_path(path), old_path(path)
         try:
@@ -216,8 +229,6 @@ def compact_dir(
     rewrite reproduces it; partition pruning on those columns keeps
     working after compaction.  Returns
     ``{files_before, files_after, bytes, skipped}``."""
-    import shutil
-
     from pyspark.sql.types import StringType, StructField, StructType
 
     recover_dir(path)

@@ -297,17 +297,22 @@ def _apply_prep_flat(seg, cols: list, p: Pl.Prep):
     return KF.bucketed_rows_map(seg, cols, lambda Z: _apply_prep(Z, p))
 
 
+# pad lanes (steps past a doc's end) divide by zero under negative
+# exponents; no valid row reads them, and valid NaN/inf are kept as is
+@np.errstate(divide="ignore", invalid="ignore")
 def compute_features_flat(
     values, offsets: np.ndarray, fplan: Pl.FruitPlan
 ) -> np.ndarray:
-    """Whole-batch feature computation on the flat layout: one set of
-    segmented array ops per operator, independent of length diversity
-    (the 100 TB hot path).  ``values`` is a list of per-dimension flat
-    float64 arrays sharing ``offsets`` (a bare array = one dimension)."""
+    """Whole-batch feature computation on the flat kernels' length-class
+    layout: one set of array ops per operator and class, independent of
+    length diversity (the 100 TB hot path).  ``values`` is a list of
+    per-dimension flat float64 arrays sharing ``offsets`` (a bare array
+    = one dimension); each enters the layout once, here."""
     from ..kernels import flat as KF
 
     seg0 = KF.Seg(offsets)
     in_cols = values if isinstance(values, list) else [values]
+    in_cols = [seg0.enter(c) for c in in_cols]
     if seg0.total == 0:
         # no points at all (empty docs, or 0-dim rows): the bucketed
         # oracle never runs a kernel for empty rows either

@@ -28,6 +28,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import compact
+
 
 def _catalog() -> str | None:
     return os.environ.get("SPARK_GRAFT_CATALOG") or None
@@ -94,7 +96,8 @@ def drop_retired_partitions(
 ) -> None:
     """Retention: drop the given runs from a tier table.  Iceberg: one
     ``DELETE WHERE run_id IN (…)`` (metadata-light, snapshots expire on
-    their own schedule); parquet: remove ``run=<id>`` subdirectories."""
+    their own schedule); parquet: remove ``run=<id>`` subdirectories
+    with their lock files (``compact.drop_dir``)."""
     cat = _catalog()
     if cat:
         ident = f"{cat}.{_table_ident(table)}"
@@ -102,9 +105,20 @@ def drop_retired_partitions(
         ids = ", ".join("'" + r.replace("'", "''") + "'" for r in run_ids)
         spark.sql(f"DELETE FROM {ident} WHERE run_id IN ({ids})")
         return
-    import shutil
-
     for r in run_ids:
-        p = os.path.join(base, table, f"run={r}")
-        if os.path.exists(p):
-            shutil.rmtree(p)
+        compact.drop_dir(os.path.join(base, table, f"run={r}"))
+
+
+def read_tier(spark: SparkSession, base: str, tier: str) -> DataFrame:
+    """Every committed run of ``tier=<tier>``, ``run`` cast to string
+    (partition inference parses date-like run ids as dates).  Heals each
+    run dir first (``compact.recover_dir``), including a run whose live
+    dir is missing but whose staged or old sibling exists."""
+    path = os.path.join(base, f"tier={tier}")
+    runs = {re.sub(r"__(compacting|old|compact\.lock)$", "", e.lstrip("."))
+            for e in os.listdir(path)}
+    for r in runs:
+        if r.startswith("run="):
+            compact.recover_dir(os.path.join(path, r))
+    df = spark.read.parquet(path)
+    return df.withColumn("run", F.col("run").cast("string"))

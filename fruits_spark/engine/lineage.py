@@ -196,7 +196,8 @@ def retire_runs(
     separately through :mod:`fruits_spark.engine.io`.
 
     Holds the manifest's EXCLUSIVE ``dir_lock``, so concurrent retires
-    serialize and no commit appends to a run while it is dropped.  A
+    serialize and no commit appends to a run while it is dropped; each
+    run dir goes with its lock file and debris (``compact.drop_dir``).  A
     crash after the rename leaves an invisible ``.run_id=<id>__old``
     that the next retire of that run removes."""
     import shutil
@@ -206,9 +207,7 @@ def retire_runs(
         compact.recover_dir(path, have_lock=True)
         for t in tiers:
             for r in run_ids:
-                p = os.path.join(base, f"tier={t}", f"run={r}")
-                if os.path.exists(p):
-                    shutil.rmtree(p)
+                compact.drop_dir(os.path.join(base, f"tier={t}", f"run={r}"))
         for r in run_ids:
             live = _run_dir(spark, path, r)
             old = compact.old_path(live)

@@ -3,210 +3,213 @@
 The length-bucketed 3-D kernels (:mod:`.iss`, :mod:`.prep`, :mod:`.sieve`)
 are exact and simple, but a batch with many distinct sequence lengths
 degenerates into hundreds of tiny NumPy calls.  This module computes the
-same quantities directly on Arrow's flattened list layout — ONE set of
-array ops per operator for the whole batch, independent of how lengths
-are distributed.  It is the engine's only production layout: a series is
-a list of per-dimension flat columns sharing one :class:`Seg` geometry
-(univariate = one column, with no univariate twin kernels).  The
-bucketed kernels remain the reference-parity oracle for this module's
-tests, :func:`iss_flat_mv` the per-word oracle of the executor's ISS
-prefix trie, and the per-group body :func:`bucketed_rows_map` runs for
+same quantities on a whole batch at once — one set of array ops per
+operator and length class, however the lengths are distributed.  It is
+the engine's only production layout: a series is a list of
+per-dimension columns sharing one :class:`Seg` geometry (univariate =
+one column, with no univariate twin kernels).  The bucketed kernels
+remain the reference-parity oracle for this module's tests,
+:func:`iss_flat_mv` the per-word oracle of the executor's ISS prefix
+trie, and the per-group body :func:`bucketed_rows_map` runs for
 preparateurs that have no flat form.
 
-Primitives:
-  * segmented cumsum    — global cumsum minus per-segment carry
-                          (exact for integer-valued data; <=1e-13 rel.
-                          difference from per-row cumsum for floats)
-  * segmented shift     — global shift + zero at segment starts
-  * segmented run-max   — O(log L) doubling passes (exact: max is
-                          order-insensitive)
-  * per-segment reduce  — ufunc.reduceat with empty-segment repair
+Layout: :class:`Seg` sorts a batch's docs by length and cuts them into
+``N_CLASSES`` equal-count length classes; each class is one time-major
+``(L_c, n_c)`` block (row t = step t of every doc in the class, one doc
+per column, ``L_c`` its longest doc), and the blocks sit back to back in
+one 1-D buffer.  A column enters that buffer once (:meth:`Seg.enter`);
+every kernel here takes and returns buffers.  Rows past a doc's end are
+PAD lanes: they hold whatever the element-wise ops make of them (zero
+on entry, possibly inf/nan later) and no valid row ever reads them.
+
+Primitives: scans (``np.cumsum`` / ``np.maximum.accumulate`` down axis
+0 per class, so each doc's ops run in the oracle's order and a pad row
+only follows valid rows: bit-identical to a per-doc scan); a per-class
+row shift; per-doc reductions over valid rows only, float sums in time
+order (the oracle's ``np.sum`` is pairwise: equal to rounding).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-#: cumsum carry-subtract strategy: "auto" (mean-length rule), or
-#: "slice" / "gather" to force one variant — tests set it to pin both
-#: branches bit-identical (see Seg.cumsum)
-_CARRY_MODE = "auto"
+#: length classes per batch: more carry fewer pad rows, fewer make fewer
+#: per-class calls per op (8 beat 4 on the flagship plan; BENCH.md)
+N_CLASSES = 8
+
+_IDENTITY = {np.add: 0.0, np.maximum: -np.inf, np.minimum: np.inf}
+_LANES = 512  # inner-loop width an order-free reduction folds rows to
 
 
 class Seg:
-    """Precomputed segment geometry for one flat batch."""
+    """Length-class geometry of one batch (see the module docstring).
+
+    ``offsets`` is the Arrow list layout; per-doc arrays (``lengths``,
+    reductions, ``broadcast`` input) stay in doc order.  ``pos`` is each
+    buffer element's step index, ``size`` the buffer length."""
 
     def __init__(self, offsets: np.ndarray) -> None:
         self.offsets = np.asarray(offsets, dtype=np.int64)
         self.lengths = np.diff(self.offsets)
         self.n = len(self.lengths)
         self.total = int(self.offsets[-1])
-        self.seg_id = np.repeat(np.arange(self.n), self.lengths)
-        starts = self.offsets[:-1]
-        self.pos = np.arange(self.total) - np.repeat(starts, self.lengths)
         self.nonempty = self.lengths > 0
-        self.max_len = int(self.lengths.max()) if self.n else 0
-        self._carry_buf: np.ndarray | None = None  # cumsum scratch
+        self.order = np.argsort(self.lengths, kind="stable")
+        self._col = np.zeros(self.n, dtype=np.int64)  # buffer index, step 0
+        self._stride = np.ones(self.n, dtype=np.int64)
+        head = np.zeros(self.n, dtype=np.int64)
+        # (start, rows L, cols n, head rows h, doc slice of order): the
+        # first h rows are valid in every column, h a multiple of the
+        # row fold k of an order-free reduction (see _reduce)
+        self._blocks: list[tuple] = []
+        self._tail_ok: list[np.ndarray] = []  # rows h..L-1: valid lanes
+        o = 0
+        cuts = np.arange(N_CLASSES + 1) * self.n // N_CLASSES
+        for a, b in zip(cuts[:-1], cuts[1:]):
+            docs = self.order[a:b]
+            lens = self.lengths[docs]
+            if b == a or lens[-1] == 0:
+                continue  # no class, or a class of empty docs: no rows
+            L, n = int(lens[-1]), int(b - a)
+            h = int(lens[0]) - int(lens[0]) % max(1, _LANES // n)
+            self._col[docs], self._stride[docs] = o + np.arange(n), n
+            head[docs] = h
+            self._blocks.append((o, L, n, h, slice(int(a), int(b))))
+            self._tail_ok.append(np.arange(h, L)[:, None] < lens[None, :])
+            o += L * n
+        self.size = o
+        self.pos = np.empty(o, dtype=np.int64)  # step index of each lane
+        self._src = np.empty(o, dtype=np.int64)  # its flat index (pads: on)
+        for (pos, src), (_, L, _, _, docs) in zip(
+                self.blocks(self.pos, self._src), self._blocks):
+            pos[...] = np.arange(L)[:, None]
+            src[...] = pos + self.offsets[self.order[docs]]
+        # valid tail lanes (steps h..len-1), doc by doc: an order-free
+        # reduction gathers them for one reduceat (see _reduce)
+        d = self._tail_docs = np.nonzero(self.lengths > head)[0]
+        tail = self.lengths[d] - head[d]
+        self._tail_starts = np.cumsum(tail) - tail
+        self._tail_src = self.index(d, tail, head[d])
 
-    # --- scans ---------------------------------------------------------
+    def index(self, docs: np.ndarray, steps, first=0) -> np.ndarray:
+        """Buffer positions of steps ``first .. first + steps - 1`` of
+        ``docs``: a ``(len(docs), steps)`` matrix for one int ``steps``,
+        else each doc's run (per-doc ``steps``) laid end to end."""
+        stride = self._stride[docs]
+        col = self._col[docs] + first * stride
+        if np.ndim(steps) == 0:
+            return col[:, None] + np.arange(steps) * stride[:, None]
+        t = np.arange(steps.sum()) - np.repeat(np.cumsum(steps) - steps, steps)
+        return np.repeat(col, steps) + t * np.repeat(stride, steps)
+
+    def enter(self, x: np.ndarray) -> np.ndarray:
+        """A flat (Arrow-order) column as a buffer: one gather, pads 0."""
+        x = np.asarray(x, dtype=np.float64)
+        return self.clean(np.take(x, self._src, mode="clip"))
+
+    def leave(self, x: np.ndarray) -> np.ndarray:
+        """A buffer back in flat (Arrow) order, pads dropped."""
+        return x[self.index(np.arange(self.n), self.lengths)]
+
+    def blocks(self, *arrays):
+        """Each class's ``(L_c, n_c)`` views of the buffers ``arrays``."""
+        for o, L, n, _, _ in self._blocks:
+            yield tuple(a[o:o + L * n].reshape(L, n) for a in arrays)
+
+    def clean(self, x: np.ndarray) -> np.ndarray:
+        """Zero ``x``'s pad lanes in place (they sit in tail rows only)."""
+        for (o, L, n, h, _), ok in zip(self._blocks, self._tail_ok):
+            np.copyto(x[o + h * n:o + L * n].reshape(L - h, n), 0, where=~ok)
+        return x
+
+    # --- scans: down axis 0, so pad rows (after a doc's end) never reach
+    # a valid row and each doc's ops run in per-doc order ----------------
 
     def cumsum(self, x: np.ndarray) -> np.ndarray:
-        cs = np.cumsum(x)
-        if cs.size == 0:
-            # a batch where EVERY segment is empty (total == 0): the
-            # carry gather below would index cs[-1] on an empty array
-            # (found by shape fuzzing — reachable when an Arrow batch
-            # holds only zero-token documents)
-            return cs
-        if max(cs.max(), -cs.min()) >= 2.0**53:
-            # the global carry trick would lose integer exactness once
-            # the cross-segment accumulation passes 2^53 — switch to
-            # per-segment independent cumsums (exact whenever a per-row
-            # scan is; O(total) + one python iteration per segment)
-            return self._cumsum_per_segment(x)
-        starts = self.offsets[:-1]
-        base = np.where(starts > 0, cs[starts - 1], 0.0)
-        if _CARRY_MODE == "slice" or (
-            _CARRY_MODE == "auto" and self.total >= self.n * 512
-        ):
-            # LONG segments (mean >= 512): a per-segment slice subtract
-            # is one in-place pass with no gather buffer; the Python
-            # loop overhead (~1.6 us/segment) amortizes over the
-            # segment.  Crossover measured at mean length ~500 (round
-            # 3, shapes 16x12800 ... 2048x100): at 128x1600 slice is
-            # 1.6x faster, at 512x390 gather is 2.2x faster — the old
-            # n<=2048 rule picked slice for the bench's own shape
-            # (800x260) where it loses 2.8x.
-            o = self.offsets
-            for i in range(self.n):
-                if base[i] != 0.0:
-                    cs[o[i]:o[i + 1]] -= base[i]
-            return cs
-        # many-segment batches: gather into a per-batch scratch buffer —
-        # same values as np.repeat(base, lengths) but no 8B*total
-        # allocation per scan (allocation + first-touch page faults
-        # dominated).  The buffer never escapes this call.
-        buf = self._carry_buf
-        if buf is None:
-            buf = np.empty(self.total, dtype=np.float64)
-            self._carry_buf = buf
-        np.take(base, self.seg_id, out=buf)
-        np.subtract(cs, buf, out=cs)
-        return cs
-
-    def _cumsum_per_segment(self, x: np.ndarray) -> np.ndarray:
-        """Independent per-segment cumsum slices: bit-identical to a
-        per-row scan for any magnitudes (no cross-segment arithmetic at
-        all — a self-resetting-accumulator variant was tried and leaks
-        rounding into later segments when a boundary subtraction needs
-        more than 53 mantissa bits)."""
-        out = x.astype(np.float64, copy=True)
-        o = self.offsets
-        for i in range(self.n):
-            s, e = o[i], o[i + 1]
-            if e > s:
-                np.cumsum(out[s:e], out=out[s:e])
-        return out
-
-    def shift1(self, x: np.ndarray) -> np.ndarray:
         out = np.empty_like(x)
-        if out.size == 0:
-            # every segment empty (a sub-batch of zero-token docs)
-            return out
-        out[1:] = x[:-1]
-        out[0] = 0.0
-        out[self.offsets[:-1][self.nonempty]] = 0.0
+        for v, w in self.blocks(x, out):
+            np.cumsum(v, axis=0, out=w)
         return out
 
     def runmax(self, x: np.ndarray) -> np.ndarray:
-        if self.n <= 2048:
-            # Arrow-batch case: one accumulate pass per segment slice
-            # beats the O(log max_len) doubling passes (measured 1.8x
-            # at 512 segments); max is order-insensitive so both are
-            # exact
-            out = x.copy()
-            o = self.offsets
-            for i in range(self.n):
-                s, e = o[i], o[i + 1]
-                if e > s:
-                    np.maximum.accumulate(out[s:e], out=out[s:e])
-            return out
-        out = x.copy()
-        buf = np.empty_like(out)
-        step = 1
-        while step < self.max_len:
-            buf[step:] = out[:-step]
-            buf[:step] = -np.inf
-            # invalidate lanes that would read across a segment boundary
-            np.copyto(buf, -np.inf, where=self._step_mask(step))
-            np.maximum(out, buf, out=out)
-            step <<= 1
+        out = np.empty_like(x)
+        for v, w in self.blocks(x, out):
+            np.maximum.accumulate(v, axis=0, out=w)
         return out
 
-    def _step_mask(self, step: int) -> np.ndarray:
-        """pos < step masks, cached per batch — reused by every runmax
-        doubling pass of every arctic/bayesian scan in the plan."""
-        cache = getattr(self, "_mask_cache", None)
-        if cache is None:
-            cache = {}
-            self._mask_cache = cache
-        m = cache.get(step)
-        if m is None:
-            m = self.pos < step
-            cache[step] = m
-        return m
+    def shift1(self, x: np.ndarray, fill=0) -> np.ndarray:
+        out = np.empty_like(x)
+        for o, L, n, _, _ in self._blocks:  # 1-D slices: one memmove
+            out[o:o + n] = fill
+            out[o + n:o + L * n] = x[o:o + (L - 1) * n]
+        return out
 
-    # --- reductions ----------------------------------------------------
+    # --- reductions over valid rows, results in doc order ---------------
 
-    def _reduceat(self, ufunc, x: np.ndarray, empty_val: float) -> np.ndarray:
-        out = np.full(self.n, empty_val, dtype=np.float64)
-        if self.total == 0 or not self.nonempty.any():
-            return out
-        starts = self.offsets[:-1][self.nonempty]
-        out[self.nonempty] = ufunc.reduceat(x, starts)
-        # reduceat quirk: if a start index equals len(x) it wraps; our
-        # nonempty filter guarantees starts < len(x).
+    def _reduce(self, ufunc, x: np.ndarray, empty_val: float,
+                dtype=None) -> np.ndarray:
+        """Per-doc ``ufunc`` reduction over valid rows, in doc order."""
+        timed = ufunc is np.add and x.dtype.kind == "f"
+        r = np.full(self.n, _IDENTITY[ufunc], dtype=dtype or x.dtype)
+        for (o, L, n, h, docs), ok in zip(self._blocks, self._tail_ok):
+            v = x[o:o + L * n].reshape(L, n)
+            if timed:
+                # a float sum runs in time order: the head rows' column
+                # sums, then each tail row with its pad lanes zeroed
+                acc = np.zeros((L - h + 1, n))
+                np.add.reduce(v[:h], axis=0, out=acc[0])
+                np.copyto(acc[1:], v[h:], where=ok)
+                np.add.reduce(acc, axis=0, out=r[docs])
+            elif h:
+                # max/min/counts are order-free: k head rows fold into
+                # one row, so an inner loop spans ~_LANES lanes, not n
+                k = max(1, _LANES // n)
+                part = ufunc.reduce(v[:h].reshape(h // k, k * n), axis=0,
+                                    dtype=dtype)
+                ufunc.reduce(part.reshape(k, n), axis=0, out=r[docs])
+        out = np.empty(self.n, dtype=np.float64)
+        out[self.order] = r
+        if not timed and len(self._tail_docs):
+            # ... and their valid tail lanes, gathered doc by doc
+            t = self._tail_docs
+            out[t] = ufunc(out[t], ufunc.reduceat(
+                x[self._tail_src], self._tail_starts, dtype=dtype
+            ))
+        out[~self.nonempty] = empty_val
         return out
 
     def sum(self, x: np.ndarray) -> np.ndarray:
-        return self._reduceat(np.add, x, 0.0)
+        return self._reduce(np.add, x, 0.0)
 
     def count(self, mask: np.ndarray) -> np.ndarray:
-        """Per-segment True count of a BOOL array, accumulated directly
-        in int64 by reduceat — no 8-byte float materialization of the
-        mask (one full write+read pass saved per counted predicate;
-        exact: counts are integers, bit-identical to summing 1.0s)."""
-        out = np.zeros(self.n, dtype=np.float64)
-        if self.total == 0 or not self.nonempty.any():
-            return out
-        starts = self.offsets[:-1][self.nonempty]
-        out[self.nonempty] = np.add.reduceat(mask, starts, dtype=np.int64)
-        return out
+        """Per-doc True count of a BOOL buffer over valid rows: byte
+        lanes summed in int32 (exact; no float copy of the mask)."""
+        return self._reduce(np.add, mask.view(np.uint8), 0.0, np.int32)
 
     def max(self, x: np.ndarray) -> np.ndarray:
-        return self._reduceat(np.maximum, x, 0.0)
+        return self._reduce(np.maximum, x, 0.0)
 
     def min(self, x: np.ndarray) -> np.ndarray:
-        return self._reduceat(np.minimum, x, 0.0)
-
-    def gather_last(self, x: np.ndarray) -> np.ndarray:
-        out = np.zeros(self.n, dtype=np.float64)
-        out[self.nonempty] = x[self.offsets[1:][self.nonempty] - 1]
-        return out
+        return self._reduce(np.minimum, x, 0.0)
 
     def gather_at(self, x: np.ndarray, idx: np.ndarray) -> np.ndarray:
-        """Value at per-segment position ``idx`` (clipped into segment)."""
+        """Value at per-doc step ``idx`` (clipped into the doc); 0 for
+        empty docs."""
         out = np.zeros(self.n, dtype=np.float64)
         ne = self.nonempty
-        pos = self.offsets[:-1][ne] + np.clip(
-            idx[ne], 0, self.lengths[ne] - 1
-        )
-        out[ne] = x[pos]
+        t = np.clip(idx[ne], 0, self.lengths[ne] - 1)
+        out[ne] = x[self._col[ne] + t * self._stride[ne]]
         return out
 
+    def gather_last(self, x: np.ndarray) -> np.ndarray:
+        return self.gather_at(x, self.lengths - 1)
+
     def broadcast(self, per_seg: np.ndarray) -> np.ndarray:
-        # np.repeat beats per_seg[seg_id]: sequential write, no gather
-        return np.repeat(per_seg, self.lengths)
+        p = np.asarray(per_seg)[self.order]
+        out = np.empty(self.size, dtype=p.dtype)
+        for o, L, n, _, docs in self._blocks:
+            out[o:o + L * n].reshape(L, n)[...] = p[docs]
+        return out
 
 
 # ---------------------------------------------------------------------------
@@ -217,11 +220,11 @@ def inc_flat(seg: Seg, x: np.ndarray, shift: int = 1, depth: int = 1,
              zero_padding: bool = True) -> np.ndarray:
     out = x
     for _ in range(depth):
-        nxt = np.zeros_like(out)
-        nxt[shift:] = out[shift:] - out[:-shift]
-        # zero (or restore) the first `shift` entries of every segment
-        head = seg.pos < shift
-        nxt[head] = 0.0 if zero_padding else x[head]
+        nxt = np.empty_like(out)
+        for v, w, x0 in seg.blocks(out, nxt, x):
+            w[shift:] = v[shift:] - v[:-shift]
+            # zero (or restore) the first `shift` steps of every doc
+            w[:shift] = 0.0 if zero_padding else x0[:shift]
         out = nxt
     return out
 
@@ -244,26 +247,18 @@ def std_flat(seg: Seg, x: np.ndarray, var: bool = True,
 
 
 def nrm_flat(seg: Seg, x: np.ndarray) -> np.ndarray:
-    """Per-segment min-max to [0, 1], constant segments -> 0: the NRM
-    prep and the weighting lookups' normalization (iss._nrm01)."""
-    lo = seg._reduceat(np.minimum, x, 0.0)
-    hi = seg._reduceat(np.maximum, x, 0.0)
-    span = hi - lo
-    safe = np.where(span == 0, 1.0, span)
-    out = (x - seg.broadcast(lo)) / seg.broadcast(safe)
-    return np.where(seg.broadcast(span) == 0, 0.0, out)
+    """Per-doc min-max to [0, 1], constant docs -> 0: the NRM prep and
+    the weighting lookups' normalization (iss._nrm01)."""
+    return nrm_flat_mv(seg, [x], scale_dim=True)[0]
 
 
 def nrm_flat_mv(seg: Seg, cols, scale_dim: bool = False) -> list:
     """Per-dimension NRM over a column list; ``scale_dim=True`` shares
     one min/max across all dims per series (prep.py nrm axis=(1,2))."""
-    if not scale_dim or len(cols) == 1:
+    if not scale_dim:
         return [nrm_flat(seg, c) for c in cols]
-    lo = seg._reduceat(np.minimum, cols[0], 0.0)
-    hi = seg._reduceat(np.maximum, cols[0], 0.0)
-    for c in cols[1:]:
-        lo = np.minimum(lo, seg._reduceat(np.minimum, c, 0.0))
-        hi = np.maximum(hi, seg._reduceat(np.maximum, c, 0.0))
+    lo = np.minimum.reduce([seg.min(c) for c in cols])
+    hi = np.maximum.reduce([seg.max(c) for c in cols])
     span = hi - lo
     safe = np.where(span == 0, 1.0, span)
     blo, bsafe = seg.broadcast(lo), seg.broadcast(safe)
@@ -285,12 +280,8 @@ def bucketed_rows_map(seg: Seg, cols, fn) -> tuple[Seg, list]:
     out_len = np.zeros(seg.n, dtype=np.int64)
     for ln in np.unique(seg.lengths[seg.nonempty]):
         rows = np.nonzero(seg.lengths == ln)[0]
-        gather = (
-            seg.offsets[rows][:, None] + np.arange(int(ln))[None, :]
-        ).ravel()
-        Z = np.stack(
-            [c[gather].reshape(len(rows), int(ln)) for c in cols], axis=1
-        )
+        at = seg.index(rows, int(ln))
+        Z = np.stack([c[at] for c in cols], axis=1)
         R = np.asarray(fn(Z), dtype=np.float64)
         if groups and R.shape[1] != groups[0][1].shape[1]:
             raise ValueError(
@@ -306,14 +297,11 @@ def bucketed_rows_map(seg: Seg, cols, fn) -> tuple[Seg, list]:
         offsets = np.zeros(seg.n + 1, dtype=np.int64)
         np.cumsum(out_len, out=offsets[1:])
         out_seg = Seg(offsets)
-    out = [np.zeros(out_seg.total) for _ in range(groups[0][1].shape[1])]
+    out = [np.zeros(out_seg.size) for _ in range(groups[0][1].shape[1])]
     for rows, R in groups:
-        ln = R.shape[2]
-        gather = (
-            out_seg.offsets[rows][:, None] + np.arange(ln)[None, :]
-        ).ravel()
+        at = out_seg.index(rows, R.shape[2])
         for d, c in enumerate(out):
-            c[gather] = R[:, d, :].ravel()
+            c[at] = R[:, d, :]
     return out_seg, out
 
 
@@ -325,8 +313,10 @@ def indices_lookup_flat(seg: Seg, relative: bool = True,
                         scale: float = 50.0) -> np.ndarray:
     r = (seg.pos + 1).astype(np.float64)
     if relative:
-        r = r / seg.broadcast(seg.lengths.astype(np.float64))
-    return nrm_flat(seg, r) * scale
+        r = r / seg.broadcast(np.maximum(seg.lengths, 1).astype(np.float64))
+    # zero pad lanes: past a doc's end r keeps growing, and exp(alpha *
+    # lookup) of it would overflow there
+    return seg.clean(nrm_flat(seg, r) * scale)
 
 
 def plateaus_lookup_flat(seg: Seg, nplateaus: int, reverse: bool = False,
@@ -341,13 +331,13 @@ def plateaus_lookup_flat(seg: Seg, nplateaus: int, reverse: bool = False,
     L = seg.broadcast(seg.lengths)
     p = (L - 1 - seg.pos) if reverse else seg.pos
     step = seg.broadcast(seg.lengths // nplateaus)
-    vals = np.ones(seg.total, dtype=np.float64)
+    vals = np.ones(seg.size, dtype=np.float64)
     ok = step > 0
-    idx = np.zeros(seg.total, dtype=np.int64)
+    idx = np.zeros(seg.size, dtype=np.int64)
     np.floor_divide(p, step, out=idx, where=ok)
     inside = ok & (idx < nplateaus)
     vals[inside] = idx[inside] / (nplateaus - 1)
-    return nrm_flat(seg, vals) * scale
+    return seg.clean(nrm_flat(seg, vals) * scale)
 
 
 def l1_mass_flat(seg: Seg, x: np.ndarray) -> np.ndarray:
@@ -364,7 +354,7 @@ def l1_lookup_flat(seg: Seg, x: np.ndarray, relative: bool = False,
     s = l1_mass_flat(seg, x)
     if relative:
         s = s / (seg.broadcast(seg.gather_last(s)) + 1e-5)
-    return nrm_flat(seg, s) * scale
+    return seg.clean(nrm_flat(seg, s) * scale)
 
 
 def l2_lookup_flat(seg: Seg, x: np.ndarray, relative: bool = False,
@@ -372,14 +362,14 @@ def l2_lookup_flat(seg: Seg, x: np.ndarray, relative: bool = False,
     s = l2_mass_flat(seg, x)
     if relative:
         s = s / (seg.broadcast(seg.gather_last(s)) + 1e-5)
-    return nrm_flat(seg, s) * scale
+    return seg.clean(nrm_flat(seg, s) * scale)
 
 
 def coquantile_flat(seg: Seg, x: np.ndarray, q: float,
                     norm: str = "L2") -> np.ndarray:
     mass = l1_mass_flat(seg, x) if norm == "L1" else l2_mass_flat(seg, x)
     last = seg.broadcast(seg.gather_last(mass))
-    return seg.sum((mass <= q * last).astype(np.float64)).astype(np.int64)
+    return seg.count(mass <= q * last).astype(np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -560,10 +550,10 @@ def runmax_argmax_flat(seg: Seg, x: np.ndarray):
     strict improvement (ties keep the earlier index — the reference's
     ``>=`` keep-branch, iss.py _runmax_argmax)."""
     r = seg.runmax(x)
-    changed = np.zeros(seg.total, dtype=bool)
-    if seg.total:
-        changed[1:] = r[1:] > r[:-1]
-        changed[seg.offsets[:-1][seg.nonempty]] = True
+    changed = np.empty(seg.size, dtype=bool)
+    for v, c in seg.blocks(r, changed):
+        c[0] = True
+        np.greater(v[1:], v[:-1], out=c[1:])
     upd = np.where(changed, seg.pos.astype(np.float64), -1.0)
     return r, seg.runmax(upd)
 
@@ -585,10 +575,10 @@ def iss_arctic_argmax_flat(
     word = np.asarray(word)
     p = len(word)
     if lookup is None:
-        lookup = np.zeros(seg.total)
+        lookup = np.zeros(seg.size)
         alpha = np.zeros(p, dtype=np.float32)
     a = np.asarray(alpha, dtype=np.float32).astype(np.float64)
-    zeros = np.zeros(seg.total)
+    zeros = np.zeros(seg.size)
     vals: list = [zeros] * p
     idxs: list = [zeros] * p
     tmp = np.zeros_like(cols[0])
@@ -755,20 +745,19 @@ def _masked_feature(seg, stream, cuts, quantiles, reducer, empty=0.0):
     return out
 
 
-def sieve_max_flat(seg, stream, cuts, quantiles):
+def sieve_max_flat(seg, stream, cuts, quantiles, ufunc=np.maximum):
+    """Per-band max (``ufunc=np.minimum``: min); empty bands read 0."""
+    ident = _IDENTITY[ufunc]
+
     def red(m):
-        x = stream if m is None else np.where(m, stream, -np.inf)
-        v = seg._reduceat(np.maximum, x, -np.inf)
+        x = stream if m is None else np.where(m, stream, ident)
+        v = seg._reduce(ufunc, x, ident)
         return np.where(np.isfinite(v), v, 0.0)
     return _masked_feature(seg, stream, cuts, quantiles, red)
 
 
 def sieve_min_flat(seg, stream, cuts, quantiles):
-    def red(m):
-        x = stream if m is None else np.where(m, stream, np.inf)
-        v = seg._reduceat(np.minimum, x, np.inf)
-        return np.where(np.isfinite(v), v, 0.0)
-    return _masked_feature(seg, stream, cuts, quantiles, red)
+    return sieve_max_flat(seg, stream, cuts, quantiles, np.minimum)
 
 
 def sieve_end_flat(seg, stream, cuts):
@@ -817,14 +806,9 @@ def sieve_std_flat(seg, stream, cuts, quantiles):
 
 
 def _pre_inc_flat(seg, stream, inc):
-    arr = stream
-    if inc > 0:
-        for _ in range(inc):
-            arr = inc_flat(seg, arr)
-    elif inc < 0:
-        for _ in range(-inc):
-            arr = seg.cumsum(arr)
-    return arr
+    for _ in range(abs(inc)):
+        stream = inc_flat(seg, stream) if inc > 0 else seg.cumsum(stream)
+    return stream
 
 
 def sieve_npi_flat(seg, stream, cuts, quantiles, inc=1):
@@ -837,16 +821,9 @@ def sieve_npi_flat(seg, stream, cuts, quantiles, inc=1):
 
 
 def sieve_mpi_flat(seg, stream, cuts, quantiles, inc=1):
-    arr = _pre_inc_flat(seg, stream, inc)
-    def red(m):
-        if m is None:
-            cnt = seg.lengths.astype(np.float64)
-            s = seg.sum(arr)
-        else:
-            cnt = seg.count(m)
-            s = seg.sum(np.where(m, arr, 0.0))
-        return np.where(cnt > 0, s / np.maximum(cnt, 1), 0.0)
-    return _masked_feature(seg, arr, cuts, quantiles, red)
+    """Per-band mean of the ``inc``-times incremented stream."""
+    return sieve_avg_flat(seg, _pre_inc_flat(seg, stream, inc), cuts,
+                          quantiles)
 
 
 def sieve_xpi_flat(seg, stream, cuts, quantiles, inc=1):
@@ -873,17 +850,15 @@ def sieve_lpi_flat(seg, stream, cuts, quantiles, inc=1):
     nseg = cuts.shape[1] - 1
     nb = len(quantiles) - 1
     out = np.zeros((seg.n, nseg * nb))
-    gidx = np.arange(seg.total)
-    seg_start = seg.broadcast(seg.offsets[:-1])
     for j in range(nseg):
         for k in range(nb):
             m = _seg_band_mask(seg, arr, cuts, j, quantiles, k)
             if m is None:
                 out[:, j * nb + k] = seg.lengths
                 continue
-            last_false = np.maximum.accumulate(np.where(~m, gidx, -1))
-            reset = np.maximum(last_false, seg_start - 1)
-            runs = np.where(m, gidx - reset, 0)
+            # run length = steps since the doc's last False (or start)
+            last_false = seg.runmax(np.where(m, -1, seg.pos))
+            runs = np.where(m, seg.pos - last_false, 0)
             out[:, j * nb + k] = seg.max(runs.astype(np.float64))
     return out
 
@@ -909,17 +884,9 @@ def sieve_cpv_flat(seg, stream, quantiles, segments=False):
     qs = list(quantiles)
 
     def rising(mask):
-        # rising edge = True preceded by False, never at a segment
-        # start (the float-increment form this replaces zeroed segment
-        # heads); all-bool arithmetic — 1-byte traffic instead of the
-        # former 8-byte float increment chain, identical counts
-        if mask.size == 0:
-            return np.zeros(seg.n, dtype=np.float64)
-        r = np.empty_like(mask)
-        r[1:] = mask[1:] & ~mask[:-1]
-        r[0] = False
-        r[seg.offsets[:-1][seg.nonempty]] = False
-        return seg.count(r)
+        # rising edge = True preceded by False, never at a doc's first
+        # step (the shift fills row 0 with True); all-bool arithmetic
+        return seg.count(mask & ~seg.shift1(mask, fill=True))
 
     if segments:
         out = np.zeros((seg.n, len(qs) - 1))

@@ -40,20 +40,15 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from fruits_spark.engine import io as IO
     from fruits_spark.engine import rollup as RU
 
     spark = SparkSession.builder.appName("route-query").getOrCreate()
     t0 = time.time()
 
-    def read_tier(name):
-        df = spark.read.parquet(f"{args.tiers}/tier={name}")
-        # partition-type inference can parse date-looking run ids
-        # (run=2026-08-16) into DateType — keep them strings so the
-        # run-set compare and JSON output never choke
-        return df.withColumn("run", F.col("run").cast("string"))
-
-    fine = read_tier("t1k")
-    coarse = read_tier("t100k")
+    # healed reads, run ids as strings (see io.read_tier)
+    fine = IO.read_tier(spark, args.tiers, "t1k")
+    coarse = IO.read_tier(spark, args.tiers, "t100k")
     # cell-key dedupe (at-least-once data rows) + run-set equality live
     # in rollup.route_query_cells, shared with the correctness gate;
     # keep a deduped view here for the factor sanity check + --verify

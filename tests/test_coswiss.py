@@ -135,7 +135,7 @@ def test_coswiss_multi_bit_identical_to_per_word():
 
 def test_coswiss_flat_multi_bit_identical():
     """Univariate input is the one-column case of the flat CosWISS trie;
-    on a one-row batch (no cumsum carry) it must reproduce the bucketed
+    on a one-row batch it must reproduce the bucketed
     coswiss_multi bit for bit — same per-path op order, exponents
     applied as repeated multiplies like _pow_product."""
     from fruits_spark.kernels.flat import Seg, coswiss_flat_multi_mv
@@ -151,8 +151,9 @@ def test_coswiss_flat_multi_bit_identical():
         seg = Seg(np.array([0, len(x)]))
         for total in (False, True):
             for s in (1, 2):
-                multi = coswiss_flat_multi_mv(seg, [x], words, 0.5,
-                                              exponent=s, total=total)
+                multi = coswiss_flat_multi_mv(seg, [seg.enter(x)], words,
+                                              0.5, exponent=s, total=total)
+                multi = [seg.leave(m) for m in multi]
                 want = coswiss_multi(x[None, None, :], words, 0.5,
                                      exponent=s, total=total)
                 for wi in range(len(words)):
@@ -178,6 +179,7 @@ def test_coswiss_multi_duplicate_words_all_filled():
     rows = [RNG.integers(0, 9, l).astype(np.float64) for l in (4, 7)]
     values, offsets = flatten_lists(pd.Series(rows))
     seg = Seg(offsets)
+    values = seg.enter(values)
     wf = W("[1][1]").matrix
     mf = coswiss_flat_multi_mv(seg, [values], [wf, wf], 0.5, exponent=2,
                                total=True)

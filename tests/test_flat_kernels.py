@@ -203,11 +203,17 @@ def test_flat_only_ops_handle_empty_and_tiny_segments(name):
 
 def test_seg_primitives():
     seg = KF.Seg(np.array([0, 3, 3, 7]))
-    x = np.array([1.0, 2, 3, 10, 20, 30, 40])
-    np.testing.assert_array_equal(seg.cumsum(x), [1, 3, 6, 10, 30, 60, 100])
-    np.testing.assert_array_equal(seg.shift1(x), [0, 1, 2, 0, 10, 20, 30])
-    y = np.array([3.0, 1, 2, 5, 4, 6, 1])
-    np.testing.assert_array_equal(seg.runmax(y), [3, 3, 3, 5, 5, 6, 6])
+    x = seg.enter(np.array([1.0, 2, 3, 10, 20, 30, 40]))
+    np.testing.assert_array_equal(
+        seg.leave(seg.cumsum(x)), [1, 3, 6, 10, 30, 60, 100]
+    )
+    np.testing.assert_array_equal(
+        seg.leave(seg.shift1(x)), [0, 1, 2, 0, 10, 20, 30]
+    )
+    y = seg.enter(np.array([3.0, 1, 2, 5, 4, 6, 1]))
+    np.testing.assert_array_equal(
+        seg.leave(seg.runmax(y)), [3, 3, 3, 5, 5, 6, 6]
+    )
     np.testing.assert_array_equal(seg.sum(x), [6, 0, 100])
     np.testing.assert_array_equal(seg.gather_last(x), [3, 0, 40])
 
@@ -222,7 +228,7 @@ def test_cumsum_fallback_exact_across_huge_segments():
     offsets = np.concatenate([[0], np.cumsum(lens)])
     x = np.array([2.0**52] * 7 + [1, 2, 3, 4, 5], dtype=np.float64)
     seg = Seg(offsets)
-    got = seg.cumsum(x)
+    got = seg.leave(seg.cumsum(seg.enter(x)))
     want = np.concatenate(
         [np.cumsum(x[offsets[i]:offsets[i + 1]]) for i in range(4) if lens[i]]
     )

@@ -8,7 +8,7 @@ import itertools
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fruits_spark.engine.executor import (
@@ -166,6 +166,24 @@ MV_WORDS = ["[1]", "[12]", "[1][2]", "[11][2]", "[2][1][1]", "[1][22]"]
     mode=st.sampled_from(["single", "extended"]),
     d=st.integers(1, 2),
 )
+# rows e^50 apart under an L1 weighting: a cross-doc running carry left
+# ~ulp(carry) of error in the later, smaller doc (found by this test)
+@example(rows=[[0, 1, 0], [0, 0, 0]], wi=4, sr="reals", weighting="l1",
+         total=False, mode="single", d=2)
+@example(rows=[[0, 1, 0], [0, 0, 0]], wi=4, sr="reals", weighting="l1",
+         total=False, mode="extended", d=2)
+@example(rows=[[1, 0, 1], [1, 1, 0, 1]], wi=2, sr="reals", weighting="l1",
+         total=True, mode="single", d=1)
+@example(rows=[[1, 0, 1], [1, 1, 0, 1]], wi=2, sr="reals", weighting="l1",
+         total=True, mode="extended", d=1)
+@example(rows=[[0, 13, 18], [0, 0, 0]], wi=4, sr="reals", weighting="l1",
+         total=False, mode="single", d=1)
+@example(rows=[[0, 13, 18], [0, 0, 0]], wi=4, sr="reals", weighting="l1",
+         total=False, mode="extended", d=1)
+@example(rows=[[0, 1, 0], [0, 0]], wi=2, sr="reals", weighting="l1",
+         total=True, mode="single", d=2)
+@example(rows=[[0, 1, 0], [0, 0]], wi=2, sr="reals", weighting="l1",
+         total=True, mode="extended", d=2)
 def test_flat_matches_bucketed_all_spec_combos(rows, wi, sr, weighting,
                                                total, mode, d):
     """Every (semiring x weighting x total x mode x dims) combo the flat

@@ -66,9 +66,9 @@ def test_multivariate_block_chunking_matches_unchunked(spark, monkeypatch):
     generic prep adapter); features must be identical.
 
     Integer inputs in multiples of the MAV width keep every window mean
-    and prefix sum an exact integer: the flat layout's global cumsum
-    minus per-segment carry is then bit-exact whatever the chunk
-    boundaries (on float inputs it differs in the last ulp)."""
+    and prefix sum an exact integer; the flat layout scans and reduces
+    each doc on its own, so no chunk boundary can change a doc's
+    numbers."""
     rng = np.random.default_rng(7)
     rows = [
         (i, (3 * rng.integers(-4, 5, size=(2, 13))).astype(float).tolist(),
@@ -419,35 +419,6 @@ def test_bpe_train_and_tokenize(spark):
     feats = extract_features(toks, fplan).collect()
     by_id = {r["doc_id"]: r[fc[0]] for r in feats}
     assert by_id[0] == float(sum(rows[0]["tokens"]))
-
-
-def test_carry_modes_bit_identical():
-    """slice and gather carry subtraction must be bit-identical (same
-    float op per element); the auto rule picks by mean segment length."""
-    import importlib
-
-    import fruits_spark.kernels.flat as KF
-
-    rng = np.random.default_rng(3)
-    lens = rng.integers(1, 700, size=300)
-    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
-    x = rng.normal(size=int(offsets[-1]))
-    outs = {}
-    orig = KF._CARRY_MODE
-    try:
-        for mode in ("auto", "slice", "gather"):
-            KF._CARRY_MODE = mode
-            outs[mode] = KF.Seg(offsets).cumsum(x.copy())
-    finally:
-        KF._CARRY_MODE = orig
-    np.testing.assert_array_equal(outs["slice"], outs["gather"])
-    np.testing.assert_array_equal(outs["auto"], outs["slice"])
-    # reference: independent per-segment cumsums
-    ref = np.empty_like(x)
-    for i in range(len(lens)):
-        s, e = offsets[i], offsets[i + 1]
-        ref[s:e] = np.cumsum(x[s:e])
-    np.testing.assert_allclose(outs["auto"], ref, rtol=1e-12, atol=1e-9)
 
 
 def test_query_offset_disjoint_window(spark):

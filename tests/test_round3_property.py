@@ -1,13 +1,13 @@
 """Property-based fuzz for the round-3 surfaces: WAV container
-round-trips, BPE encode/decode inverses, and carry-mode equivalence on
-arbitrary segment shapes.  No Spark session needed — these exercise the
+round-trips, BPE encode/decode inverses, and the flat kernels' scans
+against per-doc scans on arbitrary batch shapes.  No Spark session needed — these exercise the
 pure kernels / codecs directly."""
 
 import io
 import wave
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fruits_spark.multimodal import wav_blob
@@ -75,22 +75,32 @@ def test_bpe_encode_decode_inverse(texts, n_merges):
 
 @settings(max_examples=40, deadline=None)
 @given(
-    lens=st.lists(st.integers(0, 900), min_size=1, max_size=120),
+    docs=st.lists(
+        st.tuples(st.integers(0, 400), st.floats(0.0, 50.0)),
+        min_size=1, max_size=120,
+    ),
     seed=st.integers(0, 2**31 - 1),
 )
-def test_carry_modes_equal_any_shape(lens, seed):
-    """slice/gather/auto carry variants agree bit-for-bit on arbitrary
-    segment shapes, including empty segments."""
+@example(docs=[(0, 0.0), (0, 0.0), (0, 0.0)], seed=0)  # all-empty batch
+@example(docs=[(7, 50.0), (0, 0.0), (3, 0.0), (4, 1.0)], seed=1)
+def test_seg_scans_equal_per_doc_scans(docs, seed):
+    """Seg.cumsum / Seg.runmax equal independent per-doc np.cumsum /
+    np.maximum.accumulate bit for bit on any batch shape, with empty
+    docs and rows scaled up to e^50 next to unscaled ones (a carried
+    running sum leaves ~ulp(carry) of error in a later, smaller doc)."""
     import fruits_spark.kernels.flat as KF
 
+    rng = np.random.default_rng(seed)
+    lens = [n for n, _ in docs]
     offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
-    x = np.random.default_rng(seed).normal(size=int(offsets[-1]))
-    outs = {}
-    orig = KF._CARRY_MODE
-    try:
-        for mode in ("slice", "gather"):
-            KF._CARRY_MODE = mode
-            outs[mode] = KF.Seg(offsets).cumsum(x.copy())
-    finally:
-        KF._CARRY_MODE = orig
-    np.testing.assert_array_equal(outs["slice"], outs["gather"])
+    x = np.concatenate(
+        [rng.normal(size=n) * np.exp(s) for n, s in docs] + [np.zeros(0)]
+    )
+    seg = KF.Seg(offsets)
+    xb = seg.enter(x)
+    cs = seg.leave(seg.cumsum(xb))
+    rm = seg.leave(seg.runmax(xb))
+    for i in range(len(lens)):
+        s, e = offsets[i], offsets[i + 1]
+        np.testing.assert_array_equal(cs[s:e], np.cumsum(x[s:e]))
+        np.testing.assert_array_equal(rm[s:e], np.maximum.accumulate(x[s:e]))

@@ -157,7 +157,7 @@ def test_weighted_cse_bit_identical_to_per_word():
     offsets = np.zeros(13, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     seg = KF.Seg(offsets)
-    cols = [rng.normal(size=int(offsets[-1])) for _ in range(2)]
+    cols = [seg.enter(rng.normal(size=int(offsets[-1]))) for _ in range(2)]
 
     cases = [
         (tuple(of_weight(3, 1)), "reals", 1),
@@ -197,7 +197,7 @@ def test_weighted_cse_bit_identical_to_per_word():
         )
         for k in want:
             np.testing.assert_array_equal(
-                got[k], want[k],
+                seg.leave(got[k]), seg.leave(want[k]),
                 err_msg=f"{semiring}/{weighting}/{mode}/d={d}"
                         f"/total={total}/stream {k}",
             )
@@ -247,7 +247,8 @@ def test_weighted_total_flat_matches_bucketed_all_semirings():
     np.cumsum(lengths, out=offsets[1:])
     seg = KF.Seg(offsets)
     # bayesian multiplies magnitudes — keep near 1
-    cols = [0.5 + 0.2 * rng.random(int(offsets[-1])) for _ in range(2)]
+    raw = [0.5 + 0.2 * rng.random(int(offsets[-1])) for _ in range(2)]
+    cols = [seg.enter(c) for c in raw]
     lk_flat = KF.indices_lookup_flat(seg)
 
     for semiring in ("reals", "arctic", "bayesian"):
@@ -256,11 +257,12 @@ def test_weighted_total_flat_matches_bucketed_all_semirings():
             flat = KF.iss_flat_mv(seg, cols[:d], word.matrix, extended=2,
                                   semiring=semiring, alpha=a32,
                                   lookup=lk_flat, total=True)
+            flat = [seg.leave(f) for f in flat]
             for i in range(len(lengths)):
                 s, e = offsets[i], offsets[i + 1]
                 if e == s:
                     continue
-                Z = np.stack([c[s:e] for c in cols[:d]])[np.newaxis]
+                Z = np.stack([c[s:e] for c in raw[:d]])[np.newaxis]
                 lk = KI.indices_lookup(1, int(e - s))
                 res = KI.iss(Z, word.matrix, extended=2, semiring=semiring,
                              alpha=a32, lookup=lk, total=True)

@@ -1,7 +1,8 @@
 """Store-cycle passes must not redo work: a commit keeps the caller's
 cache, counts inside its write and writes right-sized files, compaction
 skips a directory or manifest already at its floor, manifest reads
-infer no schema, and retirement drops directories without a job.  Job
+infer no schema, retirement drops directories (lock files included)
+without a job, and a tier read heals an interrupted compaction.  Job
 counts come from job groups and the status tracker, so timing noise
 cannot hide a regression."""
 
@@ -208,6 +209,50 @@ def test_retire_runs_runs_no_job(spark, tmp_path):
     assert LI.completed_cells(spark, base, old, "t1k").count() == 0
     assert _rows(LI.completed_cells(spark, base, kept, "t1k"),
                  ("source", "bucket", "n_docs", "n_tokens")) == sorted(CELLS)
+    cells.unpersist()
+
+
+def test_retire_leaves_no_dot_entry_of_the_run(spark, tmp_path):
+    """Retirement removes the run's lock files (and any staging debris)
+    from ``tier=`` and ``codec_`` dirs, not only its data: a long-lived
+    base must not gain one ``.run=<r>__compact.lock`` per run."""
+    from fruits_spark.engine import io as IO
+
+    base = str(tmp_path / "store")
+    cells = _built(spark)
+    for run in ("r1", "r2"):
+        LI.commit_cells(cells, spark, base, run, "t1k", n_points_per_doc=2)
+        IO.write_tier(cells, base, "codec_t1k", run)
+        CP.compact_run(spark, base, ["t1k"], run)  # locks both run dirs
+    for d in ("tier=t1k", "codec_t1k"):
+        assert ".run=r1__compact.lock" in os.listdir(os.path.join(base, d))
+    IO.drop_retired_partitions(spark, base, "codec_t1k", ["r1"])
+    LI.retire_runs(spark, base, ["t1k"], ["r1"])
+    for d in ("tier=t1k", "codec_t1k"):
+        left = sorted(os.listdir(os.path.join(base, d)))
+        assert [e for e in left if "r1" in e] == [], (d, left)
+        assert "run=r2" in left
+    cells.unpersist()
+
+
+def test_tier_read_heals_interrupted_compaction(spark, tmp_path):
+    """A tier read heals a compaction swap that crashed between its two
+    renames: ``tier=t1k/run=r1`` left as a complete staged copy plus
+    the old live dir, beside a live ``run=r2``; the read sees both."""
+    from fruits_spark.engine import io as IO
+
+    base = str(tmp_path / "store")
+    cells = _built(spark)
+    for run in ("r1", "r2"):
+        LI.commit_cells(cells, spark, base, run, "t1k", n_points_per_doc=2)
+    live = os.path.join(base, "tier=t1k", "run=r1")
+    spark.read.parquet(live).coalesce(1).write.parquet(CP.staged_path(live))
+    os.rename(live, CP.old_path(live))
+    got = IO.read_tier(spark, base, "t1k")
+    assert sorted(r.run for r in got.select("run").distinct().collect()) \
+        == ["r1", "r2"]
+    assert got.count() == 2 * len(CELLS)
+    assert os.path.exists(live) and not os.path.exists(CP.old_path(live))
     cells.unpersist()
 
 

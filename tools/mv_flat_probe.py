@@ -7,18 +7,22 @@ oracle run per length group, on one of two 2-channel plans:
   features — reference ``experiments/fruit_reduced.py:1-74``);
 * ``mv_prep``: the benchmark's ``mv_plan(MV_PREP)`` (MAV(4) in front,
   99 features) — MAV has no flat kernel, so the flat path runs it
-  through the generic per-length-group prep adapter.
+  through the generic per-length-group prep adapter;
+* ``fruit_general``: the ``fruit_reduced`` plan with the reference
+  fruit_general's ``of_weight(6, 2)`` (956 words) in its weighted
+  slice — flat path only (the bucketed oracle would take minutes).
 
 Usage: python tools/mv_flat_probe.py [n_docs] [mean_len] [reps] [plan]
 
-Prints per-path wall (min over reps), points/s, and the max abs/rel
-deviation between the two paths' features (should be ~1e-9-grade carry
-rounding only).  Run warm, min-of-N — shared hosts swing 3-5x.
+Prints per-path wall (min over reps), points/s, the max abs/rel
+deviation between the two paths' features, and the process's peak RSS.
+Run warm, min-of-N — shared hosts swing 3-5x.
 """
 
 from __future__ import annotations
 
 import os
+import resource
 import sys
 import time
 
@@ -55,12 +59,12 @@ def arctic_words(n: int):
     )
 
 
-def fruit_reduced_plan() -> FruitPlan:
+def fruit_reduced_plan(weight: int = 4) -> FruitPlan:
     cos_words = tuple(w for k in range(1, 4) for w in of_weight(k, 2))
     slices = [
         Slice(
             preps=(Prep("new", {"prep": Prep("inc")}), Prep("std")),
-            iss=ISSSpec(of_weight(4, 2), mode="extended",
+            iss=ISSSpec(of_weight(weight, 2), mode="extended",
                         weighting="indices"),
             sieves=SIEVES_7,
         ),
@@ -95,6 +99,8 @@ def main() -> None:
         from perfbench.plans import MV_PREP, mv_plan
 
         fplan = mv_plan(MV_PREP)
+    elif which == "fruit_general":
+        fplan = fruit_reduced_plan(weight=6)
     else:
         fplan = fruit_reduced_plan()
         assert fplan.n_features() == 4431
@@ -122,6 +128,10 @@ def main() -> None:
 
     flat_out, t_flat = time_path(
         lambda: compute_features_flat(list(cols), offsets, fplan), "flat-mv")
+    rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    print(f"peak RSS after the flat path: {rss:.0f} MB")
+    if which == "fruit_general":
+        return
 
     def bucketed():
         out = np.zeros((n, fplan.n_features()))

@@ -121,8 +121,6 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=101)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from fruits_spark.engine import compact as CP
     from fruits_spark.engine import io as IO
     from fruits_spark.engine import lineage as LI
@@ -141,8 +139,7 @@ def main() -> None:
                                              2 * args.cores)
 
         def tier(t):
-            return spark.read.parquet(os.path.join(base, f"tier={t}")) \
-                .withColumn("run", F.col("run").cast("string"))
+            return IO.read_tier(spark, base, t)
 
         steps = Steps(spark)
         tiers = list(TIERS)
