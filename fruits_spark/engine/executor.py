@@ -164,30 +164,24 @@ def _emit_streams_block(Zp: np.ndarray, specs: tuple, Z_orig=None):
     """Yield final-level streams (n, l) for a chain of ISS specs on a
     3-D block (chained ISS semantics: fruit.py:440-454 — each stream of
     spec_i feeds spec_{i+1} as a univariate series)."""
-    spec = specs[0]
-    if isinstance(spec, Pl.CosWISSSpec):
-        # cross-word CSE per frequency (coswiss_multi: words sharing a
-        # letter prefix share the scan chain, bit-identical results);
-        # emission stays word-major, which forces buffering ALL
-        # n_words * n_freqs streams of this spec; each slot is released
-        # as soon as it is consumed so peak decays over the emission
-        per_freq = {
-            f: KI.coswiss_multi(
-                Zp, [w.matrix for w in spec.words], f,
-                exponent=spec.exponent, total=spec.total,
+    for stream in _spec_streams_block(Zp, specs[0], Z_orig):
+        if len(specs) == 1:
+            yield stream
+        else:
+            yield from _emit_streams_block(
+                stream[:, np.newaxis, :], specs[1:], Z_orig
             )
-            for f in spec.freqs
-        }
-        for wi, w in enumerate(spec.words):
+
+
+def _spec_streams_block(Zp: np.ndarray, spec, Z_orig):
+    """One spec's streams (n, l) on a 3-D block, in plan label order."""
+    if isinstance(spec, Pl.CosWISSSpec):
+        # word-major, one per-word kernel call per (word, freq): the
+        # flat trie (KF.coswiss_flat_multi_mv) is pinned to this kernel
+        for w in spec.words:
             for f in spec.freqs:
-                stream = per_freq[f][wi]
-                per_freq[f][wi] = None  # release once consumed
-                if len(specs) == 1:
-                    yield stream
-                else:
-                    yield from _emit_streams_block(
-                        stream[:, np.newaxis, :], specs[1:], Z_orig
-                    )
+                yield KI.coswiss(Zp, w.matrix, f, exponent=spec.exponent,
+                                 total=spec.total)
         return
     lookup = _lookup_for(spec, Zp, Z_orig)
     if getattr(spec, "argmax", False):
@@ -198,13 +192,7 @@ def _emit_streams_block(Zp: np.ndarray, specs: tuple, Z_orig=None):
             )
             streams = KI.iss_arctic_argmax(Zp, w.matrix, alpha, lookup)
             for s in range(streams.shape[1]):
-                stream = streams[:, s, :]
-                if len(specs) == 1:
-                    yield stream
-                else:
-                    yield from _emit_streams_block(
-                        stream[:, np.newaxis, :], specs[1:], Z_orig
-                    )
+                yield streams[:, s, :]
         return
     pplan = spec.plan()
     for wi, w in enumerate(spec.words):
@@ -220,13 +208,7 @@ def _emit_streams_block(Zp: np.ndarray, specs: tuple, Z_orig=None):
             alpha=alpha, lookup=lookup, total=spec.total,
         )
         for s in range(depth):
-            stream = streams[:, s, :]
-            if len(specs) == 1:
-                yield stream
-            else:
-                yield from _emit_streams_block(
-                    stream[:, np.newaxis, :], specs[1:], Z_orig
-                )
+            yield streams[:, s, :]
 
 
 def compute_features_block(Z: np.ndarray, fplan: Pl.FruitPlan) -> np.ndarray:
@@ -424,8 +406,8 @@ def _emit_level_flat(seg, cols: list, spec, src: _Source):
                 f"word uses dim {w.matrix.shape[1]} but input has {len(cols)}"
             )
     if isinstance(spec, Pl.CosWISSSpec):
-        # cross-word CSE per frequency (bit-identical; see
-        # KF.coswiss_flat_multi_mv); the flat emitter yields explicit
+        # cross-word CSE per frequency, per doc bit-identical to the
+        # oracle's per-word KI.coswiss; the flat emitter yields explicit
         # stream indices, so per-freq batches emit directly
         n_freqs = len(spec.freqs)
         for fi, f in enumerate(spec.freqs):
@@ -469,9 +451,9 @@ def _emit_level_flat_cse(seg, cols: list, spec, lookup):
     the forward state.  Emission accounting mirrors PrefixPlan, which
     keys on letters alone: each emitted prefix belongs to the first word
     that introduced it, so the emission set and stream indices are
-    exactly the per-word path's.  Per-node ops replicate the per-word
-    oracle's op order (``KF.iss_flat_mv``), so shared-prefix streams are
-    bit-identical to running each word separately."""
+    exactly the per-word path's.  Per-node ops replicate the bucketed
+    oracle's per-word op order (``KI.iss``), so per doc every stream is
+    bit-identical to that kernel's on the doc alone (test_round5)."""
     from ..kernels import flat as KF
 
     weighted = lookup is not None

@@ -1,10 +1,11 @@
 """Tiered continuous aggregates: raw -> 1k-token -> 100k-token rollups.
 
 A *tier* groups documents into ``(source, bucket)`` cells; the bucket of
-a doc is ``hash_bucket(doc_id, tier.n_buckets)`` so cells are stable,
-deterministic and independent of row order.  Tier aggregates are plain
-JVM hash aggregations (partial + final, map-side combine comes free from
-Catalyst) over the wide per-doc feature columns produced by
+a doc is ``pmod(xxhash64(doc_id), n_buckets)`` (:func:`bucket_col`), so
+cells are stable, deterministic and independent of row order.  Tier
+aggregates are plain JVM hash aggregations (partial + final, map-side
+combine comes free from Catalyst) over the wide per-doc feature columns
+produced by
 :func:`fruits_spark.engine.executor.extract_features` — the only shuffle
 in the pipeline is this groupBy, shuffling one already-reduced row per
 document, never token data.
@@ -42,22 +43,9 @@ class Tier:
     tokens_per_bucket: int  # target token volume per rollup cell
 
 
-DEFAULT_TIERS = (
-    Tier("raw", 0),            # per-document (no rollup)
-    Tier("t1k", 1_000),
-    Tier("t100k", 100_000),
-)
-
-
 def bucket_col(n_buckets: int, doc_col: str = "doc_id"):
     """Deterministic doc -> bucket assignment (xxhash64, JVM-side)."""
     return F.pmod(F.xxhash64(F.col(doc_col)), F.lit(n_buckets)).cast("int")
-
-
-def n_buckets_for(tier: Tier, total_tokens: int, min_buckets: int = 4) -> int:
-    if tier.tokens_per_bucket <= 0:
-        raise ValueError("raw tier is per-document; no bucket count")
-    return max(min_buckets, int(total_tokens // tier.tokens_per_bucket) or 1)
 
 
 def rollup_tier(

@@ -8,10 +8,10 @@ operator and length class, however the lengths are distributed.  It is
 the engine's only production layout: a series is a list of
 per-dimension columns sharing one :class:`Seg` geometry (univariate =
 one column, with no univariate twin kernels).  The bucketed kernels
-remain the reference-parity oracle for this module's tests,
-:func:`iss_flat_mv` the per-word oracle of the executor's ISS prefix
-trie, and the per-group body :func:`bucketed_rows_map` runs for
-preparateurs that have no flat form.
+are this module's one oracle: per doc, the executor's ISS prefix trie
+matches ``iss.iss`` and :func:`coswiss_flat_multi_mv` matches per-word
+``iss.coswiss`` bit for bit; they are also the per-group body
+:func:`bucketed_rows_map` runs for preparateurs that have no flat form.
 
 Layout: :class:`Seg` sorts a batch's docs by length and cuts them into
 ``N_CLASSES`` equal-count length classes; each class is one time-major
@@ -25,8 +25,9 @@ on entry, possibly inf/nan later) and no valid row ever reads them.
 Primitives: scans (``np.cumsum`` / ``np.maximum.accumulate`` down axis
 0 per class, so each doc's ops run in the oracle's order and a pad row
 only follows valid rows: bit-identical to a per-doc scan); a per-class
-row shift; per-doc reductions over valid rows only, float sums in time
-order (the oracle's ``np.sum`` is pairwise: equal to rounding).
+row shift; per-doc reductions over valid rows only.  A float sum is a
+doc's last prefix sum, in time order whatever batch the doc is in (the
+oracle's ``np.sum`` is pairwise: equal to rounding).
 """
 
 from __future__ import annotations
@@ -148,28 +149,21 @@ class Seg:
 
     def _reduce(self, ufunc, x: np.ndarray, empty_val: float,
                 dtype=None) -> np.ndarray:
-        """Per-doc ``ufunc`` reduction over valid rows, in doc order."""
-        timed = ufunc is np.add and x.dtype.kind == "f"
+        """Per-doc ``ufunc`` reduction over valid rows, in doc order, for
+        an order-free ``ufunc`` (max/min, integer counts)."""
         r = np.full(self.n, _IDENTITY[ufunc], dtype=dtype or x.dtype)
-        for (o, L, n, h, docs), ok in zip(self._blocks, self._tail_ok):
-            v = x[o:o + L * n].reshape(L, n)
-            if timed:
-                # a float sum runs in time order: the head rows' column
-                # sums, then each tail row with its pad lanes zeroed
-                acc = np.zeros((L - h + 1, n))
-                np.add.reduce(v[:h], axis=0, out=acc[0])
-                np.copyto(acc[1:], v[h:], where=ok)
-                np.add.reduce(acc, axis=0, out=r[docs])
-            elif h:
-                # max/min/counts are order-free: k head rows fold into
-                # one row, so an inner loop spans ~_LANES lanes, not n
+        for o, L, n, h, docs in self._blocks:
+            if h:
+                # k head rows fold into one row, so an inner loop spans
+                # ~_LANES lanes, not n
                 k = max(1, _LANES // n)
+                v = x[o:o + L * n].reshape(L, n)
                 part = ufunc.reduce(v[:h].reshape(h // k, k * n), axis=0,
                                     dtype=dtype)
                 ufunc.reduce(part.reshape(k, n), axis=0, out=r[docs])
         out = np.empty(self.n, dtype=np.float64)
         out[self.order] = r
-        if not timed and len(self._tail_docs):
+        if len(self._tail_docs):
             # ... and their valid tail lanes, gathered doc by doc
             t = self._tail_docs
             out[t] = ufunc(out[t], ufunc.reduceat(
@@ -179,7 +173,9 @@ class Seg:
         return out
 
     def sum(self, x: np.ndarray) -> np.ndarray:
-        return self._reduce(np.add, x, 0.0)
+        """Per-doc float sum in time order: a doc's last prefix sum, so
+        it does not depend on which docs share its batch (0 if empty)."""
+        return self.gather_last(self.cumsum(x))
 
     def count(self, mask: np.ndarray) -> np.ndarray:
         """Per-doc True count of a BOOL buffer over valid rows: byte
@@ -373,8 +369,8 @@ def coquantile_flat(seg: Seg, x: np.ndarray, q: float,
 
 
 # ---------------------------------------------------------------------------
-# ISS letters and the per-word scan (the executor's one prefix trie builds
-# on the letter ops; iss_flat_mv is the per-word oracle it is pinned to)
+# ISS letter ops (the executor's one prefix trie builds on them, in the
+# bucketed iss.iss op order it is pinned to) and CosWISS
 # ---------------------------------------------------------------------------
 
 def _mul_letter_nd(tmp: np.ndarray | None, cols, exps) -> np.ndarray:
@@ -436,113 +432,6 @@ def _mul_chain(tmp: np.ndarray, w: np.ndarray, k: int,
             tmp = tmp * w
             owned = True
     return tmp
-
-
-def iss_flat_mv(
-    seg: Seg,
-    cols,
-    word: np.ndarray,
-    extended: int = 1,
-    semiring: str = "reals",
-    alpha: np.ndarray | None = None,
-    lookup: np.ndarray | None = None,
-    total: bool = False,
-) -> list[np.ndarray]:
-    """Per-word ISS on a flat batch; returns ``extended`` flat stream
-    arrays (shortest prefix first).  ``cols`` is one flat float64 array
-    per input dimension (shared ``seg`` geometry; univariate = one
-    column), ``word`` a (letters, dims) exponent matrix.  Same
-    recurrences as :func:`fruits_spark.kernels.iss.iss` on (n, d, l)
-    blocks — the only dimension-aware ops are the per-letter monomials
-    (:func:`_mul_letter_nd`) and arctic linear combinations
-    (:func:`_lin_combo_nd`), both in bucketed op order.  Test oracle
-    only: production ISS runs through the executor's prefix trie."""
-    word = np.asarray(word)
-    if word.shape[1] > len(cols):
-        raise ValueError(
-            f"word uses dim {word.shape[1]} but input has {len(cols)}"
-        )
-    k_total = word.shape[0]
-    weighted = lookup is not None
-    if weighted:
-        a = np.asarray(
-            alpha if alpha is not None else np.ones(k_total), dtype=np.float32
-        ).astype(np.float64)
-    results: list[np.ndarray] = []
-
-    if semiring == "reals":
-        if weighted and total:
-            tmp = None
-            for k in range(k_total):
-                tmp = _mul_letter_nd(tmp, cols, word[k])
-                tmp = seg.cumsum(tmp * np.exp(lookup * a[k]))
-                if k_total - k <= extended:
-                    results.append(tmp * np.exp(-lookup * a[k]))
-                if k < k_total - 1:
-                    tmp = seg.shift1(tmp) * np.exp(-lookup * a[k])
-        else:
-            tmp = None
-            for k in range(k_total):
-                if k > 0:
-                    tmp = seg.shift1(tmp)
-                tmp = _mul_letter_nd(tmp, cols, word[k])
-                if weighted and k > 0:
-                    tmp = tmp * np.exp(-lookup * a[k - 1])
-                if k_total - k <= extended:
-                    results.append(seg.cumsum(tmp))
-                if k < k_total - 1:
-                    if weighted:
-                        tmp = seg.cumsum(tmp * np.exp(lookup * a[k]))
-                    else:
-                        tmp = seg.cumsum(tmp)
-    elif semiring == "arctic":
-        tmp = np.zeros_like(cols[0])
-        if weighted and total:
-            for k in range(k_total):
-                tmp = tmp + _lin_combo_nd(cols, word[k])
-                tmp = seg.runmax(tmp + lookup * a[k])
-                if k_total - k <= extended:
-                    results.append(tmp - lookup * a[k])
-                if k < k_total - 1:
-                    tmp = tmp - lookup * a[k]
-        else:
-            for k in range(k_total):
-                tmp = tmp + _lin_combo_nd(cols, word[k])
-                if weighted and k > 0:
-                    tmp = tmp - lookup * a[k - 1]
-                if k_total - k <= extended:
-                    results.append(seg.runmax(tmp))
-                if k < k_total - 1:
-                    if weighted:
-                        tmp = seg.runmax(tmp + lookup * a[k])
-                    else:
-                        tmp = seg.runmax(tmp)
-    elif semiring == "bayesian":
-        tmp: np.ndarray | None = np.ones_like(cols[0])
-        if weighted and total:
-            # mirror of the bucketed _iss_bayesian_total (round-5 fix)
-            for k in range(k_total):
-                tmp = _mul_letter_nd(tmp, cols, word[k])
-                tmp = seg.runmax(tmp * np.exp(lookup * a[k]))
-                if k_total - k <= extended:
-                    results.append(tmp * np.exp(-lookup * a[k]))
-                if k < k_total - 1:
-                    tmp = tmp * np.exp(-lookup * a[k])
-        else:
-            for k in range(k_total):
-                tmp = _mul_letter_nd(tmp, cols, word[k])
-                if weighted and k > 0:
-                    tmp = tmp * np.exp(-lookup * a[k - 1])
-                if k_total - k <= extended:
-                    results.append(seg.runmax(tmp))
-                if k < k_total - 1:
-                    if weighted:
-                        tmp = seg.runmax(tmp * np.exp(lookup * a[k]))
-                    else:
-                        tmp = seg.runmax(tmp)
-    else:
-        raise ValueError(semiring)
-    return results
 
 
 def runmax_argmax_flat(seg: Seg, x: np.ndarray):
@@ -618,11 +507,14 @@ def coswiss_flat_multi_mv(
     total: bool = False,
 ) -> list[np.ndarray]:
     """Flat-layout CosWISS for many words of one frequency with
-    cross-word CSE (mirror of ``iss.coswiss_multi`` on a per-dimension
-    column list; univariate = one column): trie keys are full letter
-    tuples trimmed of trailing zero exponents, so words declared over
-    fewer dims than the input share streams exactly as the bucketed
-    kernel's zero-padding makes them."""
+    cross-word CSE on a per-dimension column list (univariate = one
+    column): a word trie layered over ``iss.coswiss``'s gap-choice trie.
+    Each word's root-to-leaf op sequences and leaf accumulation order
+    are per-word ``iss.coswiss``'s, so per doc its stream is that
+    kernel's bit for bit.  Trie keys are letter tuples trimmed of
+    trailing zero exponents, so words declared over fewer dims than the
+    input share streams as the bucketed kernel's zero-padding makes
+    them."""
     from math import comb
 
     f32 = float(np.float32(freq))

@@ -494,94 +494,6 @@ def coswiss(
     return result
 
 
-def coswiss_multi(
-    Z: np.ndarray,
-    words,
-    freq: float,
-    exponent: int = 2,
-    total: bool = False,
-) -> list[np.ndarray]:
-    """CosWISS for MANY words of one frequency with cross-word CSE:
-    words sharing a letter prefix share the scan chain per gap-choice
-    prefix (a word trie layered over :func:`coswiss`'s gap-choice trie).
-    Returns per-word results BIT-IDENTICAL to ``coswiss(Z, w, ...)`` —
-    for every word the root-to-leaf operation sequences and the
-    lexicographic leaf accumulation order are exactly the per-word
-    kernel's; sharing only removes recomputation of identical prefixes
-    (same argument as the reals scan trie in the executor)."""
-    from math import comb
-
-    if Z.ndim == 2:
-        Z = Z[:, np.newaxis, :]
-    Z = np.ascontiguousarray(Z, dtype=np.float64)
-    n, _, length = Z.shape
-    f32 = float(np.float32(freq))
-    denom = f32 * (length - 1) if length > 1 else 1.0
-    g = np.pi * np.arange(length) / denom
-    sin_w, cos_w = np.sin(g), np.cos(g)
-
-    letter_seqs = []
-    for w in words:
-        w = np.asarray(w, dtype=np.int32)
-        if w.shape[1] < Z.shape[1]:
-            w = np.pad(w, ((0, 0), (0, Z.shape[1] - w.shape[1])))
-        letter_seqs.append(tuple(tuple(int(e) for e in row) for row in w))
-
-    children: dict[tuple, list] = {(): []}
-    # a letter sequence may belong to SEVERAL word indices (duplicate
-    # words, or words that collapse after dim zero-padding) — every one
-    # of them must receive the shared stream
-    ends: dict[tuple, list] = {}
-    for wi, ls in enumerate(letter_seqs):
-        for j in range(len(ls)):
-            node, nxt = ls[:j], ls[:j + 1]
-            kids = children.setdefault(node, [])
-            if nxt not in kids:
-                kids.append(nxt)
-            children.setdefault(nxt, [])
-        ends.setdefault(ls, []).append(wi)
-
-    results = [np.zeros((n, length), dtype=np.float64) for _ in words]
-    letter_arr = {
-        child: np.asarray(child[-1], dtype=np.int32)
-        for kids in children.values() for child in kids
-    }
-
-    def step(state, letter, k, sin_e, cos_e):
-        tmp = _shift1(state) if k > 0 else state
-        tmp = _pow_product(Z, letter, tmp)
-        tmp = _mul_pow(tmp, sin_w, sin_e)
-        tmp = _mul_pow(tmp, cos_w, cos_e)
-        return _cumsum(tmp)
-
-    def dfs(node, state, coeff, prev):
-        k = len(node)
-        right_sin = (exponent - prev) if k > 0 else 0
-        right_cos = prev if k > 0 else 0
-        for child in children[node]:
-            letter = letter_arr[child]
-            wis = ends.get(child, ())
-            if wis and not total:
-                # word(s) end here: the last letter has no following gap
-                st = step(state, letter, k, right_sin, right_cos)
-                for wi in wis:
-                    results[wi] += coeff * st
-            if children[child] or (wis and total):
-                for c in range(exponent + 1):
-                    st = step(state, letter, k,
-                              right_sin + (exponent - c), right_cos + c)
-                    if wis and total:
-                        tmp = _mul_pow(st, sin_w, exponent - c)
-                        tmp = _mul_pow(tmp, cos_w, c)
-                        for wi in wis:
-                            results[wi] += (coeff * comb(exponent, c)) * tmp
-                    if children[child]:
-                        dfs(child, st, coeff * comb(exponent, c), c)
-
-    dfs((), np.ones((n, length), dtype=np.float64), 1, 0)
-    return results
-
-
 # ---------------------------------------------------------------------------
 # weighting lookups + coquantiles (reference: iss/weighting.py, cache.py)
 # ---------------------------------------------------------------------------

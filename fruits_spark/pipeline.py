@@ -866,19 +866,6 @@ def lsh_bucket_expr(hyperplanes, col: str = "embedding"):
     return F.expr(" + ".join(terms))
 
 
-def ann_lsh_buckets(
-    emb: DataFrame,
-    hyperplanes,
-    id_col: str = "vec_id",
-    col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH for ANN at scale: neighbor search joins on
-    the bucket — candidates per query drop from N to N/2^bits."""
-    return emb.select(
-        F.col(id_col), lsh_bucket_expr(hyperplanes, col).alias("lsh_bucket")
-    )
-
-
 def embedding_near_dups_multi(
     emb: DataFrame,
     hyperplane_tables,

@@ -16,7 +16,7 @@ mirroring how Spark broadcasts small fitted state to executors.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Sequence
+from typing import Any
 
 from .words import PrefixPlan, SimpleWord
 
@@ -194,21 +194,3 @@ class FruitPlan:
         for s in self.slices:
             out.extend(s.feature_labels())
         return out
-
-
-def simple_plan(
-    words: Sequence[SimpleWord],
-    preps: Sequence[Prep] = (),
-    sieves: Sequence[Sieve] = (Sieve("end"),),
-    mode: str = "single",
-    semiring: str = "reals",
-) -> FruitPlan:
-    return FruitPlan(
-        (
-            Slice(
-                preps=tuple(preps),
-                iss=ISSSpec(tuple(words), mode=mode, semiring=semiring),
-                sieves=tuple(sieves),
-            ),
-        )
-    )

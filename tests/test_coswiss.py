@@ -114,67 +114,52 @@ def test_dropout_zeroes_indices():
     np.testing.assert_allclose(res, expect, rtol=1e-12)
 
 
-def test_coswiss_multi_bit_identical_to_per_word():
-    """Cross-word CSE (coswiss_multi) must return BIT-identical streams
-    to the per-word kernel for every word, exponent, and total mode —
-    sharing may only remove recomputation, never change op order."""
-    from fruits_spark.kernels.iss import coswiss_multi
-    from fruits_spark.words import of_weight
-
-    Z = RNG.normal(size=(5, 2, 32))
-    words = [w.matrix for w in of_weight(3, 2)] + [
-        w.matrix for w in of_weight(1, 2)
-    ]
-    for total in (False, True):
-        for s in (1, 2):
-            multi = coswiss_multi(Z, words, 0.5, exponent=s, total=total)
-            for wi, w in enumerate(words):
-                single = coswiss(Z, w, 0.5, exponent=s, total=total)
-                assert np.array_equal(multi[wi], single)
-
-
 def test_coswiss_flat_multi_bit_identical():
-    """Univariate input is the one-column case of the flat CosWISS trie;
-    on a one-row batch it must reproduce the bucketed
-    coswiss_multi bit for bit — same per-path op order, exponents
-    applied as repeated multiplies like _pow_product."""
+    """The flat CosWISS trie must reproduce the bucketed per-word
+    coswiss on every doc bit for bit — same per-path op order,
+    exponents applied as repeated multiplies like _pow_product — on
+    multi-row float batches with empty docs, univariate (the one-column
+    case) and d = 2, words declared over fewer dims than the input
+    included."""
     from fruits_spark.kernels.flat import Seg, coswiss_flat_multi_mv
-    from fruits_spark.kernels.iss import coswiss_multi
     from fruits_spark.words import of_weight
 
-    rows = [RNG.integers(0, 20, l).astype(np.float64)
-            for l in (5, 12, 1, 30, 8)]
-    words = [w.matrix for w in of_weight(3, 1)] + [
-        w.matrix for w in of_weight(1, 1)
-    ]
-    for x in rows:
-        seg = Seg(np.array([0, len(x)]))
+    lengths = np.array([5, 0, 12, 1, 30, 0, 8, 17, 2, 9])
+    offsets = np.concatenate([[0], np.cumsum(lengths)])
+    seg = Seg(offsets)
+    for d in (1, 2):
+        raw = [RNG.normal(size=int(offsets[-1])) for _ in range(d)]
+        cols = [seg.enter(c) for c in raw]
+        words = [w.matrix for k in (1, 2, 3) for w in of_weight(k, d)]
+        if d == 2:
+            words += [w.matrix for w in of_weight(2, 1)]
         for total in (False, True):
             for s in (1, 2):
-                multi = coswiss_flat_multi_mv(seg, [seg.enter(x)], words,
-                                              0.5, exponent=s, total=total)
-                multi = [seg.leave(m) for m in multi]
-                want = coswiss_multi(x[None, None, :], words, 0.5,
-                                     exponent=s, total=total)
-                for wi in range(len(words)):
-                    assert np.array_equal(multi[wi], want[wi][0])
+                for f in (0.05, 0.5):
+                    multi = coswiss_flat_multi_mv(seg, cols, words, f,
+                                                  exponent=s, total=total)
+                    multi = [seg.leave(m) for m in multi]
+                    for j in range(seg.n):
+                        a, b = offsets[j], offsets[j + 1]
+                        if a == b:
+                            continue
+                        Z = np.stack([c[a:b] for c in raw])[np.newaxis]
+                        for wi, w in enumerate(words):
+                            np.testing.assert_array_equal(
+                                multi[wi][a:b],
+                                coswiss(Z, w, f, exponent=s,
+                                        total=total)[0],
+                                err_msg=f"d={d}/s={s}/f={f}/total={total}"
+                                        f"/doc {j}/word {wi}",
+                            )
 
 
 def test_coswiss_multi_duplicate_words_all_filled():
-    """Duplicate words (or words identical after dim padding) must each
-    receive the shared stream — not silently zero out."""
-    from fruits_spark.kernels.iss import coswiss_multi
+    """Duplicate words must each receive the shared stream of the flat
+    CosWISS trie — not silently zero out."""
     import pandas as pd
     from fruits_spark.kernels.flat import Seg, coswiss_flat_multi_mv
     from fruits_spark.kernels.segments import flatten_lists
-
-    Z = RNG.normal(size=(3, 2, 12))
-    w = W("[1][2]").matrix
-    w_padded = np.array([[1, 0], [0, 1]])  # same letters after padding
-    multi = coswiss_multi(Z, [w, w, w_padded], 0.5, exponent=1)
-    single = coswiss(Z, w, 0.5, exponent=1)
-    for r in multi:
-        assert np.array_equal(r, single)
 
     rows = [RNG.integers(0, 9, l).astype(np.float64) for l in (4, 7)]
     values, offsets = flatten_lists(pd.Series(rows))

@@ -233,3 +233,35 @@ def test_cumsum_fallback_exact_across_huge_segments():
         [np.cumsum(x[offsets[i]:offsets[i + 1]]) for i in range(4) if lens[i]]
     )
     np.testing.assert_array_equal(got, want)
+
+
+@pytest.mark.parametrize("d", [1, 2])
+def test_features_do_not_depend_on_batching(d):
+    # a doc's per-doc sums (STD prep, AVG sieve) must run in time order
+    # however many docs share its length class: a class of one column
+    # once summed pairwise, so a doc alone in a small batch got other
+    # STD features, and PPV(0.0) counted other signs, than in a big one
+    from fruits_spark.words import of_weight
+
+    rng = np.random.default_rng(5)
+    lengths = rng.integers(0, 60, size=40)
+    offsets = np.concatenate([[0], np.cumsum(lengths)])
+    cols = [rng.normal(size=int(offsets[-1])) * 10.0 ** k for k in range(d)]
+    fplan = FruitPlan((Slice(
+        preps=(Prep("std"),),
+        iss=ISSSpec(tuple(of_weight(3, d)), mode="extended"),
+        sieves=(
+            Sieve("end"),
+            Sieve("ppv", {"quantiles": [0.0], "constant": [True]}),
+            Sieve("avg", {"faithful": False}),
+        ),
+    ),))
+    whole = compute_features_flat(cols, offsets, fplan)
+    alone = np.vstack([
+        compute_features_flat(
+            [c[offsets[i]:offsets[i + 1]] for c in cols],
+            np.array([0, lengths[i]]), fplan,
+        )
+        for i in range(len(lengths))
+    ])
+    np.testing.assert_array_equal(whole, alone)

@@ -135,29 +135,66 @@ def test_multisine_noise_deterministic_and_seeded(spark):
     assert len(set(ra[0])) > 10
 
 
-def test_weighted_cse_bit_identical_to_per_word():
-    """The prefix-CSE emitter must reproduce the per-word iss_flat_mv
-    streams BIT-exactly (shared-prefix scans are the same op sequences)
-    for every semiring, weighted or not, univariate and mv, incl.
-    alternate-sign alphas, words sharing letters at depth 0 and
-    bayesian letters with exponent >= 2."""
-    import itertools
-
+def _assert_trie_matches_bucketed(seg, offsets, cols, spec, err_msg):
+    """The executor's prefix trie vs the bucketed oracle run per doc on
+    the doc alone, with the trie's own lookup rows: bit for bit."""
     import numpy as np
 
     from fruits_spark.engine.executor import (
         _Source, _emit_level_flat, _lookup_flat,
     )
+    from fruits_spark.kernels import iss as KI
+
+    src = _Source(seg, cols)
+    lookup = _lookup_flat(spec, seg, cols, src)
+    # negative exponents divide by the zeros in pad lanes
+    with np.errstate(divide="ignore", invalid="ignore"):
+        got = {
+            i: seg.leave(stream)
+            for i, stream in _emit_level_flat(seg, cols, spec, src)
+        }
+    flat_lookup = None if lookup is None else seg.leave(lookup)
+    flat_cols = [seg.leave(c) for c in cols]
+    pplan = spec.plan()
+    for j in range(seg.n):
+        s, e = offsets[j], offsets[j + 1]
+        if e == s:
+            continue
+        Z = np.stack([c[s:e] for c in flat_cols])[np.newaxis]
+        lk = None if lookup is None else flat_lookup[s:e][np.newaxis]
+        i = 0
+        for wi, w in enumerate(spec.words):
+            depth = pplan.depth(wi) if pplan is not None else 1
+            if depth == 0:
+                continue
+            want = KI.iss(
+                Z, w.matrix, extended=depth, semiring=spec.semiring,
+                alpha=np.array(w.alpha, dtype=np.float32), lookup=lk,
+                total=spec.total,
+            )[0]
+            for lvl in range(depth):
+                np.testing.assert_array_equal(
+                    got[i][s:e], want[lvl],
+                    err_msg=f"{err_msg}/doc {j}/stream {i}",
+                )
+                i += 1
+        assert i == len(got), err_msg
+
+
+def test_weighted_cse_bit_identical_to_per_word():
+    """The prefix-CSE emitter must reproduce the bucketed oracle's
+    per-word streams BIT-exactly on every doc (shared-prefix scans are
+    the same op sequences) for every semiring, weighted or not,
+    univariate and mv, incl. alternate-sign alphas, words sharing
+    letters at depth 0, bayesian letters with exponent >= 2 and
+    negative exponents."""
+    import itertools
+
+    import numpy as np
+
     from fruits_spark.kernels import flat as KF
     from fruits_spark.plan import ISSSpec
     from fruits_spark.words import W, alternate_sign, of_weight
-
-    rng = np.random.default_rng(7)
-    lengths = rng.integers(0, 40, size=12)
-    offsets = np.zeros(13, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    seg = KF.Seg(offsets)
-    cols = [seg.enter(rng.normal(size=int(offsets[-1]))) for _ in range(2)]
 
     cases = [
         (tuple(of_weight(3, 1)), "reals", 1),
@@ -167,39 +204,27 @@ def test_weighted_cse_bit_identical_to_per_word():
         ((W("[1][11]"), W("[1][2]"), W("[1][11]")), "bayesian", 2),
         ((W("[11][1]"), W("[11][1][1]")), "bayesian", 1),
         ((W("[1][11]"), W("[1][111]")), "bayesian", 1),
+        ((W("[1][(-1)]"), W("[12][1]")), "reals", 2),
+        ((W("[1][(-1)]"), W("[12][1]")), "bayesian", 2),
     ]
-    for (words, semiring, d), weighting, mode, total in itertools.product(
-        cases, (None, "indices"), ("single", "extended"), (False, True)
-    ):
-        spec = ISSSpec(words, mode=mode, semiring=semiring,
-                       weighting=weighting, total=total)
-        src = _Source(seg, cols[:d])
-        lookup = _lookup_flat(spec, seg, cols[:d], src)
-        got = dict(_emit_level_flat(seg, cols[:d], spec, src))
-        # per-word oracle (the pre-CSE path)
-        pplan = spec.plan()
-        want = {}
-        i = 0
-        for wi, w in enumerate(spec.words):
-            depth = pplan.depth(wi) if pplan is not None else 1
-            if depth == 0:
-                continue
-            alpha = np.array(w.alpha, dtype=np.float32)
-            for stream in KF.iss_flat_mv(
-                seg, cols[:d], w.matrix, extended=depth,
-                semiring=semiring, alpha=alpha, lookup=lookup,
-                total=total,
-            ):
-                want[i] = stream
-                i += 1
-        assert set(got) == set(want), (
-            semiring, weighting, mode, d, total
-        )
-        for k in want:
-            np.testing.assert_array_equal(
-                seg.leave(got[k]), seg.leave(want[k]),
-                err_msg=f"{semiring}/{weighting}/{mode}/d={d}"
-                        f"/total={total}/stream {k}",
+    for seed in (7, 8):
+        rng = np.random.default_rng(seed)
+        lengths = rng.integers(0, 40, size=12)
+        offsets = np.zeros(13, dtype=np.int64)
+        np.cumsum(lengths, out=offsets[1:])
+        seg = KF.Seg(offsets)
+        cols = [seg.enter(rng.normal(size=int(offsets[-1])))
+                for _ in range(2)]
+        for (words, semiring, d), weighting, mode, total in (
+            itertools.product(cases, (None, "indices"),
+                              ("single", "extended"), (False, True))
+        ):
+            spec = ISSSpec(words, mode=mode, semiring=semiring,
+                           weighting=weighting, total=total)
+            _assert_trie_matches_bucketed(
+                seg, offsets, cols[:d], spec,
+                f"seed {seed}/{semiring}/{weighting}/{mode}/d={d}"
+                f"/total={total}",
             )
 
 
@@ -233,12 +258,13 @@ def test_unweighted_cse_duplicate_words_single_mode():
 
 def test_weighted_total_flat_matches_bucketed_all_semirings():
     """Weighted + total=True on the flat path vs the bucketed kernels
-    for every semiring, univariate and multivariate.  Pins the round-5
-    fix: flat bayesian used to silently run the NON-total recurrence
-    for this combo (max err ~0.2)."""
+    for every semiring, univariate and multivariate, bit for bit.  Pins
+    the round-5 fix: flat bayesian used to silently run the NON-total
+    recurrence for this combo (max err ~0.2)."""
     import numpy as np
 
-    from fruits_spark.kernels import flat as KF, iss as KI
+    from fruits_spark.kernels import flat as KF
+    from fruits_spark.plan import ISSSpec
     from fruits_spark.words import W
 
     rng = np.random.default_rng(3)
@@ -247,30 +273,15 @@ def test_weighted_total_flat_matches_bucketed_all_semirings():
     np.cumsum(lengths, out=offsets[1:])
     seg = KF.Seg(offsets)
     # bayesian multiplies magnitudes — keep near 1
-    raw = [0.5 + 0.2 * rng.random(int(offsets[-1])) for _ in range(2)]
-    cols = [seg.enter(c) for c in raw]
-    lk_flat = KF.indices_lookup_flat(seg)
+    cols = [seg.enter(0.5 + 0.2 * rng.random(int(offsets[-1])))
+            for _ in range(2)]
 
     for semiring in ("reals", "arctic", "bayesian"):
         for d, word in ((1, W("[1][11][1]")), (2, W("[1][12][2]"))):
-            a32 = np.array(word.alpha, dtype=np.float32)
-            flat = KF.iss_flat_mv(seg, cols[:d], word.matrix, extended=2,
-                                  semiring=semiring, alpha=a32,
-                                  lookup=lk_flat, total=True)
-            flat = [seg.leave(f) for f in flat]
-            for i in range(len(lengths)):
-                s, e = offsets[i], offsets[i + 1]
-                if e == s:
-                    continue
-                Z = np.stack([c[s:e] for c in raw[:d]])[np.newaxis]
-                lk = KI.indices_lookup(1, int(e - s))
-                res = KI.iss(Z, word.matrix, extended=2, semiring=semiring,
-                             alpha=a32, lookup=lk, total=True)
-                for lvl in range(2):
-                    np.testing.assert_allclose(
-                        flat[lvl][s:e], res[0][lvl], rtol=1e-9, atol=1e-12,
-                        err_msg=f"{semiring}/d={d}/row {i}/lvl {lvl}",
-                    )
+            spec = ISSSpec((word,), mode="extended", semiring=semiring,
+                           weighting="indices", total=True)
+            _assert_trie_matches_bucketed(seg, offsets, cols[:d], spec,
+                                          f"{semiring}/d={d}")
 
 
 def test_embedding_near_dups_gram_matches_expr(spark):
