@@ -114,7 +114,7 @@ def warmup(spark, toks, fplan, full: bool = True):
     fc = feature_columns(fplan)
     # cache the warmup slice: the timed rollup reads the cached feature
     # table (InMemoryTableScan), a different codegen stage than a rollup
-    # straight off mapInPandas — warm the path that will actually run
+    # straight off mapInArrow — warm the path that will actually run
     feats = extract_features(toks.limit(2048), fplan).cache()
     feats.count()
     # cache + count the rollup too: the first InMemoryRelation build for

@@ -8,7 +8,7 @@ continuous aggregates over tables of pre-tokenized training sequences
 Layers:
   * :mod:`fruits_spark.words`   — word algebra + prefix-CSE plan (driver).
   * :mod:`fruits_spark.kernels` — pure-NumPy scan kernels (executors,
-    inside Arrow-batched pandas UDFs).
+    inside the Arrow-batched extract UDF).
   * :mod:`fruits_spark.plan`    — declarative pipeline spec ("Fruit"
     equivalent) compiled to a DataFrame DAG.
   * :mod:`fruits_spark.engine`  — Spark session, rollup tiers, gap-fill,

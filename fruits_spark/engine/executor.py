@@ -1,11 +1,12 @@
 """Compile a :class:`~fruits_spark.plan.FruitPlan` into a Spark job.
 
-Hot path = ONE ``mapInPandas`` over the token table: each Arrow batch is
-flattened to per-dimension columns sharing one ``offsets`` array
-(univariate = one column), sub-batched by points, and every slice's
+Hot path = ONE ``mapInArrow`` over the token table: each Arrow batch's
+list buffers are read as per-dimension columns sharing one ``offsets``
+array (univariate = one column), sub-batched by points, and every slice's
 prep -> ISS -> sieve chain runs as segmented NumPy ops on the flat
 layout (:mod:`fruits_spark.kernels.flat`).  Preps without a flat kernel
-run the bucketed kernel per length group inside the same body.  No
+run the bucketed kernel per length group inside the same body, and each
+sub-batch goes back as one Arrow RecordBatch.  No pandas frame, no
 per-row Python, no shuffle — feature extraction is embarrassingly
 parallel across partitions; the only shuffles in an end-to-end job are
 the rollup ``groupBy`` afterwards.
@@ -25,15 +26,15 @@ import re
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from .. import plan as Pl
 from ..kernels import iss as KI
 from ..kernels import prep as KP
 from ..kernels import sieve as KS
-from ..kernels.segments import flatten_lists, flatten_lists_mv
+from ..kernels.segments import read_lists
 
 
 def _apply_prep(Z: np.ndarray, p: Pl.Prep) -> np.ndarray:
@@ -671,9 +672,9 @@ class ExtractStats:
         self.rows = sc.accumulator(0)
         self.tokens = sc.accumulator(0)
         # worker-side time split in microseconds (summed across all
-        # workers — divide by active cores for wall): Arrow batch ->
-        # flat (values, offsets), the numpy kernels, and the output
-        # frame build.  Quantifies the non-kernel share of extraction.
+        # workers — divide by active cores for wall): the whole Arrow
+        # read (list buffers -> flat columns), the numpy kernels, and
+        # the RecordBatch builds.  PySpark's Arrow stream I/O is outside.
         self.flatten_us = sc.accumulator(0)
         self.kernel_us = sc.accumulator(0)
         self.emit_us = sc.accumulator(0)
@@ -698,19 +699,23 @@ def extract_features(
     multivariate: bool = False,
     stats: "ExtractStats | None" = None,
 ) -> DataFrame:
-    """Token table -> per-doc feature table (one mapInPandas, no shuffle).
+    """Token table -> per-doc feature table (one mapInArrow, no shuffle).
 
     ``cast_scale``: optional multiplier applied after casting tokens to
     float64 (e.g. 1/TOKEN_MOD to keep monomials bounded without a fitted
     preparateur).
 
-    ``multivariate``: ``tokens_col`` holds array<array<double>> (dims x
-    steps); rows are grouped by dim count, each group runs as its own
-    column list.  Univariate input is the one-column case.
+    ``multivariate``: ``tokens_col`` holds array<array<number>> (dims x
+    steps), not array<number> (the 1-dim case); checked, nothing else.
     """
     import os
     import time
 
+    dt = df.schema[tokens_col].dataType
+    el = getattr(dt, "elementType", None)
+    if el is None or multivariate != isinstance(el, ArrayType):
+        raise ValueError(f"extract_features(multivariate={multivariate}) "
+                         f"cannot read {tokens_col!r}: {dt.simpleString()}")
     fcols = feature_columns(fplan)
     keep_fields = [df.schema[k] for k in keep]
     out_schema = StructType(
@@ -745,36 +750,26 @@ def extract_features(
             getattr(stats, timer).add(int((t1 - t0) * 1e6))
         return t1
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             t0 = time.perf_counter()
-            if multivariate:
-                groups = flatten_lists_mv(pdf[tokens_col])
-            else:
-                values, offsets = flatten_lists(pdf[tokens_col])
-                groups = [(np.arange(len(pdf)), [values], offsets)]
+            groups = read_lists(batch.column(tokens_col))
+            kept = batch.select(list(keep))
             t0 = clock("flatten_us", t0)
-            kept = pdf[list(keep)]
             for rows, cols, offsets in groups:
                 if cast_scale is not None:
-                    for c in cols:
-                        c *= cast_scale
+                    cols = [c * cast_scale for c in cols]
                 for s, e in spans(offsets, len(cols)):
                     o = offsets[s:e + 1]
                     sub = [c[o[0]:o[-1]] for c in cols]
                     feats = compute_features_flat(sub, o - o[0], fplan)
                     t0 = clock("kernel_us", t0)
-                    # single-block frame (no per-column inserts: pandas
-                    # fragmentation warning + O(cols) block copies on
-                    # wide plans)
-                    out = pd.concat(
-                        [
-                            kept.iloc[rows[s:e]].reset_index(drop=True),
-                            pd.DataFrame(feats, columns=fcols, copy=False),
-                        ],
-                        axis=1,
+                    out = pa.RecordBatch.from_arrays(
+                        kept.take(rows[s:e]).columns
+                        + [pa.array(f) for f in np.ascontiguousarray(feats.T)],
+                        names=out_schema.names,
                     )
                     if stats is not None:
                         stats.batches.add(1)
@@ -784,4 +779,4 @@ def extract_features(
                     yield out
                     t0 = time.perf_counter()
 
-    return df.select(*keep, tokens_col).mapInPandas(run, out_schema)
+    return df.select(*keep, tokens_col).mapInArrow(run, out_schema)

@@ -1,6 +1,6 @@
 """Pure-NumPy kernel library (no Spark dependency).
 
-Everything the Spark layer executes inside pandas UDFs lives here so it
+Everything the Spark layer executes inside Arrow UDFs lives here so it
 can be unit-tested against the reference semantics without a JVM.
 """
 

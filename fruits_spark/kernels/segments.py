@@ -1,19 +1,17 @@
 """Variable-length sequence batches -> Arrow's flat list layout.
 
-Arrow hands a pandas UDF a Series of lists.  The engine converts that to
-per-dimension flat float64 columns plus one int64 ``offsets`` array
-(Arrow's own list layout) and runs every operator as segmented array ops
-on them (:mod:`.flat`) — no padding, no per-length blocks.
-
-This replaces the reference's numba ``prange`` over series
-(``fruits/iss/semiring.py:184-200``) as the intra-executor
-parallelization strategy: vectorize across rows, parallelize across
-Spark partitions.
+Arrow's list layout is the engine's: per-dimension flat float64 columns
+plus one int64 ``offsets`` array, run as segmented array ops
+(:mod:`.flat`) — no padding, no per-length blocks; :func:`read_lists`
+reads it off a ``mapInArrow`` batch.  This replaces the reference's
+numba ``prange`` over series (``fruits/iss/semiring.py:184-200``):
+vectorize across rows, parallelize across Spark partitions.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 
 def flatten_lists(col) -> tuple[np.ndarray, np.ndarray]:
@@ -27,27 +25,33 @@ def flatten_lists(col) -> tuple[np.ndarray, np.ndarray]:
     return values, offsets
 
 
-def flatten_lists_mv(rows) -> list[tuple[np.ndarray, list, np.ndarray]]:
-    """Sequence of (dims, length) nested rows -> one ``(row positions,
-    per-dim flat columns, offsets)`` triple per distinct dim count, in
-    order of first appearance.  Rows with 0 steps are empty segments;
-    0-dim rows (``[]``) form a group with no columns."""
-    n_dims = np.fromiter((len(r) for r in rows), dtype=np.int64,
-                         count=len(rows))
-    out = []
+def read_lists(col: pa.Array) -> list[tuple[np.ndarray, list, np.ndarray]]:
+    """Arrow ``list<num>`` or ``list<list<num>>`` (dims x steps) column ->
+    one ``(row positions, per-dim float64 columns, offsets)`` triple per
+    dim count, in order of first appearance; ``list<num>`` is the 1-dim
+    case and 0-dim rows (``[]``) form a group with no columns.  Null
+    numbers read as NaN; a null row or dim, or a row whose dims differ
+    in length, raises ValueError."""
+    nested = isinstance(col.type.value_type, (pa.ListType, pa.LargeListType))
+    if col.null_count or (nested and col.flatten().null_count):
+        raise ValueError(f"null token row or dim in a {col.type} column")
+    # row r's dims are dims[first[r]:first[r + 1]], dim j's values are
+    # values[ends[j]:ends[j + 1]]; an empty list array may lack offsets
+    dims = col.values if nested else col
+    first = col.offsets.to_numpy() if nested else np.arange(len(col) + 1)
+    ends = dims.offsets.to_numpy() if len(dims) else np.zeros(1, np.int64)
+    values = dims.values.cast(pa.float64()).to_numpy(zero_copy_only=False)
+    lens, n_dims, out = np.diff(ends), np.diff(first), []
     for d in dict.fromkeys(n_dims.tolist()):
-        pos = np.nonzero(n_dims == d)[0]
-        lengths = np.fromiter(
-            (len(rows[i][0]) if d else 0 for i in pos),
-            dtype=np.int64, count=len(pos),
-        )
-        offsets = np.zeros(len(pos) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        cols = [np.empty(offsets[-1], dtype=np.float64) for _ in range(d)]
-        for j, i in enumerate(pos):
-            s, e = offsets[j], offsets[j + 1]
-            if e > s:
-                for dim in range(d):
-                    cols[dim][s:e] = rows[i][dim]
-        out.append((pos, cols, offsets))
+        pos = np.flatnonzero(n_dims == d)
+        f = first[pos]
+        steps = lens[f] if d else np.zeros(len(pos), dtype=np.int64)
+        bad = (lens[f[:, None] + np.arange(1, d)] != steps[:, None]).any(1)
+        if bad.any():
+            r = pos[np.argmax(bad)]
+            raise ValueError(f"token row {r}: dims differ in length "
+                             f"{lens[first[r]:first[r + 1]].tolist()}")
+        offsets = np.concatenate([[0], np.cumsum(steps, dtype=np.int64)])
+        out.append((pos, [np.take(values, np.arange(offsets[-1]) + np.repeat(
+            ends[f + k] - offsets[:-1], steps)) for k in range(d)], offsets))
     return out

@@ -8,7 +8,7 @@ partials table, and compacted into the tier by re-aggregating partials —
 no raw token data is ever revisited.
 
 ``foreachBatch`` is the DEFAULT construct: the per-sequence math lives
-in the same ``extract_features`` mapInPandas used by batch jobs, the
+in the same ``extract_features`` mapInArrow used by batch jobs, the
 sink is an ordinary table, and exactly-once comes from the (checkpoint,
 batch_id) pair — each batch id writes to its own subdirectory, making
 replays idempotent.  :func:`stateful_tier_updates` is the always-current

@@ -1,8 +1,10 @@
 """Every plan runs flat: per-prep parity of the flat executor against the
 bucketed 3-D oracle, and edge inputs where the flat path must return the
 oracle's numbers or raise its error (words reading dims the input lacks,
-negative DIM indices, all-empty sub-batches, mixed dim counts) —
-checked through ``extract_features``, not only through kernels."""
+negative DIM indices, all-empty sub-batches, mixed dim counts,
+rows whose dims differ in length, a multivariate column read without
+``multivariate=True``) — checked through ``extract_features``, not only
+through kernels."""
 
 from __future__ import annotations
 
@@ -143,6 +145,42 @@ def _block_rows(docs, fplan):
     return out
 
 
+@pytest.mark.parametrize("leaf", ["int32", "float64"])
+@pytest.mark.parametrize("sliced", [False, True])
+def test_read_lists_matches_a_row_loop(leaf, sliced):
+    """The Arrow reader's vectorised gathers equal a per-row loop over
+    the same docs: groups in order of first dim count, 0-dim and 0-step
+    rows, and a sliced column (offsets not starting at 0)."""
+    import pyarrow as pa
+
+    from fruits_spark.kernels.segments import read_lists
+
+    rng = np.random.default_rng(23)
+    docs = [rng.integers(-5, 9, size=(int(rng.choice([0, 1, 2, 3])),
+                                      int(rng.integers(0, 6)))).tolist()
+            for _ in range(40)]
+    col = pa.array(docs, type=pa.list_(pa.list_(getattr(pa, leaf)())))
+    uni = [d[0] for d in docs if len(d) == 1]
+    ucol = pa.array(uni, type=pa.list_(getattr(pa, leaf)()))
+    if sliced:
+        col, docs = col.slice(5, 30), docs[5:35]
+        ucol, uni = ucol.slice(2, len(uni) - 4), uni[2:-2]
+    cases = [(col, docs), (ucol, [[u] for u in uni])]
+    for arr, rows in cases:
+        groups = read_lists(arr)
+        n_dims = [len(r) for r in rows]
+        assert [len(cols) for _, cols, _ in groups] == list(dict.fromkeys(n_dims))
+        for pos, cols, offsets in groups:
+            assert pos.tolist() == [i for i, d in enumerate(n_dims)
+                                    if d == len(cols)]
+            for k, c in enumerate(cols):
+                want = [float(x) for i in pos for x in rows[i][k]]
+                assert c.dtype == np.float64 and c.tolist() == want
+            assert offsets.tolist() == np.cumsum(
+                [0] + [len(rows[i][0]) if rows[i] else 0 for i in pos]
+            ).tolist()
+
+
 def test_mixed_dim_batch_splits_by_dim_count(spark, monkeypatch):
     """2- and 3-channel docs (plus 0-dim and 0-step docs) in ONE Arrow
     batch, with a prep that has no flat kernel: each dim group runs
@@ -168,6 +206,12 @@ def test_mixed_dim_batch_splits_by_dim_count(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_TOKEN_BUDGET", "40")
     np.testing.assert_allclose(_extract(df, fplan), want,
                                rtol=1e-9, atol=1e-9)
+    # a row whose dims differ in length has no oracle value (NumPy would
+    # broadcast the short dim, or read the row as an empty doc): it
+    # raises, wherever it sits in the mixed batch
+    for bad in ([[1.0, 2.0, 3.0], [5.0]], [[], [1.0, 2.0, 3.0]]):
+        with pytest.raises(Exception, match="dims differ in length"):
+            _extract(_mv_df(spark, docs[:7] + [bad] + docs[7:]), fplan)
 
 
 _TOO_WIDE = {
@@ -187,6 +231,23 @@ def test_word_wider_than_univariate_input_raises(spark, kind):
     fplan = FruitPlan((Slice(iss=_TOO_WIDE[kind], sieves=(Sieve("end"),)),))
     with pytest.raises(Exception, match="word uses dim 2 but input has 1"):
         EX.extract_features(df, fplan).collect()
+
+
+def test_multivariate_flag_must_match_the_column_type(spark):
+    """A 1-step 2-channel doc read without ``multivariate=True`` is not
+    the univariate doc ``[1, 2]``: the flag is checked against the
+    column's type, both ways."""
+    fplan = FruitPlan((Slice(iss=ISSSpec((W("[1]"),)), sieves=(Sieve("end"),)),))
+    with pytest.raises(ValueError,
+                       match=r"multivariate=False.*array<array<double>>"):
+        EX.extract_features(_mv_df(spark, [[[1.0], [2.0]]]), fplan,
+                            tokens_col="dims")
+    uni = spark.createDataFrame(
+        [(0, [1, 2], "s", 2)],
+        "doc_id long, tokens array<int>, source string, n_tok int",
+    )
+    with pytest.raises(ValueError, match=r"multivariate=True.*array<int>"):
+        EX.extract_features(uni, fplan, multivariate=True)
 
 
 def test_word_wider_than_input_raises_at_every_chain_level(spark):

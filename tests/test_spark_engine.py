@@ -302,6 +302,9 @@ def test_extract_features_plan_is_shuffle_free(spark, token_df):
     feats = EX.extract_features(token_df, PLAN)
     plan_str = feats._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_str  # map-only: no shuffle before rollup
+    # one Arrow-native Python stage: no pandas conversion in the body
+    assert plan_str.count("MapInArrow") == 1, plan_str
+    assert "MapInPandas" not in plan_str
 
 
 def test_codec_chunked_blocks_reassemble(spark, token_df):

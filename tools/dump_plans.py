@@ -47,8 +47,9 @@ def main() -> None:
     feats = extract_features(toks, fplan)
     sections.append((
         "Feature extraction (the scan)",
-        "ONE mapInPandas over the source scan — NO Exchange anywhere: "
-        "per-sequence math never shuffles token data.",
+        "ONE mapInArrow over the source scan (Arrow list buffers in, one "
+        "RecordBatch per sub-batch out, no pandas frame) — NO Exchange "
+        "anywhere: per-sequence math never shuffles token data.",
         feats,
     ))
 
@@ -61,7 +62,7 @@ def main() -> None:
             f"Multivariate extract ({name})",
             "The 2-channel array<array<double>> input is built in the "
             "project over the scan and runs through the same one flat "
-            "mapInPandas body as univariate input (the mv prefix-CSE "
+            "mapInArrow body as univariate input (the mv prefix-CSE "
             "trie); NO Exchange anywhere (asserted when this file is "
             "generated).",
             mv,
