@@ -23,10 +23,21 @@ Scale design notes (100 TB / 10^12 sequences):
   * gap-fill builds the full (source x bucket) spine with ``sequence()``
     + ``explode`` (a few thousand rows — broadcastable) and left-joins
     facts onto it.
+
+Reads are ROUTED through ONE cell cover, :func:`_route_cells`: a range
+of fine buckets is split coarsest-first into whole cells of each tier
+(aligned interior) and finer cells (unaligned edges), one
+bucket-range-filtered scan per tier, and every range read —
+:func:`route_range_multi`, its two-level case :func:`route_range`, and
+the fresh :func:`route_range_realtime` (routed cells plus
+:func:`realtime_tier`'s live tail) — is that cover plus ONE algebraic
+aggregate.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
@@ -197,96 +208,40 @@ def _cell_payload(cells: DataFrame, feature_cols: list[str]) -> DataFrame:
     return cells.select(*cols)
 
 
-def route_range(
-    fine_cells: DataFrame,
-    coarse_cells: DataFrame,
-    factor: int,
-    lo: int,
-    hi: int,
-    feature_cols: list[str],
-) -> DataFrame:
-    """Answer per-source totals over the fine-bucket range ``[lo, hi)``
-    from the FEWEST cells (continuous-aggregate query routing, the read
-    side of the tier hierarchy): whole coarse cells for the aligned
-    interior, fine cells only for the two unaligned edges.
-
-    ``coarse_cells`` must be the ``reagg_tier`` of ``fine_cells`` with
-    ``bucket_expr = floor(bucket / factor)`` — coarse bucket ``b``
-    covers fine buckets ``[b*factor, (b+1)*factor)``.  The routed
-    answer is EXACT (all aggregates are the algebraic
-    :func:`reagg_exprs`), and reads ``O(range/factor) + 2*factor``
-    cells instead of ``O(range)``: over a 10^12-sequence table a range
-    spanning 10^7 fine buckets touches ~10^5 t100k cells plus at most
-    2*factor fine edge cells, with partition pruning on ``bucket``
-    doing the skipping when tiers are range-partitioned on it.  A
-    range that starts and ends inside one coarse cell degenerates to
-    the pure fine-cell path."""
-    if factor <= 0:
-        raise ValueError(f"factor must be positive, got {factor}")
-    if not 0 <= lo < hi:
-        raise ValueError(f"need 0 <= lo < hi, got [{lo}, {hi})")
-    ilo = -(-lo // factor)  # first fully-covered coarse bucket
-    ihi = hi // factor      # one past the last fully-covered coarse bucket
-    if ilo < ihi:
-        interior = coarse_cells.where(
-            (F.col("bucket") >= ilo) & (F.col("bucket") < ihi)
-        )
-        edges = fine_cells.where(
-            ((F.col("bucket") >= lo) & (F.col("bucket") < ilo * factor))
-            | ((F.col("bucket") >= ihi * factor) & (F.col("bucket") < hi))
-        )
-        cells = _cell_payload(interior, feature_cols).unionByName(
-            _cell_payload(edges, feature_cols)
-        )
-    else:
-        cells = _cell_payload(
-            fine_cells.where(
-                (F.col("bucket") >= lo) & (F.col("bucket") < hi)
-            ),
-            feature_cols,
-        )
-    return _sql_agg(cells, ["source"], reagg_exprs(feature_cols))
-
-
-def _route_parts(
+def _route_cells(
     levels: list[tuple[DataFrame, int]], lo: int, hi: int,
     feature_cols: list[str],
-) -> list[DataFrame]:
-    """Greedy coarsest-first split of ``[lo, hi)`` (in finest-bucket
-    units) into whole-cell slices: the coarsest level contributes its
-    aligned interior, the unaligned edges recurse into the next finer
-    level.  Each level contributes at most ``2 * (its bucket span /
-    next finer span)`` edge cells, so total cells read is
-    ``O(range/coarsest_factor + sum of factor ratios)``."""
-    cells, f = levels[-1]
-    ilo = -(-lo // f)
-    ihi = hi // f
-    if len(levels) == 1:
-        # the recursion bottoms out at the factor-1 level (enforced by
-        # route_range_multi), where every range is exactly representable
-        return [
-            _cell_payload(
-                cells.where((F.col("bucket") >= lo) & (F.col("bucket") < hi)),
+) -> DataFrame:
+    """The ONE cell cover of the finest-bucket range ``[lo, hi)`` through
+    a tier hierarchy (``levels`` finest-first, factors in finest-bucket
+    units, the finest factor 1): coarsest first, each level takes the
+    aligned interior of every range handed to it and hands the two
+    unaligned edges one level finer; the factor-1 level takes every
+    range it is handed (an empty edge included), so the cover is exact.
+
+    Returns the union of one bucket-range-filtered :func:`_cell_payload`
+    scan per level that takes a range (its ranges OR-ed into one
+    filter), coarsest first.  Each level adds at most ``2 * (its factor
+    / the next finer factor)`` edge cells per source, so a range reads
+    ``O(range / coarsest factor + sum of factor ratios)`` cells."""
+    bucket = F.col("bucket")
+    spans, scans = [(lo, hi)], []
+    for cells, f in reversed(levels):
+        taken, finer = [], []
+        for a, z in spans:
+            ilo, ihi = -(-a // f), z // f  # whole cells inside [a, z)
+            if ilo < ihi or f == 1:
+                taken.append((bucket >= ilo) & (bucket < ihi))
+                finer += [(a, ilo * f), (ihi * f, z)]
+            else:
+                finer.append((a, z))
+        if taken:
+            scans.append(_cell_payload(
+                cells.where(functools.reduce(operator.or_, taken)),
                 feature_cols,
-            )
-        ]
-    out = []
-    if ilo < ihi:
-        out.append(
-            _cell_payload(
-                cells.where(
-                    (F.col("bucket") >= ilo) & (F.col("bucket") < ihi)
-                ),
-                feature_cols,
-            )
-        )
-        if lo < ilo * f:
-            out.extend(_route_parts(levels[:-1], lo, ilo * f, feature_cols))
-        if ihi * f < hi:
-            out.extend(_route_parts(levels[:-1], ihi * f, hi, feature_cols))
-    else:
-        out.extend(_route_parts(levels[:-1], lo, hi, feature_cols))
-    return out
+            ))
+        spans = finer
+    return functools.reduce(DataFrame.unionByName, scans)
 
 
 def route_range_multi(
@@ -295,15 +250,19 @@ def route_range_multi(
     hi: int,
     feature_cols: list[str],
 ) -> DataFrame:
-    """N-level generalization of :func:`route_range`: answer per-source
-    totals over finest-bucket range ``[lo, hi)`` through a whole tier
-    hierarchy (e.g. ``[(t1k_cells, 1), (t100k_cells, 100),
-    (t10m_cells, 10_000)]`` — factors in finest-bucket units, finest
-    first with factor 1, each a multiple of the previous).  The
-    coarsest tier serves the aligned interior; every unaligned edge
-    cascades one level finer, so a range spanning 10^7 fine buckets
-    reads ~10^3 coarsest cells plus a few hundred edge cells instead
-    of 10^7 — and the raw table never appears in the plan."""
+    """Answer per-source totals over the finest-bucket range ``[lo, hi)``
+    from the FEWEST cells of a tier hierarchy (continuous-aggregate
+    query routing, the read side of the tiers): ``levels`` is e.g.
+    ``[(t1k_cells, 1), (t100k_cells, 100), (t10m_cells, 10_000)]`` —
+    factors in finest-bucket units, finest first with factor 1, each a
+    multiple of the previous, and each level the ``reagg_tier`` of the
+    one before with ``bucket_expr = floor(bucket / ratio)``.  The cover
+    is :func:`_route_cells` and the answer one aggregate over it, EXACT
+    because every payload column is algebraic (:func:`reagg_exprs`): a
+    range spanning 10^7 fine buckets reads ~10^3 coarsest cells plus a
+    few hundred edge cells instead of 10^7, partition pruning on
+    ``bucket`` does the skipping when tiers are range-partitioned on
+    it, and the raw table never appears in the plan."""
     if not levels or levels[0][1] != 1:
         raise ValueError("levels must be finest-first with factor 1")
     for (_, a), (_, b) in zip(levels, levels[1:]):
@@ -313,11 +272,27 @@ def route_range_multi(
             )
     if not 0 <= lo < hi:
         raise ValueError(f"need 0 <= lo < hi, got [{lo}, {hi})")
-    parts = _route_parts(levels, lo, hi, feature_cols)
-    cells = parts[0]
-    for p in parts[1:]:
-        cells = cells.unionByName(p)
+    cells = _route_cells(levels, lo, hi, feature_cols)
     return _sql_agg(cells, ["source"], reagg_exprs(feature_cols))
+
+
+def route_range(
+    fine_cells: DataFrame,
+    coarse_cells: DataFrame,
+    factor: int,
+    lo: int,
+    hi: int,
+    feature_cols: list[str],
+) -> DataFrame:
+    """The two-level case of :func:`route_range_multi`: whole coarse
+    cells for the aligned interior of ``[lo, hi)``, fine cells for the
+    two unaligned edges (a range inside one coarse cell reads fine
+    cells only).  ``coarse_cells`` must be the ``reagg_tier`` of
+    ``fine_cells`` with ``bucket_expr = floor(bucket / factor)``, and
+    ``factor`` must be above 1."""
+    return route_range_multi(
+        [(fine_cells, 1), (coarse_cells, factor)], lo, hi, feature_cols
+    )
 
 
 def source_watermarks(cells: DataFrame) -> DataFrame:
@@ -335,6 +310,31 @@ def source_watermarks(cells: DataFrame) -> DataFrame:
         cells.where(F.col("n_docs") > 0)
         .groupBy("source")
         .agg(F.max("bucket").alias("hwm"))
+    )
+
+
+def _fresh_cells(
+    materialized: DataFrame,
+    features: DataFrame,
+    tier: Tier,
+    n_buckets: int,
+    feature_cols: list[str],
+    bucket_expr=None,
+) -> DataFrame:
+    """The unmaterialized tail of :func:`realtime_tier`: ``features``
+    past each source's watermark (:func:`source_watermarks` over
+    ``materialized``; a source with none contributes entirely), rolled
+    up into tier cells on the fly."""
+    b = bucket_expr if bucket_expr is not None else bucket_col(n_buckets)
+    hwm = source_watermarks(materialized)
+    tail = (
+        features.withColumn("bucket", b)
+        .join(F.broadcast(hwm), "source", "left")
+        .where(F.col("hwm").isNull() | (F.col("bucket") > F.col("hwm")))
+        .drop("hwm")
+    )
+    return rollup_tier(
+        tail, tier, n_buckets, feature_cols, bucket_expr=F.col("bucket")
     )
 
 
@@ -362,18 +362,10 @@ def realtime_tier(
     not broadcast at 10^9 cells), and with tiers range-partitioned on
     ``bucket`` the ``bucket > hwm`` predicate prunes the raw scan to
     the tail partitions."""
-    b = bucket_expr if bucket_expr is not None else bucket_col(n_buckets)
-    hwm = source_watermarks(materialized)
-    tail = (
-        features.withColumn("bucket", b)
-        .join(F.broadcast(hwm), "source", "left")
-        .where(F.col("hwm").isNull() | (F.col("bucket") > F.col("hwm")))
-        .drop("hwm")
+    return materialized.unionByName(
+        _fresh_cells(materialized, features, tier, n_buckets, feature_cols,
+                     bucket_expr)
     )
-    fresh = rollup_tier(
-        tail, tier, n_buckets, feature_cols, bucket_expr=F.col("bucket")
-    )
-    return materialized.unionByName(fresh)
 
 
 def route_range_realtime(
@@ -391,60 +383,42 @@ def route_range_realtime(
     """FRESH range query: :func:`route_range` is only sound where the
     coarse tier fully covers the interior — cells past the rollup
     watermark don't have coarse counterparts yet, and routing through
-    them would silently drop the uncommitted region.  This composition
-    answers ``[lo, hi)`` exactly against live data:
+    them would silently drop the uncommitted region.  This answers
+    ``[lo, hi)`` exactly against live data with ONE aggregate over
 
-    * routed (coarse interior + fine edges) up to ``Wa`` — the
-      watermark-aligned boundary, where ``Wa = min over sources of the
-      max committed bucket + 1`` (every source is complete below it);
-    * committed fine cells in ``[Wa, hi)`` (sources ahead of the
-      global minimum);
-    * the unmaterialized tail past each source's own watermark, rolled
-      up on the fly from ``features`` (as in :func:`realtime_tier`)
-      and filtered to ``[lo, hi)``.
+    * the :func:`_route_cells` cover of ``[lo, min(hi, Wa))`` —
+      ``Wa`` is the watermark-aligned boundary, ``min over sources of
+      the max committed bucket + 1`` (every committed source is
+      complete below it);
+    * committed fine cells in ``[max(lo, Wa), hi)`` (sources ahead of
+      the global minimum);
+    * :func:`realtime_tier`'s fresh tail, filtered to ``[lo, hi)``.
+      A tail bucket is past its own source's watermark, so it is
+      ``>= Wa`` — except for a source with no committed data, whose
+      tail starts at bucket 0.
 
     The three parts partition the range's documents exactly, so the
     algebraic merge is exact.  One tiny driver-side collect fetches the
     global watermark (an aggregate over cell metadata, never data)."""
     if not 0 <= lo < hi:
         raise ValueError(f"need 0 <= lo < hi, got [{lo}, {hi})")
-    hwm = source_watermarks(fine)
-    row = hwm.agg(F.min("hwm").alias("w")).collect()[0]
+    row = source_watermarks(fine).agg(F.min("hwm").alias("w")).collect()[0]
     wa = (int(row.w) + 1) if row.w is not None else 0
-    parts = []
-    if lo < min(hi, wa):
-        parts.append(
-            route_range(fine, coarse, factor, lo, min(hi, wa), feature_cols)
-        )
+    bucket = F.col("bucket")
+    cells = _cell_payload(
+        _fresh_cells(fine, features, tier, n_buckets, feature_cols,
+                     bucket_expr).where((bucket >= lo) & (bucket < hi)),
+        feature_cols,
+    )
     if wa < hi:
-        ahead = _cell_payload(
-            fine.where(
-                (F.col("bucket") >= max(lo, wa)) & (F.col("bucket") < hi)
-            ),
-            feature_cols,
-        )
-        parts.append(_sql_agg(ahead, ["source"], reagg_exprs(feature_cols)))
-    b = bucket_expr if bucket_expr is not None else bucket_col(n_buckets)
-    tail_src = (
-        features.withColumn("bucket", b)
-        .join(F.broadcast(hwm), "source", "left")
-        .where(F.col("hwm").isNull() | (F.col("bucket") > F.col("hwm")))
-        .where((F.col("bucket") >= lo) & (F.col("bucket") < hi))
-        .drop("hwm")
-    )
-    fresh = rollup_tier(
-        tail_src, tier, n_buckets, feature_cols, bucket_expr=F.col("bucket")
-    )
-    parts.append(
-        _sql_agg(
-            _cell_payload(fresh, feature_cols),
-            ["source"], reagg_exprs(feature_cols),
-        )
-    )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    return _sql_agg(merged, ["source"], reagg_exprs(feature_cols))
+        cells = _route_cells(
+            [(fine, 1)], max(lo, wa), hi, feature_cols
+        ).unionByName(cells)
+    if lo < min(hi, wa):
+        cells = _route_cells(
+            [(fine, 1), (coarse, factor)], lo, min(hi, wa), feature_cols
+        ).unionByName(cells)
+    return _sql_agg(cells, ["source"], reagg_exprs(feature_cols))
 
 
 def route_query_cells(

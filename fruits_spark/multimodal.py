@@ -77,30 +77,6 @@ def synth_frame_blobs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return docs.select(id_col).mapInPandas(enc, schema)
 
 
-def _decode_frames_slow(pdf, id_col, np, pd):
-    """Per-blob FRB1 decode — the degenerate-shape fallback (zero-area
-    frames) of the batched path in :func:`decode_frames`."""
-    rows = {
-        id_col: pdf[id_col].astype("int64"),
-        "n_frames": [], "width": [], "height": [],
-        "n_bytes": [], "frame_sums": [],
-    }
-    for b in pdf["blob"]:
-        arr = np.frombuffer(bytes(b), dtype=np.uint8)
-        if len(arr) < 4 or arr[0] != FRB1_MAGIC:
-            raise ValueError("not an FRB1 blob")
-        nf, w, h = int(arr[1]), int(arr[2]), int(arr[3])
-        if nf < 1 or len(arr) != 4 + nf * w * h:
-            raise ValueError("FRB1 payload length mismatch")
-        frames = arr[4:].astype(np.int64).reshape(nf, w * h)
-        rows["n_frames"].append(nf)
-        rows["width"].append(w)
-        rows["height"].append(h)
-        rows["n_bytes"].append(len(arr))
-        rows["frame_sums"].append(frames.sum(axis=1).astype(np.int32))
-    return pd.DataFrame(rows)
-
-
 def decode_frames(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Parse FRB1 blobs: header -> typed metadata, payload -> per-frame
     pixel sums (the 'feature extract' step of a media pipeline).  Emits
@@ -121,11 +97,10 @@ def decode_frames(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             n = len(pdf)
             if n == 0:
                 continue
-            # batched decode (round-3): ONE np.frombuffer over the
-            # concatenated blobs + a single add.reduceat for every
-            # frame sum in the batch, instead of a per-blob Python
-            # loop — the per-row interpreter overhead dominated media
-            # throughput for small frames
+            # batched decode: ONE np.frombuffer over the concatenated
+            # blobs and ONE int64 prefix sum; every frame sum is a
+            # difference of two prefix entries — exact, and a zero-area
+            # frame reads 0 — instead of a per-blob Python loop
             bufs = [bytes(b) for b in pdf["blob"]]
             lens = np.fromiter(
                 (len(b) for b in bufs), dtype=np.int64, count=n
@@ -141,34 +116,13 @@ def decode_frames(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             h = arr[starts + 3].astype(np.int64)
             if (nf < 1).any() or (lens != 4 + nf * w * h).any():
                 raise ValueError("FRB1 payload length mismatch")
-            total_frames = int(nf.sum())
-            fsize = w * h
-            if (fsize < 1).any():
-                # zero-area frames make a frame start collide with the
-                # next blob's header (reduceat would sum foreign bytes)
-                # — take the simple per-blob path for this batch; the
-                # sums of empty frames are zero, matching the pre-batch
-                # decode
-                yield _decode_frames_slow(pdf, id_col, np, pd)
-                continue
             cum_nf = np.cumsum(nf)
-            within = np.arange(total_frames) - np.repeat(cum_nf - nf, nf)
-            fstarts = (
-                np.repeat(starts + 4, nf) + within * np.repeat(fsize, nf)
-            )
-            # reduceat boundaries: per doc [header_start, frame starts...]
-            # — the 4-byte header segment separates doc payloads and is
-            # discarded afterwards
-            bounds = np.empty(n + total_frames, dtype=np.int64)
-            is_frame = np.ones(n + total_frames, dtype=bool)
-            hpos = np.arange(n) + np.concatenate(([0], cum_nf[:-1]))
-            is_frame[hpos] = False
-            bounds[hpos] = starts
-            bounds[is_frame] = fstarts
-            sums = np.add.reduceat(arr.astype(np.int64), bounds)
-            frame_sums = np.split(
-                sums[is_frame].astype(np.int32), cum_nf[:-1]
-            )
+            fsize = np.repeat(w * h, nf)
+            within = np.arange(cum_nf[-1]) - np.repeat(cum_nf - nf, nf)
+            fstarts = np.repeat(starts + 4, nf) + within * fsize
+            prefix = np.concatenate(([0], np.cumsum(arr, dtype=np.int64)))
+            sums = prefix[fstarts + fsize] - prefix[fstarts]
+            frame_sums = np.split(sums.astype(np.int32), cum_nf[:-1])
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].astype("int64"),

@@ -4,8 +4,10 @@ Every plan here runs twice on the same random variable-length batch:
 once through :func:`compute_features_flat` on per-dim flat columns, once
 per row through :func:`compute_features_block` (the reference-parity
 bucketed path).  Monomials/linear combos are written in the bucketed op
-order, so the only permitted difference is the segmented-cumsum carry
-rounding (rtol 1e-9, like the univariate flat tests).
+order, so the only permitted difference is the summation-order rounding
+of ``Seg.sum`` (a doc's float sum is its last prefix sum, in time order;
+the bucketed path sums pairwise) — rtol 1e-9, like the univariate flat
+tests.
 
 Reference shapes: the reals spec mirrors `fruit_reduced.py` iss_r
 (`/root/reference/experiments/fruit_reduced.py:3-8`), the arctic spec
@@ -60,9 +62,10 @@ def _check(fplan, d=2, rtol=1e-9, **kw):
 # Counting sieves use NONZERO thresholds here: with an STD prep, the
 # extended-mode prefix stream cumsum ends at EXACTLY zero per segment
 # (mean-zero input), so a count at threshold 0.0 compares the sign of
-# ~1e-16 rounding noise between the flat carry-subtract cumsum and the
-# bucketed per-row cumsum — ill-conditioned by construction, in either
-# direction (the streams themselves match to <3e-15 abs).
+# ~1e-16 rounding noise that the flat STD prep's time-order ``Seg.sum``
+# leaves against the bucketed pairwise sum — ill-conditioned by
+# construction, in either direction (the streams themselves match to
+# <3e-15 abs).
 SIEVES = (
     Sieve("end", {"cuts": [-1, 0.5]}),
     Sieve("npi", {"q_values": [0.17, np.inf], "inc": 1}),
@@ -213,7 +216,7 @@ def test_mv_argmax_flat_matches_bucketed():
     """Round 5 (late): mv arctic-argmax runs flat too — the linear
     combo is the kernel's only dimension-aware op.  Freeze-at-argmax
     index streams must match the bucketed kernel exactly (indices are
-    integers; values to carry rounding)."""
+    integers; values to the summation-order rounding of ``Seg.sum``)."""
     fplan = FruitPlan((
         Slice(iss=ISSSpec((W("[1][2]"), W("[12][1]")), semiring="arctic",
                           argmax=True),
@@ -232,10 +235,11 @@ def test_mv_argmax_flat_matches_bucketed():
 
 def test_mv_flat_chunking_matches_unchunked(spark, monkeypatch):
     """A tiny token budget forces extract_features to sub-batch; on an
-    integer domain the carry-subtract cumsum is exact, so features must
-    be BIT-identical across chunk boundaries — also behind a MAV prep
-    (run per length group by the generic prep adapter), fed multiples
-    of its width so the window means stay integers."""
+    integer domain every float sum (``Seg.sum`` in any order) is exact,
+    so features must be BIT-identical across chunk boundaries — also
+    behind a MAV prep (run per length group by the generic prep
+    adapter), fed multiples of its width so the window means stay
+    integers."""
     import fruits_spark.engine.executor as EX
 
     RNG = np.random.default_rng(31)

@@ -327,8 +327,9 @@ def test_random_plans_flat_equals_bucketed():
     """Fuzz whole FruitPlans across the flat-supported space (preps x
     words x semirings x weightings x sieves) and assert the flat
     segmented path matches the bucketed 3-D reference-parity path on
-    random integer series (rtol covers the documented <=1e-13 carry
-    drift of the global-cumsum trick)."""
+    random integer series (rtol covers the summation-order rounding of
+    ``Seg.sum``: the flat path sums a doc in time order, the bucketed
+    path pairwise)."""
     import itertools
     import pandas as pd
     from fruits_spark.engine.executor import (

@@ -771,6 +771,10 @@ def test_route_range_rejects_bad_range(spark, _tier_fixture):
         RU.route_range(fine, coarse, 8, 9, 9, fc)
     with pytest.raises(ValueError):
         RU.route_range(fine, coarse, 0, 0, 8, fc)
+    # route_range is the two-level route_range_multi: a coarse tier of
+    # factor 1 is no coarser than the fine one
+    with pytest.raises(ValueError, match="increasing multiples"):
+        RU.route_range(fine, coarse, 1, 0, 8, fc)
 
 
 def test_realtime_tier_matches_full_rollup(spark, _tier_fixture):
@@ -856,10 +860,9 @@ def test_route_parts_cell_bound(spark, _three_level):
     fine, mid, coarse, fc = _three_level
     n_src = fine.select("source").distinct().count()
     for lo, hi in [(3, 61), (5, 15), (1, 63)]:
-        parts = RU._route_parts(
+        total = RU._route_cells(
             [(fine, 1), (mid, 4), (coarse, 16)], lo, hi, fc
-        )
-        total = sum(p.count() for p in parts)
+        ).count()
         interior = (hi - lo) // 16
         # per source: interior coarse cells + <=2*4 mid edges + <=2*4
         # fine edges (factor ratios 16/4 and 4/1)
@@ -969,7 +972,11 @@ def test_route_range_multi_random_ranges(spark, _three_level):
 def test_route_range_realtime_matches_direct(spark, _tier_fixture, lo, hi):
     """Fresh range query: routed-below-watermark + committed-ahead fine
     cells + on-the-fly tail == direct aggregation over ALL data, with
-    per-source watermarks at different heights (5 and 9)."""
+    per-source watermarks at different heights (5 and 9) and one source
+    with no committed cells (its tail starts at bucket 0, below the
+    global watermark) — answered by ONE aggregate over the cells."""
+    import re
+
     import fruits_spark.engine.rollup as RU
 
     feats, _, _, fc = _tier_fixture
@@ -981,16 +988,21 @@ def test_route_range_realtime_matches_direct(spark, _tier_fixture, lo, hi):
     cutoff = F.when(
         F.pmod(F.xxhash64("source"), F.lit(2)) == 0, F.lit(9)
     ).otherwise(F.lit(5))
-    materialized = full.where(F.col("bucket") <= cutoff).cache()
+    first_src = full.select(F.min("source").alias("s")).collect()[0].s
+    materialized = full.where(
+        (F.col("bucket") <= cutoff) & (F.col("source") != first_src)
+    ).cache()
     coarse = RU.reagg_tier(
         materialized, fc, bucket_expr=F.floor(F.col("bucket") / 4).cast("int")
     )
-    got = (
-        RU.route_range_realtime(
-            materialized, coarse, 4, lo, hi, fc,
-            feats, tier, 16, bucket_expr=pos_bucket,
-        ).toPandas().sort_values("source").reset_index(drop=True)
+    routed = RU.route_range_realtime(
+        materialized, coarse, 4, lo, hi, fc,
+        feats, tier, 16, bucket_expr=pos_bucket,
     )
+    plan = routed._jdf.queryExecution().optimizedPlan().toString()
+    by_source = re.findall(r"Aggregate \[source#\d+\], .*", plan)
+    assert sum("AS hwm#" not in a for a in by_source) == 1, plan
+    got = routed.toPandas().sort_values("source").reset_index(drop=True)
     want = (
         RU._sql_agg(
             RU._cell_payload(

@@ -80,10 +80,9 @@ def main() -> None:
                 ["source"], RU.reagg_exprs(fc),
             )
 
-        parts = RU._route_parts(
+        cells_routed = RU._route_cells(
             [(fine, 1), (coarse, args.factor)], lo, hi, fc
-        )
-        cells_routed = sum(p.count() for p in parts)
+        ).count()
         cells_direct = fine.where(
             (F.col("bucket") >= lo) & (F.col("bucket") < hi)
         ).count()
